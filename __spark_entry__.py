@@ -825,13 +825,10 @@ def q_sim_cosine_topk(spark, sf_dir):
     from timbala_spark.pipeline import cosine_topk
 
     emb = _tbl(spark, sf_dir, "embeddings")
-    # dim=64: route the per-pair dot / per-row norms through the r11
-    # codegen kernels (guarded — bit-identical at every width)
     out = cosine_topk(
         emb.filter(F.col("vec_id") >= 5),
         emb.filter(F.col("vec_id") < 5),
         k=5,
-        dim=64,
     )
     return out.select(
         "query_id",

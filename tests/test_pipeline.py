@@ -76,35 +76,51 @@ class TestTextOps:
                 map(tuple, got.select("doc_id", *out_cols).collect())
             ) == sorted(map(tuple, ref.select("doc_id", *out_cols).collect()))
 
-    def test_fingerprint_small_and_scale_arms_identical(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """r12 (ADVICE r11): with_fingerprint gains a small-corpus arm
-        (per-position array_min over the staged hash column) mirroring
-        sliding_join_expr's; both arms must be bit-identical on corpus
-        docs plus short/empty/NULL edges (plan shape only, never
-        values)."""
+    def test_fingerprint_matches_python_reference(self, spark, tmp_path):
+        """with_fingerprint (per-position window minima over the staged
+        hash column) must equal a pure-Python winnowing reference,
+        bit-for-bit, on a 30-row parquet corpus with short/empty/NULL
+        edges.  md5 (``hash64_expr``'s DuckDB-replayable variant) is
+        the hash both sides can compute."""
+        import hashlib
         import random
 
         from timbala_spark.pipeline import with_fingerprint
 
+        def h64(s: str) -> int:
+            v = int(hashlib.md5(s.encode()).hexdigest()[:16], 16)
+            return v - (1 << 64) if v >= 1 << 63 else v
+
+        def reference(text, k, window):
+            if text is None or len(text) < k:
+                return None
+            hs = [h64(text[i : i + k]) for i in range(len(text) - k + 1)]
+            mins = {
+                min(hs[i : i + window])
+                for i in range(max(len(hs) - window + 1, 1))
+            }
+            return h64(",".join(str(m) for m in sorted(mins)))
+
         rng = random.Random(7)
         rows = [
             (i, " ".join(f"w{rng.randrange(50)}" for _ in range(rng.randrange(40))))
-            for i in range(60)
+            for i in range(26)
         ] + [(100, None), (101, ""), (102, "abc"), (103, "abcdefgh")]
-        p = str(tmp_path / "fp_arms")
+        p = str(tmp_path / "fp_ref")
         spark.createDataFrame(
             rows, "doc_id long, text string"
         ).write.parquet(p)
         df = spark.read.parquet(p)
 
-        monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", str(1 << 60))
-        small = with_fingerprint(df).select("doc_id", "fingerprint").collect()
-        monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
-        big = with_fingerprint(df).select("doc_id", "fingerprint").collect()
-        assert sorted(map(tuple, small)) == sorted(map(tuple, big))
-        assert len({r["fingerprint"] for r in small if r["fingerprint"]}) > 1
+        for k, window in ((8, 4), (3, 2), (5, 7)):
+            got = dict(
+                with_fingerprint(df, k=k, window=window, hash_algo="md5")
+                .select("doc_id", "fingerprint")
+                .collect()
+            )
+            want = {i: reference(t, k, window) for i, t in rows}
+            assert got == want, (k, window)
+            assert len({v for v in want.values() if v is not None}) > 1
 
     def test_quality_langid_match_unbound_reference(self, spark, documents):
         """r11: with_quality_features / with_language_id let-bind the
@@ -201,8 +217,8 @@ class TestTextOps:
         assert fps[0][0] == fps[1][0]
 
     def test_fingerprint_matches_per_position_reference(self, spark):
-        """The r11 LEAST-chain window minima (O(len·window) per row)
-        must reproduce the original per-position
+        """The staged-column window minima (O(len·window) per row)
+        must reproduce the original unstaged per-position
         array_min(slice(hashes, i+1, window)) form (O(len²) under the
         HOF interpreter) bit-for-bit — incl. texts shorter than the
         window, shorter than k, empty, and multi-k edge shapes."""
@@ -426,38 +442,6 @@ class TestDedup:
         assert {(0, 1000), (1, 1001), (2, 1002)} <= got
         assert all(abs(r["jaccard"] - 1.0) < 1e-12 for r in pairs if r["id_b"] >= 1000 and r["id_a"] == r["id_b"] - 1000)
 
-    def test_ngram_jaccard_auto_shingle_mode(
-        self, spark, documents, monkeypatch
-    ):
-        """persist_shingles=None auto-selects from the estimated array
-        bytes (PERF §20c): a tiny budget forces recompute mode, a huge
-        one forces persist, and the pair results are identical either
-        way."""
-        from timbala_spark.pipeline.dedup import (
-            _resolve_persist_shingles,
-            ngram_jaccard_pairs,
-        )
-
-        dup = documents.limit(20).union(
-            documents.limit(3).withColumn("doc_id", F.col("doc_id") + 1000)
-        )
-        monkeypatch.setenv("TIMBALA_SHINGLE_PERSIST_BUDGET_BYTES", "1")
-        assert _resolve_persist_shingles(dup, "text", 5) is False
-        lo = sorted(
-            map(tuple, ngram_jaccard_pairs(dup, threshold=0.99).collect())
-        )
-        monkeypatch.setenv(
-            "TIMBALA_SHINGLE_PERSIST_BUDGET_BYTES", str(1 << 40)
-        )
-        assert _resolve_persist_shingles(dup, "text", 5) is True
-        hi = sorted(
-            map(tuple, ngram_jaccard_pairs(dup, threshold=0.99).collect())
-        )
-        assert lo == hi
-        assert {(0, 1000), (1, 1001), (2, 1002)} <= {
-            (a, b) for a, b, _ in lo
-        }
-
     def test_minhash_lsh_finds_exact_dups(self, spark, documents):
         from timbala_spark.pipeline import minhash_lsh_pairs
 
@@ -547,11 +531,11 @@ class TestDedup:
             documents.limit(6).withColumn("doc_id", F.col("doc_id") + 1000)
         ).write.parquet(p)
         docs = spark.read.parquet(p)
-        monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", str(1 << 40))
+        monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", str(1 << 40))
         small_arm = sorted(
             map(tuple, minhash_lsh_pairs(docs, threshold=0.5).collect())
         )
-        monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", "0")
+        monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
         big_arm = sorted(
             map(tuple, minhash_lsh_pairs(docs, threshold=0.5).collect())
         )
@@ -598,6 +582,34 @@ class TestDedup:
         )
         assert fast == joined == ref and len(fast) == 30
 
+    def test_simhash_fast_path_matches_join_path_on_ten_docs(
+        self, spark, documents
+    ):
+        """Default-tier sibling of the 30-row slow test: the
+        assume_tokenized fast path, the join path and the fold
+        reference agree on 10 documents."""
+        from timbala_spark.pipeline.dedup import (
+            _simhash_votes_by_id,
+            simhash_expr,
+            tokens_expr,
+        )
+
+        docs = documents.limit(10).filter(
+            F.size(tokens_expr(F.col("text"))) > 0
+        )
+
+        def rows(df):
+            return sorted(map(tuple, df.collect()))
+
+        fast = rows(
+            _simhash_votes_by_id(
+                docs, "doc_id", "text", "xxhash64", assume_tokenized=True
+            )
+        )
+        joined = rows(_simhash_votes_by_id(docs, "doc_id", "text", "xxhash64"))
+        ref = rows(docs.select("doc_id", simhash_expr(F.col("text"), "xxhash64")))
+        assert fast == joined == ref and len(fast) == 10
+
     def test_simhash(self, spark, documents):
         from timbala_spark.pipeline import simhash_pairs, with_simhash
 
@@ -636,36 +648,6 @@ class TestSimilarity:
             want = [-nid for _, nid in sims]
             mine = [r["neighbor_id"] for r in sorted(got, key=lambda r: r["rank"]) if r["query_id"] == qid]
             assert mine == want, (qid, mine, want)
-
-    def test_cosine_topk_kernel_and_fold_arms_identical(
-        self, spark, embeddings, tmp_path, monkeypatch
-    ):
-        """r12 (VERDICT r11 #1): cosine_topk/lsh_cosine_topk's unrolled
-        kernel arm is gated on the shared small-corpus cut; both arms
-        must return identical rows.  Parquet-backed input so the
-        metadata gate can read a size; the generic env knob (r12
-        rename) drives the gate."""
-        from timbala_spark.pipeline import cosine_topk, lsh_cosine_topk
-
-        p = str(tmp_path / "embs")
-        embeddings.limit(40).write.parquet(p)
-        embs = spark.read.parquet(p)
-        q = embs.filter(F.col("vec_id") < 3)
-        c = embs.filter(F.col("vec_id") >= 3)
-
-        def run_both(fn, **kw):
-            monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", str(1 << 40))
-            fold = sorted(map(tuple, fn(c, q, k=4, **kw).collect()))
-            monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
-            kernel = sorted(map(tuple, fn(c, q, k=4, **kw).collect()))
-            return fold, kernel
-
-        fold, kernel = run_both(cosine_topk, dim=64)
-        assert fold == kernel and len(fold) == 12
-        fold, kernel = run_both(
-            lsh_cosine_topk, dim=64, n_planes=2, n_tables=8
-        )
-        assert fold == kernel and fold
 
     def test_lsh_recall(self, spark, embeddings):
         from timbala_spark.pipeline import cosine_topk, lsh_cosine_topk
@@ -1422,16 +1404,16 @@ class TestNgramSmallCorpusGate:
     eager intermediate checkpoint; results must be identical."""
 
     def test_estimated_input_bytes(self, spark, tmp_path):
-        from timbala_spark.pipeline.dedup import _estimated_input_bytes
+        from timbala_spark.pipeline.util import estimated_input_bytes
 
         p = str(tmp_path / "sz")
         spark.range(1000).write.parquet(p)
         df = spark.read.parquet(p)
-        est = _estimated_input_bytes(df)
+        est = estimated_input_bytes(df)
         assert est is not None and 100 < est < 10 << 20
         # in-memory frame: unknown -> None (assume big, fail closed)
         mem = spark.createDataFrame([(1,)], "x long")
-        assert _estimated_input_bytes(mem) is None
+        assert estimated_input_bytes(mem) is None
 
     def test_small_and_big_paths_identical(self, spark, monkeypatch):
         from timbala_spark.pipeline.dedup import ngram_jaccard_pairs
@@ -1452,12 +1434,12 @@ class TestNgramSmallCorpusGate:
                 ).collect()
             )
 
-        monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", "0")
+        monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
         big = run()
         # force the small path even for the in-memory frame (est=None
         # would fail closed): a huge cutoff alone does not flip it, so
         # go through a tiny parquet roundtrip instead
-        monkeypatch.delenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES")
+        monkeypatch.delenv("TIMBALA_SMALL_CORPUS_BYTES")
         import tempfile
 
         with tempfile.TemporaryDirectory() as d:

@@ -124,7 +124,7 @@ def test_pack_greedy_small_corpus_gate_is_value_identical(spark, docs, tmp_path,
     ).write.parquet(p)
     toks = spark.read.parquet(p)
     small = pack_greedy(toks, 100, "n_tokens", "doc_id", n_partitions=7)
-    monkeypatch.setenv("TIMBALA_NGRAM_SMALL_CORPUS_BYTES", "0")
+    monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
     big = pack_greedy(toks, 100, "n_tokens", "doc_id", n_partitions=7)
     cols = ["doc_id", "shard_id", "token_offset"]
     assert sorted(map(tuple, small.select(*cols).collect())) == sorted(
@@ -230,9 +230,7 @@ def test_scrub_pii_fused_counts_match_per_turn_semantics(spark):
 
 
 # -------------------------------------------------------- full composition
-def test_curate_corpus_end_to_end(spark):
-    from timbala_spark.pipeline.curate import curate_corpus
-
+def _curation_rows():
     rows = []
     for i in range(40):
         rows.append((i, "alpha beta gamma delta epsilon zeta eta theta word%d ok" % (i % 7), "en", "s%d" % (i % 2)))
@@ -242,7 +240,13 @@ def test_curate_corpus_end_to_end(spark):
         (102, "reach me a@b.com " + "tok " * 9, "en", "s1"), # PII, survives
         (103, "the quiz question text is exactly this one two three four five six seven eight nine ten eleven twelve thirteen", "en", "s0"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
+    return rows
+
+
+def test_curate_corpus_end_to_end(spark):
+    from timbala_spark.pipeline.curate import curate_corpus
+
+    docs = spark.createDataFrame(_curation_rows(), "doc_id long, text string, lang string, source string")
     bench = spark.createDataFrame(
         [(0, "the quiz question text is exactly this one two three four five six seven eight nine ten eleven twelve thirteen")],
         "qid long, text string",
@@ -268,6 +272,31 @@ def test_curate_corpus_end_to_end(spark):
     for _id, off, nt, shard in got:
         assert off == acc and shard == acc // 64
         acc += nt
+
+
+def test_curate_corpus_checkpoint_arm_is_value_identical(spark, tmp_path, monkeypatch):
+    """curate_corpus checkpoints the components map unless the corpus
+    is under the small-corpus cut.  A parquet-backed corpus lets the
+    metadata gate read a size; env=0 forces the checkpoint arm.  Both
+    arms must return the same rows."""
+    from timbala_spark.pipeline.curate import curate_corpus
+
+    p = str(tmp_path / "corpus")
+    spark.createDataFrame(
+        _curation_rows(), "doc_id long, text string, lang string, source string"
+    ).write.parquet(p)
+    docs = spark.read.parquet(p)
+
+    def run():
+        out = curate_corpus(docs, min_tokens=6, shard_budget=64)
+        return sorted(tuple(sorted(r.asDict().items())) for r in out.collect())
+
+    no_checkpoint = run()
+    monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", "0")
+    checkpoint = run()
+    assert no_checkpoint == checkpoint
+    ids = {dict(r)["doc_id"] for r in checkpoint}
+    assert 100 not in ids and 101 not in ids and 102 in ids
 
 
 def test_pack_greedy_randomized_property(spark):

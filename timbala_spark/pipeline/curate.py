@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import connected_components, ngram_jaccard_pairs
+from .util import release_tracked, small_corpus, tracked_persist
 
 #: Bounded-collect union-find opt-in for the pipeline's components
 #: stage (r11): near-dup pair graphs are a vanishing fraction of the
@@ -34,15 +35,8 @@ from .dedup import connected_components, ngram_jaccard_pairs
 #: 2 jobs instead of the distributed loop's ~7 (identical labels by
 #: construction — see ``connected_components``).  Same bound the
 #: streaming stage already opts in at; above it the 100 TB distributed
-#: loop runs unchanged.  Override via ``TIMBALA_CC_COLLECT_EDGES``
-#: (0 disables).
-CC_COLLECT_EDGES = 200_000
-
-
-def _cc_collect_edges() -> int:
-    import os
-
-    return int(os.environ.get("TIMBALA_CC_COLLECT_EDGES", CC_COLLECT_EDGES))
+#: loop runs unchanged.
+COMPONENTS_COLLECT_EDGES = 200_000
 
 
 def near_dup_pipeline(
@@ -51,15 +45,9 @@ def near_dup_pipeline(
     text_col: str = "text",
     threshold: float = 0.5,
     n: int = 7,
-    persist_shingles: bool | None = None,
 ) -> DataFrame:
     """Returns one row per input row: (``id_col``, canonical_id,
-    is_canonical ∈ {0,1}).
-
-    ``persist_shingles`` is accepted for API compatibility and ignored
-    (r8: ``ngram_jaccard_pairs`` runs a single pinned-text design,
-    PERF §20c take 7)."""
-    del persist_shingles
+    is_canonical ∈ {0,1})."""
     dig = docs.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     ).withColumn("_digest", F.sha2(F.col("_text"), 256))
@@ -70,8 +58,6 @@ def near_dup_pipeline(
     # digest shuffle over the whole corpus (PERF §20c take 3).
     # Ids+digest are ~50 B/doc. This is the composition's OPENING pin:
     # it releases the previous query's tracked frames.
-    from .util import tracked_persist
-
     ids = tracked_persist(ids, release_previous=True)
     reps = ids.groupBy("_digest").agg(F.min("_id").alias("_rep"))
     # reps feeds FOUR separate consumers (the doc→rep mapping, the
@@ -113,7 +99,7 @@ def near_dup_pipeline(
         # bounded probe reads a materialized frame; small graphs then
         # resolve driver-side in 2 jobs instead of the loop's ~7
         # (identical labels — the streaming stage's r11 fast path)
-        collect_threshold=_cc_collect_edges(),
+        collect_threshold=COMPONENTS_COLLECT_EDGES,
     )
     return (
         mapping.join(comp, mapping["_rep"] == comp[id_col])
@@ -140,8 +126,6 @@ def curate_corpus(
     shard_budget: int | None = None,
     seed: int = 0,
     keep_original_text: bool = False,
-    persist_shingles: bool | None = None,
-    checkpoint_components: bool | None = None,
     scratch_dir: str | None = None,
 ) -> DataFrame:
     """The whole training-data curation flow as ONE lineage — the
@@ -169,13 +153,10 @@ def curate_corpus(
     quality gate so metrics see what training sees; sampling/caps
     before packing so shards are final.  Every stage is an existing
     audited operator; this function only fixes the composition.
-    ``persist_shingles`` is accepted for API compatibility and ignored
-    (r8: the dedup stage runs a single pinned-text design that the
-    per-action audit measured ~5× cheaper than either r7 mode on wall
-    AND scratch at 5M docs, PERF §20c take 7).
 
-    ``checkpoint_components`` (default: auto — on exactly when the
-    one-pass size estimate says the corpus is big)
+    Components checkpoint: unless the corpus is under the shared
+    metadata-only :func:`~.util.small_corpus` cut (unknown size ⇒
+    big, so in-memory frames take the checkpoint), the composition
     truncates the lineage at the near-dup output. The composition is
     otherwise ONE action, so every stage's shuffle files stay
     referenced until the end — the dedup stage's digest joins and
@@ -207,29 +188,19 @@ def curate_corpus(
     from .sample import cap_per_group, pack_greedy, stratified_sample
     from .text import flag_contaminated, scrub_pii, tokens_expr
 
-    del persist_shingles  # r8: accepted for API compat, ignored
     cur = near_dup_pipeline(
         docs,
         id_col=id_col,
         text_col=text_col,
         threshold=dedup_threshold,
     )
-    if checkpoint_components is None:
-        # big-corpus estimate (one map-only pass): checkpoint the
-        # ids-only canonical map so the dedup stages' shuffle files
-        # become reclaimable while the layout stages run
-        from .dedup import _resolve_persist_shingles
-
-        checkpoint_components = not _resolve_persist_shingles(
-            docs, text_col, 7
-        )
-    if checkpoint_components:
+    if not small_corpus(docs):
+        # checkpoint the ids-only canonical map so the dedup stages'
+        # shuffle files become reclaimable while the layout stages run
         cur = cur.localCheckpoint(eager=True)
         # past the checkpoint nothing recomputes the dedup lineage —
         # drop its pins (digest map, reps, text, postings: ~15 GB of
         # cache at 20M docs) before the scrub/layout stages run
-        from .util import release_tracked
-
         release_tracked()
     out = (
         docs.join(cur, id_col)
@@ -292,8 +263,6 @@ def curate_corpus(
         # persists may still back this lineage. (With ``scratch_dir``
         # the lineage is just the parquet scan — the persist then only
         # buys the quantile/subtotal passes a local read.)
-        from .util import tracked_persist
-
         out = tracked_persist(out, release_previous=False)
         out = pack_greedy(out, shard_budget, "n_tokens", id_col)
     return out

@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .text import sliding_join_expr, tokens_expr
 from .util import (
     ensure_parallelism,
-    estimated_input_bytes,
     hash64_expr,
     small_corpus,
     tracked_persist,
@@ -68,7 +67,7 @@ def word_shingles_expr(text: Column, n: int, small: bool = False) -> Column:
     400-token docs, growing with length; invisible at the 54-token
     bench corpus, which is why it survived to r11).  ``small`` picks
     the short-document arm (callers thread the shared metadata-only
-    ``_small_corpus`` gate; plan shape only — values bit-identical,
+    ``small_corpus`` gate; plan shape only — values bit-identical,
     parity-tested).  The legacy NULL-text output (a single-NULL
     array — ``sequence(1, greatest(NULL, 1))`` produced one NULL
     shingle) is reproduced by the explicit guard.
@@ -86,79 +85,6 @@ def word_shingles_expr(text: Column, n: int, small: bool = False) -> Column:
     )
 
 
-#: Estimated shingle-array bytes above which a corpus counts as "big"
-#: (override via TIMBALA_SHINGLE_PERSIST_BUDGET_BYTES).  r7 used this
-#: to switch ``ngram_jaccard_pairs`` into an array-recompute mode; the
-#: r8 per-action shuffle audit (tools/e2e_shuffle_audit.py, PERF §20c
-#: take 7) measured that mode 5× WORSE on both wall and scratch, and
-#: the operator now always runs the single pinned-text design.  The
-#: estimate survives as ``curate_corpus``'s big-corpus switch (the
-#: lineage-checkpoint default).
-SHINGLE_PERSIST_BUDGET_BYTES = 16 << 30
-
-#: On-disk input bytes (leaf-scan files, compressed) below which
-#: ``ngram_jaccard_pairs`` skips its pure-action machinery — the
-#: stop-shingle COUNT job (the fired-cap report), a fixed job cost
-#: that dominated the sub-10k-doc bench corpus (r8 regression:
-#: 1.76 → 2.71 s, VERDICT r8 "what's wrong" #3).  The eager
-#: intermediate candidate checkpoint is NOT gated: it is kept on both
-#: paths because the components loop re-consumes the pair list per
-#: iteration (r9 A/B: the lazy-pin alternative measured ~0.4 s slower
-#: even at the 5k-doc bench corpus).
-#: 64 MB of parquet is ~150-200 MB of raw text
-#: (~100-200k typical documents).  Override via
-#: ``TIMBALA_NGRAM_SMALL_CORPUS_BYTES``; 0 disables the fast path.
-SMALL_CORPUS_INPUT_BYTES = 64 << 20
-
-
-# r12: the gate and its size estimate moved to util (similarity.py
-# needs them too and dedup already imports similarity — the other
-# direction would be circular).  Env knob renamed to the generic
-# TIMBALA_SMALL_CORPUS_BYTES (the old TIMBALA_NGRAM_SMALL_CORPUS_BYTES
-# is honored as a fallback — it had grown to control non-ngram paths,
-# r11 ADVICE).  These aliases keep every existing caller and test
-# working unchanged.
-_estimated_input_bytes = estimated_input_bytes
-_small_corpus = small_corpus
-
-
-def _resolve_persist_shingles(
-    df: DataFrame, text_col: str, n: int
-) -> bool:
-    """Estimate whether the corpus's shingle arrays would fit the
-    scratch budget: ``False`` means "big corpus".
-
-    One map-only pass: every token appears in up to ``n`` shingles, so
-    array bytes ~ ``n × total_text_bytes`` × 1.3 element overhead.
-    Since r8 this drives only ``curate_corpus``'s lineage-checkpoint
-    default — ``ngram_jaccard_pairs`` no longer persists shingle
-    arrays in any mode (PERF §20c take 7)."""
-    import logging
-    import os
-
-    budget = int(
-        os.environ.get(
-            "TIMBALA_SHINGLE_PERSIST_BUDGET_BYTES",
-            SHINGLE_PERSIST_BUDGET_BYTES,
-        )
-    )
-    total = (
-        df.agg(F.sum(F.length(F.col(text_col)))).collect()[0][0] or 0
-    )
-    est = int(1.3 * n * total)
-    persist = est <= budget
-    logging.getLogger(__name__).info(
-        "ngram_jaccard corpus-size estimate: est array bytes %.1f GB "
-        "(text %.1f GB x n=%d x 1.3) vs budget %.1f GB -> %s",
-        est / 2**30,
-        total / 2**30,
-        n,
-        budget / 2**30,
-        "small" if persist else "big",
-    )
-    return persist
-
-
 #: Default stop-shingle cap for n-gram candidate generation — named so
 #: the streaming stage's per-kind default resolution cannot drift from
 #: the batch operator's (r11, VERDICT r10 #2).
@@ -172,7 +98,6 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.2,
     max_postings: int | None = _DEFAULT_MAX_POSTINGS,
-    persist_shingles: bool | None = None,
     _release_previous: bool = True,
     eager: bool = False,
 ) -> DataFrame:
@@ -214,9 +139,7 @@ def ngram_jaccard_pairs(
     per-action audit measured at 5× the wall AND 5× the shuffle
     scratch of the pinned-text design at 5M docs (23.3 GB vs 4.3 GB;
     the mode auto-selected at 20M was the one that ENOSPCed the
-    composition).  ``persist_shingles`` is accepted for API
-    compatibility and ignored — results and plan are identical for
-    every value.
+    composition).
 
     ``eager=True`` materializes the (small) pair list via an eager
     ``localCheckpoint`` and unpersists the operator's internal pins
@@ -228,8 +151,8 @@ def ngram_jaccard_pairs(
     the text/posting pins would otherwise stay resident long after
     the pair list is final.
 
-    Small corpora (≤ :data:`SMALL_CORPUS_INPUT_BYTES` of leaf-scan
-    file bytes, gauged metadata-only) skip the one PURE-ACTION job —
+    Small corpora (under the shared metadata-only
+    :func:`~.util.small_corpus` cut) skip the one PURE-ACTION job —
     the stop-shingle COUNT (the fired-cap report) — whose fixed cost
     dominated sub-10k-doc calls (r9; the r8 bench regression).  The
     eager intermediate candidate checkpoint is unconditional when
@@ -240,8 +163,6 @@ def ngram_jaccard_pairs(
     identical on both paths — only the count action and its cap log
     differ.
     """
-    del persist_shingles  # r8: single design; kept for API compat
-
     # Small-corpus fast path (r9): skip the one PURE-ACTION job — the
     # stop-shingle count (the fired-cap report) — whose fixed job cost
     # dominated the sub-10k-doc bench corpus (the r8 regression,
@@ -252,7 +173,7 @@ def ngram_jaccard_pairs(
     # metadata-only (leaf file sizes — no job) and fails CLOSED:
     # unknown size ⇒ big ⇒ full machinery.  Results are identical on
     # both paths — only actions and the cap log differ.
-    small = _small_corpus(df)
+    small = small_corpus(df)
     _local_pins: list[DataFrame] = []
 
     def _pin(frame: DataFrame, release_previous: bool) -> DataFrame:
@@ -652,7 +573,7 @@ def minhash_lsh_pairs(
     # worktree A/B) — the same fixed-cost-vs-throughput split every
     # other gated path in this module records.  Gate is metadata-only
     # and fails CLOSED to the big-corpus (codegen) arm.
-    small = _small_corpus(df)
+    small = small_corpus(df)
     base = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"),
         word_shingles_expr(F.col(text_col), n, small=small).alias("_sh"),
@@ -1023,7 +944,7 @@ def embedding_near_dup_pairs(
             # n-gram path applies to its stop-shingle report; r11).
             # The anti-join below is UNCONDITIONAL either way, so the
             # candidate set is identical on both paths.
-            if not _small_corpus(df):
+            if not small_corpus(df):
                 n_cells = cells.count()
                 n_hot = hot.count()
                 if n_hot:

@@ -94,13 +94,12 @@ from .dedup import (
     _minhash_band_structs,
     _minhash_band_structs_fold,
     _minhash_sigs_by_id,
-    _small_corpus,
     hash64_expr,
     minhash_params_for,
     minhash_signature_expr,
     word_shingles_expr,
 )
-from .util import ensure_parallelism, tracked_persist
+from .util import ensure_parallelism, small_corpus, tracked_persist
 
 _META = "_index_meta.json"
 
@@ -328,7 +327,7 @@ def _ngram_postings(
     Identical hashing to ``ngram_jaccard_pairs``' posting table —
     explode BEFORE hashing so the hash runs in codegen, not inside an
     interpreted array transform (the §9 HOF trap); same r11
-    ``_small_corpus``-gated sliding-join arm for the shingle windows
+    ``small_corpus``-gated sliding-join arm for the shingle windows
     (plan shape only — values identical)."""
     return (
         ensure_parallelism(df)
@@ -336,7 +335,7 @@ def _ngram_postings(
             F.col(id_col).alias("_id"),
             F.explode(
                 word_shingles_expr(
-                    F.col(text_col), n, small=_small_corpus(df)
+                    F.col(text_col), n, small=small_corpus(df)
                 )
             ).alias("_str"),
         )
@@ -362,7 +361,7 @@ def _minhash_bands(
     (parity-tested both algos), 6.7× on the signature stage, one extra
     ids-keyed exchange of 8 + 8·num_hashes bytes/doc that the map-side
     partial MIN collapses to one row per id)."""
-    small = _small_corpus(df)
+    small = small_corpus(df)
     base = (
         ensure_parallelism(df)
         .select(
@@ -440,7 +439,7 @@ def _verify_pairs(
             )
             .otherwise(
                 word_shingles_expr(
-                    F.col("_text"), n, small=_small_corpus(texts)
+                    F.col("_text"), n, small=small_corpus(texts)
                 )
             )
             .alias("_sh"),

@@ -29,7 +29,7 @@ from typing import Mapping
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .util import hash64_expr
+from .util import hash64_expr, small_corpus
 
 #: Sampling-gate denominator: fractions resolve to an integer number of
 #: hash buckets out of this many, so Spark and any SQL oracle compare
@@ -205,9 +205,7 @@ def pack_greedy(
     # bucket boundaries fell); at scale the gate reads "big" and the
     # two-phase machinery runs unchanged.  The two skipped jobs were a
     # fixed per-call driver cost that dominated small invocations.
-    from .dedup import _small_corpus
-
-    if _small_corpus(df):
+    if small_corpus(df):
         splits: list[float] = []
     else:
         # Split points: n-quantiles of order_col (Greenwald–Khanna —

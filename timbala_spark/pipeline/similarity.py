@@ -20,7 +20,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .util import ensure_parallelism, small_corpus, tracked_persist
+from .util import ensure_parallelism, tracked_persist
 
 
 def as_double_array(col: Column) -> Column:
@@ -110,55 +110,36 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
 
     Returns (query_id, rank, neighbor_id, cos). Ties broken by
     neighbor_id for determinism.
 
-    ``dim`` (r11): pass the expected vector width to run the per-pair
-    dot and the per-row norms through the codegen kernels
-    (:func:`dot_sql` / :func:`norm_sql`) instead of the interpreted
-    fold — bit-identical at every width (the kernel guards on
-    ``size(vec) = dim`` and falls back to the verbatim fold), 3.8× on
-    the pair kernel, which in this brute-force operator is the entire
-    N·Q cost. ``None`` keeps the fold (callers without a known width).
-
-    r12 (VERDICT r11 #1): the kernel arm is additionally gated on the
-    shared metadata-only small-corpus cut — below it the fold runs.
-    The three ~200-node unrolled projections cost per-invocation
-    Catalyst/codegen time that DOMINATES tiny corpora (driver bench:
-    0.597 → 1.090 s at 2k×5 vectors with the kernel ungated — the
-    same fixed-cost-vs-throughput split ``minhash_lsh_pairs`` gates),
-    while at scale the per-row win is the whole N·Q cost.  Values are
-    bit-identical on both arms (parity-tested), the gate is
-    metadata-only and fails CLOSED to the kernel (scale) arm.
+    The pair dot and the row norms run the interpreted fold
+    (:func:`dot_expr`).  The unrolled codegen kernel (:func:`dot_sql`)
+    gives the same values but won only 1.11× end to end at 400k ×
+    64-d, where the broadcast nested-loop join and row assembly
+    dominate, and lost 1.8× on tiny corpora to its per-invocation
+    Catalyst cost (0.597 vs 1.090 s at 2k × 5 vectors), so this
+    operator no longer carries it (OPTIMIZATION_r12 §1, §7a).
     """
     # norms precomputed once per row (not per pair): bit-identical to
     # cosine_expr — same expression tree, sqrt(dot(v,v)) just evaluated
     # earlier — but the per-pair work drops from 3 interpreted-HOF folds
     # to 1
-    use_kernel = dim is not None and dim > 0 and not small_corpus(corpus)
-    _norm = (lambda name: norm_sql(name, dim)) if use_kernel else (
-        lambda name: norm_expr(F.col(name))
-    )
     c = ensure_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         as_double_array(F.col(vec_col)).alias("_cv"),
-    ).withColumn("_cn", _norm("_cv"))
+    ).withColumn("_cn", norm_expr(F.col("_cv")))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         as_double_array(F.col(vec_col)).alias("_qv"),
-    ).withColumn("_qn", _norm("_qv"))
+    ).withColumn("_qn", norm_expr(F.col("_qv")))
     joined = c.crossJoin(F.broadcast(q)).withColumn(
         "cos",
         cosine_from_parts(
-            dot_sql("_qv", "_cv", dim)
-            if use_kernel
-            else dot_expr(F.col("_qv"), F.col("_cv")),
-            F.col("_qn"),
-            F.col("_cn"),
+            dot_expr(F.col("_qv"), F.col("_cv")), F.col("_qn"), F.col("_cn")
         ),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -286,24 +267,17 @@ def lsh_cosine_topk(
     """Approximate top-k: candidates = vectors sharing an LSH bucket with
     the query in ANY of ``n_tables`` independent tables, re-ranked
     exactly. The bucket join replaces the cross join — this is what
-    survives a 100× corpus scale-up.
-
-    r12: the norm/re-rank kernels take the fold arm below the shared
-    small-corpus cut (same gate and rationale as :func:`cosine_topk` —
-    the unrolled projections' per-invocation Catalyst cost dominates
-    tiny corpora; values bit-identical on both arms)."""
-    use_kernel = dim > 0 and not small_corpus(corpus)
-    _norm = (lambda name: norm_sql(name, dim)) if use_kernel else (
-        lambda name: norm_expr(F.col(name))
-    )
+    survives a 100× corpus scale-up.  Norms and re-rank dots run the
+    interpreted fold, as in :func:`cosine_topk`; ``dim`` sizes the
+    hyperplanes."""
     c = ensure_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         as_double_array(F.col(vec_col)).alias("_cv"),
-    ).withColumn("_cn", _norm("_cv"))
+    ).withColumn("_cn", norm_expr(F.col("_cv")))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         as_double_array(F.col(vec_col)).alias("_qv"),
-    ).withColumn("_qn", _norm("_qv"))
+    ).withColumn("_qn", norm_expr(F.col("_qv")))
     # one pass per side: every table's bucket in a single projection
     # (explode of a struct array) instead of one union branch per table
     # re-scanning the source n_tables times — identical values, same
@@ -339,11 +313,7 @@ def lsh_cosine_topk(
     ranked = cand.withColumn(
         "cos",
         cosine_from_parts(
-            dot_sql("_qv", "_cv", dim)
-            if use_kernel
-            else dot_expr(F.col("_qv"), F.col("_cv")),
-            F.col("_qn"),
-            F.col("_cn"),
+            dot_expr(F.col("_qv"), F.col("_cv")), F.col("_qn"), F.col("_cn")
         ),
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -357,7 +357,7 @@ def _read_surv_meta(survivors_path: str) -> tuple[dict, bytes | None]:
     """(meta, raw bytes) — (never-compacted defaults, None) when no
     meta exists.  The default ``through`` is a deep sentinel (not -1)
     so NEGATIVE batch ids stay live before the first fold — the
-    seeding pattern (tools/streaming_neardup_bench.py) lands a
+    seeding pattern (PERF §22 addendum 2) lands a
     pre-existing corpus as ``batch=-1`` precisely so the stream's own
     ids (0, 1, …) never collide with it."""
     import json

@@ -91,7 +91,7 @@ def sliding_join_expr(toks: Column, n: int, small: bool = False) -> Column:
     ``tokens_expr`` produces; zip_with's null padding marks the
     <n-token tail positions NULL and the final prefix slice keeps
     positions ``1..max(cnt, 1)`` — the old sequence bounds.  Callers
-    gate the arm on the shared metadata-only ``_small_corpus`` cut
+    gate the arm on the shared metadata-only ``small_corpus`` cut
     (plan-shape only, never results) and must guard NULL/short inputs
     BEFORE this expression (the arms disagree on bare-NULL ``toks``:
     join-form yields ``[NULL]``, chain-form ``NULL``)."""
@@ -241,9 +241,8 @@ def with_fingerprint(
     a robust near-duplicate signature computed entirely JVM-side.
     ``hash_algo="md5"`` makes the whole pipeline DuckDB-replayable
     (see ``util.hash64_expr``)."""
-    from .util import ensure_parallelism, hash64_expr, small_corpus
+    from .util import ensure_parallelism, hash64_expr
 
-    small = small_corpus(df)
     df = ensure_parallelism(df)
     text = F.col(text_col)
     n_sh = F.greatest(F.length(text) - F.lit(k - 1), F.lit(0))
@@ -255,60 +254,32 @@ def with_fingerprint(
         )
     )
     # The shingle-hash array is STAGED as its own column and the
-    # window minima taken by a LEAST chain over `window` shifted
-    # slices (r11).  The previous form — per-position
-    # ``array_min(slice(hashes, i+1, window))`` inside a transform —
-    # re-evaluated the whole `hashes` subexpression for EVERY window
-    # position under the higher-order-function interpreter: O(len²)
-    # substring hashes per document (measured 42 s for one noop pass
-    # over the 5k-doc sf0.1 corpus; ~1 s after).  The stage column is
-    # referenced ``window`` times, so Catalyst's CollapseProject keeps
-    # it single-evaluation (the scrub_pii rule: expensive producers
-    # with >1 consumer are not inlined).  Values are bit-identical:
-    # ``least`` over the k-th shifted slices sees exactly the elements
-    # ``slice(hashes, i+1, window)`` saw — zip_with's null padding at
-    # the tail is skipped by ``least`` precisely where the old slice
-    # truncated — and the prefix-slice keeps the same count of window
-    # positions, so the distinct/sort/join/hash pipeline on top is
-    # unchanged.  (The fingerprint oracle replays the whole pipeline;
-    # a parity test pins old == new on random + short/empty texts.)
+    # window minima taken per position as ``array_min(slice(h, i,
+    # window))`` over the staged column: O(len·window) per row.  The
+    # unstaged form — the same slice over the whole `hashes`
+    # subexpression inside a transform — re-evaluated the substring
+    # hashes for EVERY window position under the higher-order-function
+    # interpreter: O(len²) per document (measured 42 s for one noop
+    # pass over the 5k-doc sf0.1 corpus; ~1 s after).  The stage column
+    # is referenced twice (size and slice), so Catalyst's
+    # CollapseProject keeps it single-evaluation (the scrub_pii rule:
+    # expensive producers with >1 consumer are not inlined).  A LEAST
+    # chain over `window` shifted slices gives the same values but won
+    # only 1.25× at 60k × 300-token docs and lost 1.55× at sf0.1, so
+    # it was removed (OPTIMIZATION_r12 §4).  The fingerprint oracle
+    # replays the whole pipeline; a test pins this form to a
+    # pure-Python reference.
     hc = _staging_name(df, "__fp_hashes")
     h = F.col(hc)
-    if small:
-        # small arm (r12, ADVICE r11): per-position
-        # ``array_min(slice(h, i, window))`` over the STAGED column —
-        # one HOF node instead of the chain's ``window-1`` zip_with
-        # passes, cheaper per invocation on short-document corpora
-        # (r11's ab_final measured the chain 1.22× at bench scale).
-        # O(len·window) like the chain (h is a column reference, so
-        # nothing re-evaluates per position — the O(len²) trap was the
-        # unstaged hash array, fixed in r11 for BOTH arms).  Values
-        # bit-identical: position i's least-over-padded-slices equals
-        # array_min(slice(h, i, window)) element-for-element (same
-        # elements, NULL padding skipped by least exactly where the
-        # slice truncates); parity-tested both arms.
-        mins_src = F.transform(
+    mins = F.array_distinct(
+        F.transform(
             F.sequence(
                 F.lit(1),
                 F.greatest(F.size(h) - F.lit(window - 1), F.lit(1)),
             ),
             lambda i: F.array_min(F.slice(h, i, window)),
         )
-    else:
-        mins_full = h
-        for j in range(1, window):
-            shifted = F.slice(
-                h, j + 1, F.greatest(F.size(h) - j, F.lit(0))
-            )
-            mins_full = F.zip_with(
-                mins_full, shifted, lambda x, y: F.least(x, y)
-            )
-        mins_src = F.slice(
-            mins_full,
-            1,
-            F.greatest(F.size(h) - F.lit(window - 1), F.lit(1)),
-        )
-    mins = F.array_distinct(mins_src)
+    )
     fp = hash64_expr(
         F.array_join(
             F.transform(F.array_sort(mins), lambda x: x.cast("string")), ","
@@ -372,9 +343,9 @@ def flag_contaminated(
     Returns ``docs`` plus ``n_contam_ngrams`` (distinct shared grams)
     and ``contaminated``.
     """
-    from .dedup import _small_corpus  # lazy: dedup imports this module
+    from .util import small_corpus
 
-    small = _small_corpus(docs)
+    small = small_corpus(docs)
     g = ngrams_expr(F.col(text_col), n, small=small)
     if hash_grams:
         g = F.transform(g, lambda s: F.xxhash64(s))

@@ -132,24 +132,22 @@ def estimated_input_bytes(df: DataFrame) -> int | None:
 
 
 def small_corpus(df: DataFrame) -> bool:
-    """The small-corpus gate shared by the pipeline operators (n-gram
-    stop-shingles, embedding stop-buckets, MinHash signature arm,
-    pack_greedy fast path, similarity kernels): ``True`` when the
+    """The pipeline's one corpus-size decision: ``True`` when the
     frame's leaf-scan bytes fit under :data:`SMALL_CORPUS_INPUT_BYTES`.
-    Env override ``TIMBALA_SMALL_CORPUS_BYTES`` (r12; the historical
-    ``TIMBALA_NGRAM_SMALL_CORPUS_BYTES`` name is honored as a
-    fallback); 0 disables, i.e. never small.  Metadata-only (no job),
-    fails CLOSED: unknown size ⇒ big ⇒ full machinery.  Gates
-    PURE-ACTION work (fired-cap REPORT counts) and result-identical
-    PLAN-SHAPE choices — never anything that changes results."""
+    Users: the n-gram and embedding fired-cap reports, the MinHash
+    signature arm, the sliding-join shingle arm (n-gram/MinHash dedup,
+    the incremental index, decontamination), the ``pack_greedy``
+    single bucket and ``curate_corpus``'s components checkpoint.
+    Env override ``TIMBALA_SMALL_CORPUS_BYTES``; 0 disables, i.e.
+    never small.  Metadata-only (no job), fails CLOSED: unknown size
+    ⇒ big ⇒ full machinery.  Gates PURE-ACTION work (fired-cap REPORT
+    counts, the checkpoint) and result-identical PLAN-SHAPE choices —
+    never anything that changes results."""
     import os
 
-    raw = os.environ.get("TIMBALA_SMALL_CORPUS_BYTES")
-    if raw is None:
-        raw = os.environ.get(
-            "TIMBALA_NGRAM_SMALL_CORPUS_BYTES", SMALL_CORPUS_INPUT_BYTES
-        )
-    cut = int(raw)
+    cut = int(
+        os.environ.get("TIMBALA_SMALL_CORPUS_BYTES", SMALL_CORPUS_INPUT_BYTES)
+    )
     if cut <= 0:
         return False
     est = estimated_input_bytes(df)

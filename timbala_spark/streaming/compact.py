@@ -222,7 +222,7 @@ def compact_store(
     the tables in the session catalog and the dict join runs with ZERO
     exchanges below the join — the biggest measured read lever at the
     40M-series bar (1.75× in the prototype A/B,
-    ``tools/bucketed_join_ab.py``).  Dirty reads (straggler carry,
+    PERF §12 extension 2).  Dirty reads (straggler carry,
     post-commit appends: plain-named files mixed into the location)
     fall back to the ordinary path scan, which reads bucketed files
     like any parquet.  Incremental compaction composes only when the

@@ -1,24 +1,22 @@
 """Mid-scale (sf1-equivalent) evidence for the gated scale arms
-(VERDICT r11 #8): the r11 wins (winnowing LEAST-chain, shingle
-let-bind, MinHash codegen signatures, cosine kernels) were proven with
-noop-sink micro A/Bs because bench's count() prunes payload columns;
-this probe gives the SCALE arms end-to-end numbers on a corpus big
-enough (> util.SMALL_CORPUS_INPUT_BYTES of parquet) that every
-small-corpus gate takes its scale arm.
+(VERDICT r11 #8): the r11 wins (winnowing minima, shingle let-bind,
+MinHash codegen signatures) were proven with noop-sink micro A/Bs
+because bench's count() prunes payload columns; this probe gives them
+end-to-end numbers on a corpus big enough (> util.SMALL_CORPUS_INPUT_BYTES
+of parquet) that every small-corpus gate takes its scale arm.
 
 Where both arms live in HEAD behind the shared gate
-(minhash_lsh_pairs signatures, cosine_topk kernels) the arms are A/B'd
-END-TO-END through the public operator by flipping
-TIMBALA_SMALL_CORPUS_BYTES between calls (huge -> small/fold arm,
-0 -> scale arm), interleaved in one session so box weather hits both.
-The ungated rewrites (with_fingerprint, sliding_join_expr) are
-measured end-to-end on HEAD at scale (their predecessors live in the
-r10 tree; the r11 micro A/Bs already hold the before numbers).
+(minhash_lsh_pairs signatures) the arms are A/B'd END-TO-END through
+the public operator by flipping TIMBALA_SMALL_CORPUS_BYTES between
+calls (huge -> small/fold arm, 0 -> scale arm), interleaved in one
+session so box weather hits both.  The single-arm operators
+(with_fingerprint, sliding_join_expr's default arm) are measured
+end-to-end on HEAD at scale.
 
 All timings: noop sink (guide §1.4), min of REPS interleaved runs.
-Writes a markdown table to stdout; redirect into plans/r12/.
+Writes a markdown table to stdout; redirect into plans/.
 
-Usage:  python tools/scale_probe.py [--docs N] [--vecs N] [--reps K]
+Usage:  python tools/scale_probe.py [--docs N] [--reps K]
 Env: SPARK_GRAFT_CPUS (default 32). Corpus parquet goes to a temp dir.
 """
 
@@ -36,15 +34,39 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 GATE = "TIMBALA_SMALL_CORPUS_BYTES"
 
 
+def write_docs(spark, path: str, docs: int, parts: int) -> None:
+    """~300 tokens/doc from a 50k vocab, deterministic (hash-mixed id),
+    mostly unique docs so pair joins stay bounded (~1.5 KB of parquet
+    per doc)."""
+    from pyspark.sql import functions as F
+
+    (
+        spark.range(docs)
+        .select(
+            F.col("id").alias("doc_id"),
+            F.concat_ws(
+                " ",
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(299)),
+                    lambda i: F.concat(
+                        F.lit("tok"),
+                        (F.xxhash64(F.col("id") * 1000 + i) % 50_000),
+                    ),
+                ),
+            ).alias("text"),
+        )
+        .repartition(parts)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
 def main() -> None:
     docs = 120_000
-    vecs = 400_000
     reps = 3
     args = sys.argv[1:]
     if "--docs" in args:
         docs = int(args[args.index("--docs") + 1])
-    if "--vecs" in args:
-        vecs = int(args[args.index("--vecs") + 1])
     if "--reps" in args:
         reps = int(args[args.index("--reps") + 1])
 
@@ -66,46 +88,7 @@ def main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="scale_probe_")
     docs_path = os.path.join(tmp, "docs")
-    vecs_path = os.path.join(tmp, "vecs")
-
-    # ~300 tokens/doc from a 50k vocab, deterministic (hash-mixed id),
-    # mostly unique docs so pair joins stay bounded
-    (
-        spark.range(docs)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(299)),
-                    lambda i: F.concat(
-                        F.lit("tok"),
-                        (F.xxhash64(F.col("id") * 1000 + i) % 50_000),
-                    ),
-                ),
-            ).alias("text"),
-        )
-        .repartition(int(CPUS))
-        .write.mode("overwrite")
-        .parquet(docs_path)
-    )
-    (
-        spark.range(vecs)
-        .select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda i: (
-                    F.pmod(F.xxhash64(F.col("id") * 64 + i), F.lit(1000))
-                    / 500.0
-                    - 1.0
-                ),
-            ).alias("embedding"),
-        )
-        .repartition(int(CPUS))
-        .write.mode("overwrite")
-        .parquet(vecs_path)
-    )
+    write_docs(spark, docs_path, docs, int(CPUS))
 
     def du(p):
         return sum(
@@ -115,12 +98,10 @@ def main() -> None:
         )
 
     print(f"# scale probe: docs={docs} ({du(docs_path)>>20} MB parquet), "
-          f"vecs={vecs} ({du(vecs_path)>>20} MB parquet), "
           f"gate cut=64 MB -> scale arms active by default; "
           f"local[{CPUS}], noop sink, min of {reps} interleaved reps")
 
     ddf = spark.read.parquet(docs_path)
-    vdf = spark.read.parquet(vecs_path)
 
     def noop_time(df) -> float:
         t0 = time.monotonic()
@@ -168,25 +149,14 @@ def main() -> None:
         huge, off, "fold", "codegen",
     )
 
-    # 2. cosine_topk end-to-end: interpreted fold vs unrolled kernels
-    #    (64 queries x 400k corpus = 25.6M pair dots)
-    from timbala_spark.pipeline.similarity import cosine_topk
-
-    qdf = vdf.filter(F.col("vec_id") < 64)
-    ab(
-        "cosine_topk (64q x 400k corpus, dim=64)",
-        lambda: cosine_topk(vdf, qdf, k=5, dim=64),
-        huge, off, "fold", "kernel",
-    )
-
-    # 3. winnowing fingerprint end-to-end at scale (the r11 LEAST-chain
-    #    rewrite is ungated; r11 micro A/B: 42.3 -> 1.69s full-eval)
+    # 2. winnowing fingerprint end-to-end at scale (the r11 staged
+    #    hash column; r11 micro A/B: 42.3 -> 1.69s full-eval)
     from timbala_spark.pipeline.text import with_fingerprint
 
     solo("with_fingerprint (winnowing, 300-tok docs)",
          lambda: with_fingerprint(ddf))
 
-    # 4. shingle windows (sliding_join_expr let-bind, ungated; r11
+    # 3. shingle windows (sliding_join_expr let-bind, ungated; r11
     #    micro A/B: 20x on 400-token docs) — the n-gram dedup shingle
     #    stage end-to-end
     from timbala_spark.pipeline.text import sliding_join_expr, tokens_expr
