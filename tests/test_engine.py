@@ -126,6 +126,31 @@ class TestGuards:
         assert sorted(
             (dict(r["labels"])["x"], r["v"]) for r in out
         ) == [("1", 2.0), ("2", 1.0)]
+        # any string is a label KEY here — one that only survives if it
+        # is quoted, never spliced, into the plan's SQL text
+        def counted(q):
+            return sorted(
+                (sorted(r["labels"].items()), r["v"])
+                for r in eng.query(q, 0).collect()
+            )
+
+        for src, lbl in [  # PromQL string literal → label key
+            ("it's", "it's"),
+            ("back\\\\slash", "back\\slash"),
+            ("x') OR raise_error('boom", "x') OR raise_error('boom"),
+            ("\\u001f", "\x1f"),
+            ("é😀", "é😀"),
+        ]:
+            assert counted(f'count_values("{src}", m)') == [
+                ([(lbl, "1")], 2.0),
+                ([(lbl, "2")], 1.0),
+            ], lbl
+            assert counted(f'count_values by (x) ("{src}", m)') == sorted(
+                [
+                    (sorted({"x": x, lbl: val}.items()), 1.0)
+                    for x, val in [("a", "1"), ("b", "1"), ("c", "2")]
+                ]
+            ), lbl
 
     def test_label_join_collision_errors(self, spark):
         from timbala_spark import prepare_samples
@@ -379,7 +404,7 @@ class TestShardDistribution:
             ).alias("labels")
         )
         buckets = (
-            df.select(F.pmod(series_id_expr(F.col("labels")), F.lit(n_buckets)).alias("b"))
+            df.select(F.pmod(series_id_expr("labels"), F.lit(n_buckets)).alias("b"))
             .groupBy("b")
             .count()
             .collect()
@@ -390,6 +415,30 @@ class TestShardDistribution:
         rsd = math.sqrt(sum((c - mean) ** 2 for c in counts) / len(counts)) / mean
         # reference gate: population std-dev < numSamples/10
         assert rsd < 0.10, rsd
+
+    def test_series_ids_are_stable(self, spark):
+        """Series ids are persisted in every store's series dictionary:
+        a change to the canonical serialization or its hash would
+        orphan stored series, so the exact bits are pinned."""
+        from timbala_spark.model import series_id_expr
+
+        pinned = [
+            ({}, -7444071767201028348),
+            ({"__name__": "m", "job": "a"}, -7009550381249838793),
+            ({"é": "x\x1fy", "b": "it's"}, -886401729988055111),
+            (
+                {"__name__": "up", "instance": "h:9090", "le": "+Inf"},
+                -8947739011887087028,
+            ),
+        ]
+        df = spark.createDataFrame(
+            [(i, m) for i, (m, _) in enumerate(pinned)],
+            "i int, labels map<string,string>",
+        )
+        got = df.select("i", series_id_expr("labels").alias("id")).collect()
+        assert sorted((r["i"], r["id"]) for r in got) == [
+            (i, sid) for i, (_, sid) in enumerate(pinned)
+        ]
 
 
 class TestAbsentRangeBoundaries:

@@ -1224,6 +1224,56 @@ eval instant at 0m -1 ^ Inf
 """)
 
 
+def test_ieee_edges_on_every_binop_shape(spark):
+    """Signed-zero divide, zero mod, Go Pow(1, NaN) and NaN comparisons
+    through each operand shape: vector∘constant, vector∘scalar(),
+    vector∘vector, and scalar∘scalar with a step-varying side."""
+    run_golden(spark, """
+load 1m
+  foo 2
+  zero 0
+  one 1
+  nanm NaN
+  negzero -0
+
+eval instant at 1m foo / -0
+  {} -Inf
+
+eval instant at 1m foo / scalar(zero * -1)
+  {} -Inf
+
+eval instant at 1m foo / on() negzero
+  {} -Inf
+
+eval instant at 1m scalar(foo) / scalar(zero * -1)
+  -Inf
+
+eval instant at 1m time() / -0
+  -Inf
+
+eval instant at 1m scalar(foo) % 0
+  NaN
+
+eval instant at 1m foo % scalar(zero)
+  {} NaN
+
+eval instant at 1m scalar(one) ^ NaN
+  1
+
+eval instant at 1m scalar(nanm) != bool scalar(nanm)
+  1
+
+eval instant at 1m scalar(nanm) == bool scalar(nanm)
+  0
+
+eval instant at 1m nanm != bool nanm
+  {} 1
+
+eval instant at 1m foo == bool NaN
+  {} 0
+""")
+
+
 def test_stddev_naive_formula_cancellation(spark):
     """stddev/stdvar use the reference's one-pass sqsum/n - mean^2
     (engine.go:1359-1407), kept bug-for-bug: at large magnitudes the

@@ -327,6 +327,63 @@ class TestRateKernelPlan:
         assert "collect_list" not in plan
 
 
+class TestBuildRoundTrips:
+    """Driver-side plan construction is py4j-round-trip-bound (PERF
+    §13), so label-map and float-operator expressions are built as SQL
+    text: one JVM call per projection instead of one per Column node.
+    A Column forest creeping back into a compile path shows up here as
+    a higher count of round trips while one cold range query builds."""
+
+    #: round trips counted when the bound was set, plus 10 %
+    BOUNDS = {
+        "m > 0.5": 210,
+        "m / scalar(a)": 542,
+        "a / on(job, le, instance) group_left(x) b": 349,
+        'count_values("v", m)': 783,
+        'label_replace(m, "dst", "$1", "job", "(.*)")': 566,
+    }
+
+    @pytest.fixture(scope="class")
+    def samples(self, spark):
+        rows = [
+            (
+                {"__name__": n, "instance": i, "le": le, "job": "j", "x": "x"},
+                k * 15_000,
+                float(k),
+            )
+            for n in ("m", "a", "b", "c")
+            for i in ("0", "1")
+            for le in ("1", "+Inf")
+            for k in range(40)
+        ]
+        df = spark.createDataFrame(rows, "labels map<string,string>, t long, v double")
+        samples = prepare_samples(df)
+        # the first build against a frame also fetches its schema
+        Engine(spark, samples).query_range("m", 60, 600, 15)
+        return samples
+
+    @pytest.mark.parametrize("promql", sorted(BOUNDS))
+    def test_cold_build_round_trips(self, spark, samples, promql):
+        client_cls = type(spark.sparkContext._gateway._gateway_client)
+        orig = client_cls.send_command
+        calls = []
+
+        def counting(client, command, *a, **kw):
+            # object releases ("m\nd\n…") follow Python's GC timing,
+            # not the plan being built
+            if not command.startswith("m\nd\n"):
+                calls.append(command)
+            return orig(client, command, *a, **kw)
+
+        engine = Engine(spark, samples)
+        client_cls.send_command = counting
+        try:
+            engine.query_range(promql, 60, 600, 15)
+        finally:
+            client_cls.send_command = orig
+        assert len(calls) <= self.BOUNDS[promql], len(calls)
+
+
 class TestCurationPlans:
     """Plan gates for pipeline/sample.py (PERF §20): the scale claims
     are structural plan properties, so pin them in CI."""

@@ -18,11 +18,17 @@ from pyspark.sql import functions as F
 
 from .compiler import PromQLBadQueryError
 from .engine import Engine
-from .model import METRIC_NAME_LABEL, SEP_KV, SEP_PAIR, label_get
+from .model import (
+    METRIC_NAME_LABEL,
+    SEP_KV,
+    SEP_PAIR,
+    canonical_labels_sql,
+    label_get,
+)
 
 
 def _canon_key(labels: dict) -> str:
-    """Driver-side twin of ``model.canonical_labels_expr`` — the wire
+    """``model.canonical_labels_sql``'s serialization, driver-side — the wire
     output order is applied here, after the (bounded) collect, instead
     of as a Spark-side all-to-one sort stage in the engine plan."""
     return SEP_PAIR.join(f"{k}{SEP_KV}{v}" for k, v in sorted(labels.items()))
@@ -524,10 +530,8 @@ class PromAPI:
             )
             for m in matchers:
                 df = df.filter(matcher_expr(m))
-            from .model import canonical_labels_expr
-
             deduped = (
-                df.withColumn("_sig", canonical_labels_expr(F.col("labels")))
+                df.withColumn("_sig", F.expr(canonical_labels_sql("labels")))
                 .dropDuplicates(["_sig"])
                 .select("labels")
             )

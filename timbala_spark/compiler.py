@@ -49,13 +49,12 @@ from pyspark.sql.window import Window
 from .model import (
     DEFAULT_LOOKBACK_MS,
     METRIC_NAME_LABEL,
-    canonical_labels_expr,
     canonical_labels_sql,
     label_get,
-    restrict_labels_expr,
     restrict_labels_sql,
-    signature_expr,
     signature_sql,
+    sql_double,
+    sql_quote,
 )
 from .promql.ast import (
     ARITHMETIC_OPS,
@@ -196,71 +195,16 @@ def _nan_lit() -> Column:
     return F.lit(NAN).cast("double")
 
 
-def _ieee_cmp(op: str, l: Column, r: Column) -> Column:
-    """IEEE-754 comparison semantics (Go), not Spark SQL's NaN-as-largest
-    total ordering: any comparison with NaN is false except ``!=``."""
-    either_nan = F.isnan(l) | F.isnan(r)
-    raw = {
-        "==": l == r,
-        "!=": l != r,
-        ">": l > r,
-        "<": l < r,
-        ">=": l >= r,
-        "<=": l <= r,
-    }[op]
-    if op == "!=":
-        return either_nan | ((l != r) & ~either_nan)
-    return ~either_nan & raw
-
-
-def _arith_col(op: str, l: Column, r: Column) -> Column:
-    """Arithmetic on doubles with Go float semantics.
-
-    ``%`` is Go ``math.Mod`` == Java ``%`` on doubles; ``^`` is
-    ``math.Pow`` (reference ``engine.go:1198-1227``).  Division and mod
-    by zero follow IEEE-754 (±Inf / NaN), which Spark's ANSI mode would
-    otherwise reject — the zero-divisor branch is guarded so the raw
-    operator never sees a zero.
-    """
-    if op == "+":
-        return l + r
-    if op == "-":
-        return l - r
-    if op == "*":
-        return l * r
-    if op == "/":
-        # IEEE keeps the divisor zero's SIGN: 1/-0 = -Inf. Spark's
-        # comparison can't see it (`-0.0 == 0.0`), but Math.pow can:
-        # pow(±0, -1) = ±Inf (and pow is not ANSI-guarded), so its
-        # signum recovers the zero's sign.
-        zero_sign = F.signum(F.power(r, F.lit(-1.0)))
-        zero_case = F.when(F.isnan(l) | (l == 0), _nan_lit()).otherwise(
-            F.lit(INF) * F.signum(l) * zero_sign
-        )
-        return F.when(r == 0, zero_case).otherwise(l / F.when(r != 0, r))
-    if op == "%":
-        return F.when(r == 0, _nan_lit()).otherwise(l % F.when(r != 0, r))
-    if op == "^":
-        # Go math.Pow follows IEEE 754-2008: Pow(1, y) = 1 for ANY y
-        # (including NaN/±Inf) and Pow(-1, ±Inf) = 1; Java Math.pow
-        # returns NaN for |x| == 1 with an infinite exponent and for
-        # 1^NaN — guard those three divergent cases explicitly
-        return (
-            F.when(l == 1.0, F.lit(1.0))
-            .when((l == -1.0) & ~F.isnan(r) & (F.abs(r) == F.lit(INF)),
-                  F.lit(1.0))
-            .otherwise(F.power(l, r))
-        )
-    raise PromQLEvalError(f"operator {op} not allowed")
-
-
-#: SQL-text twins of _ieee_cmp/_arith_col for batched plan construction
-#: (PERF §13) — identical expression trees, parsed JVM-side in one call.
-_NAN_SQL = "CAST('NaN' AS DOUBLE)"
-_INF_SQL = "CAST('Infinity' AS DOUBLE)"
+#: Go float semantics for the binary operators (reference
+#: ``engine.go:1198-1227``), as SQL text parsed JVM-side in one call
+#: (PERF §13).
+_NAN_SQL = sql_double(NAN)
+_INF_SQL = sql_double(INF)
 
 
 def _ieee_cmp_sql(op: str, l: str, r: str) -> str:
+    """IEEE-754 comparison semantics (Go), not Spark SQL's NaN-as-largest
+    total ordering: any comparison with NaN is false except ``!=``."""
     either_nan = f"(isnan({l}) OR isnan({r}))"
     if op == "!=":
         return f"({either_nan} OR (({l} != {r}) AND NOT {either_nan}))"
@@ -269,10 +213,21 @@ def _ieee_cmp_sql(op: str, l: str, r: str) -> str:
 
 
 def _arith_sql(op: str, l: str, r: str) -> str:
+    """Arithmetic on doubles with Go float semantics.
+
+    ``%`` is Go ``math.Mod`` == Java ``%`` on doubles; ``^`` is
+    ``math.Pow``.  Division and mod by zero follow IEEE-754 (±Inf /
+    NaN), which Spark's ANSI mode would otherwise reject — the
+    zero-divisor branch is guarded so the raw operator never sees a
+    zero.
+    """
     if op in ("+", "-", "*"):
         return f"({l} {op} {r})"
     if op == "/":
-        # see _arith_col: the pow trick recovers the divisor zero's sign
+        # IEEE keeps the divisor zero's SIGN: 1/-0 = -Inf. Spark's
+        # comparison can't see it (`-0.0 = 0.0`), but Math.pow can:
+        # pow(±0, -1) = ±Inf (and pow is not ANSI-guarded), so its
+        # signum recovers the zero's sign.
         zero_case = (
             f"(CASE WHEN isnan({l}) OR {l} = 0 THEN {_NAN_SQL} "
             f"ELSE {_INF_SQL} * signum({l}) * signum(power({r}, -1.0D)) END)"
@@ -287,7 +242,10 @@ def _arith_sql(op: str, l: str, r: str) -> str:
             f"ELSE {l} % (CASE WHEN {r} != 0 THEN {r} END) END)"
         )
     if op == "^":
-        # see _arith_col: Go Pow(1, y) / Pow(-1, ±Inf) guards
+        # Go math.Pow follows IEEE 754-2008: Pow(1, y) = 1 for ANY y
+        # (including NaN/±Inf) and Pow(-1, ±Inf) = 1; Java Math.pow
+        # returns NaN for |x| == 1 with an infinite exponent and for
+        # 1^NaN — guard those three divergent cases explicitly
         return (
             f"(CASE WHEN {l} = 1.0D THEN 1.0D "
             f"WHEN {l} = -1.0D AND NOT isnan({r}) AND abs({r}) = {_INF_SQL} "
@@ -296,14 +254,22 @@ def _arith_sql(op: str, l: str, r: str) -> str:
     raise PromQLEvalError(f"operator {op} not allowed")
 
 
+def _binop_sql(op: str, l: str, r: str) -> str:
+    """``l op r`` as a double; a comparison is its ``bool`` form (1/0)."""
+    if op in COMPARISON_OPS:
+        return f"(CASE WHEN {_ieee_cmp_sql(op, l, r)} THEN 1.0D ELSE 0.0D END)"
+    return _arith_sql(op, l, r)
+
+
 def _map_set_conditional_sql(m_sql: str, key: str, val_sql: str) -> str:
-    """SQL twin of _map_set_conditional (key must be pre-validated as a
-    plain identifier)."""
+    """labels[key] := val, deleting the key when val == '' (PromQL treats
+    empty label values as absent — ``engine.go:1096-1130``)."""
+    k = sql_quote(key)
     empty = "CAST(array() AS ARRAY<STRING>)"
-    keys = f"(CASE WHEN {val_sql} != '' THEN array('{key}') ELSE {empty} END)"
+    keys = f"(CASE WHEN {val_sql} != '' THEN array({k}) ELSE {empty} END)"
     vals = f"(CASE WHEN {val_sql} != '' THEN array({val_sql}) ELSE {empty} END)"
     return (
-        f"map_concat(map_filter({m_sql}, (k, v) -> k != '{key}'), "
+        f"map_concat(map_filter({m_sql}, (k, v) -> k != {k}), "
         f"map_from_arrays({keys}, {vals}))"
     )
 
@@ -339,16 +305,6 @@ def _py_cmp(op: str, l: float, r: float) -> bool:
         ">=": l >= r,
         "<=": l <= r,
     }[op]
-
-
-def _map_set_conditional(m: Column, key: str, val: Column) -> Column:
-    """labels[key] := val, deleting the key when val == '' (PromQL treats
-    empty label values as absent — ``engine.go:1096-1130``)."""
-    base = F.map_filter(m, lambda k, _v: k != key)
-    empty = F.array().cast("array<string>")
-    keys = F.when(val != "", F.array(F.lit(key))).otherwise(empty)
-    vals = F.when(val != "", F.array(val)).otherwise(empty)
-    return F.map_concat(base, F.map_from_arrays(keys, vals))
 
 
 def _vv(df: DataFrame) -> DataFrame:
@@ -776,7 +732,7 @@ def _matrix_grouped(ms: MatrixSelector, ctx: EvalContext) -> DataFrame:
     return _explode_grid(ctx, base, ms.offset_ms, ms.range_ms)
 
 
-_DROP_NAME = lambda: restrict_labels_expr(F.col("labels"), drop_name=True)  # noqa: E731
+_DROP_NAME = restrict_labels_sql("labels", drop_name=True)
 
 
 def _matrix_agg(
@@ -1036,16 +992,14 @@ def _extrapolated_val_sql(range_ms: int, is_counter: bool, is_rate: bool) -> str
     )
     val = f"({base} * ({extrap} / {sampled}))"
     if is_rate:
-        val = f"({val} / {range_ms / 1000.0!r}D)"
+        val = f"({val} / {sql_double(range_ms / 1000.0)})"
     return val
 
 
 def _relabel_dropping_name(out: DataFrame) -> DataFrame:
-    """``_labels`` → ``labels`` with ``__name__`` dropped — the same
-    tree ``restrict_labels_expr(drop_name=True)`` builds (a
-    ``map_filter`` over an ``In`` check), parsed JVM-side in one call."""
+    """``_labels`` → ``labels`` with ``__name__`` dropped."""
     return out.selectExpr(
-        "*", "map_filter(_labels, (k, v) -> NOT (k IN ('__name__'))) AS labels"
+        "*", f"{restrict_labels_sql('_labels', drop_name=True)} AS labels"
     ).drop("_labels")
 
 
@@ -1218,8 +1172,11 @@ class Compiler:
             if val.const is not None:
                 return ScalarValue(const=-val.const)
             return ScalarValue(df=val.df.withColumn("v", -F.col("v")))
-        df = val.df.withColumn("v", -F.col("v")).withColumn("labels", _DROP_NAME())
-        return VectorValue(_vv(df))
+        return VectorValue(
+            val.df.selectExpr(
+                "step_t", f"{_DROP_NAME} AS labels", "-v AS v", "sample_t"
+            )
+        )
 
     # -- binary -------------------------------------------------------
     def _binary(self, node: BinaryExpr) -> Value:
@@ -1245,15 +1202,19 @@ class Compiler:
                     const=1.0 if _py_cmp(op, lv.const, rv.const) else 0.0
                 )
             return ScalarValue(const=_py_arith(op, lv.const, rv.const))
-        l = self.ctx.scalar_df(lv).withColumnRenamed("v", "_l")
-        r = self.ctx.scalar_df(rv).withColumnRenamed("v", "_r")
-        j = l.join(r, "step_t")
-        if op in COMPARISON_OPS:
-            # scalar comparisons always carry `bool` (typecheck enforces)
-            col = F.when(_ieee_cmp(op, F.col("_l"), F.col("_r")), 1.0).otherwise(0.0)
+        # at most one side is constant: it stays a literal (no join)
+        if lv.const is not None:
+            j, l, r = rv.df.withColumnRenamed("v", "_r"), sql_double(lv.const), "_r"
+        elif rv.const is not None:
+            j, l, r = lv.df.withColumnRenamed("v", "_l"), "_l", sql_double(rv.const)
         else:
-            col = _arith_col(op, F.col("_l"), F.col("_r"))
-        return ScalarValue(df=j.select("step_t", col.cast("double").alias("v")))
+            j = lv.df.withColumnRenamed("v", "_l").join(
+                rv.df.withColumnRenamed("v", "_r"), "step_t"
+            )
+            l, r = "_l", "_r"
+        # scalar comparisons always carry `bool` (typecheck enforces)
+        v_sql = _binop_sql(op, l, r)
+        return ScalarValue(df=j.selectExpr("step_t", f"CAST({v_sql} AS DOUBLE) AS v"))
 
     def _vector_scalar(
         self,
@@ -1267,25 +1228,21 @@ class Compiler:
         ``swapped`` means the scalar was the LHS."""
         df = vec.df
         if sc.const is not None:
-            s_col = F.lit(float(sc.const)).cast("double")
+            s_sql = sql_double(sc.const)
         else:
-            sdf = self.ctx.scalar_df(sc).withColumnRenamed("v", "_s")
+            sdf = sc.df.withColumnRenamed("v", "_s")
             df = df.join(F.broadcast(sdf), "step_t")
-            s_col = F.col("_s")
-        l, r = (s_col, F.col("v")) if swapped else (F.col("v"), s_col)
-        if op in COMPARISON_OPS:
-            pred = _ieee_cmp(op, l, r)
-            if return_bool:
-                out = df.withColumn(
-                    "v", F.when(pred, 1.0).otherwise(0.0).cast("double")
-                ).withColumn("labels", _DROP_NAME())
-            else:
-                out = df.filter(pred)
-        else:
-            out = df.withColumn("v", _arith_col(op, l, r)).withColumn(
-                "labels", _DROP_NAME()
-            )
-        return VectorValue(_vv(out))
+            s_sql = "_s"
+        l, r = (s_sql, "v") if swapped else ("v", s_sql)
+        if op in COMPARISON_OPS and not return_bool:
+            return VectorValue(_vv(df.filter(_ieee_cmp_sql(op, l, r))))
+        out = df.selectExpr(
+            "step_t",
+            f"{_DROP_NAME} AS labels",
+            f"CAST({_binop_sql(op, l, r)} AS DOUBLE) AS v",
+            "sample_t",
+        )
+        return VectorValue(out)
 
     def _set_op(
         self, op: str, lv: VectorValue, rv: VectorValue, matching
@@ -1295,13 +1252,8 @@ class Compiler:
         on = matching.matching_labels if (matching and matching.on) else None
         ignoring = matching.matching_labels if (matching and not matching.on) else ()
         sig_sql = signature_sql("labels", on=on, ignoring=ignoring)
-        if sig_sql is not None:  # batched SQL, PERF §13
-            l = lv.df.selectExpr("*", f"{sig_sql} AS _sig")
-            r = rv.df.selectExpr("*", f"{sig_sql} AS _sig")
-        else:
-            sig = signature_expr(F.col("labels"), on=on, ignoring=ignoring)
-            l = lv.df.withColumn("_sig", sig)
-            r = rv.df.withColumn("_sig", sig)
+        l = lv.df.selectExpr("*", f"{sig_sql} AS _sig")
+        r = rv.df.selectExpr("*", f"{sig_sql} AS _sig")
         if op == "and":
             out = l.join(
                 r.select("step_t", "_sig").distinct(), ["step_t", "_sig"], "left_semi"
@@ -1330,17 +1282,9 @@ class Compiler:
 
         on = matching.matching_labels if matching.on else None
         ignoring = matching.matching_labels if not matching.on else ()
-        # batched SQL strings when every involved label is a plain
-        # identifier — always true for parsed PromQL (PERF §13); the
-        # Column builders remain as the fallback for programmatic ASTs
         sig_sql = signature_sql("labels", on=on, ignoring=ignoring)
-        if sig_sql is not None:
-            mdf = many.df.selectExpr("*", f"{sig_sql} AS _sig")
-            odf = one.df.selectExpr("*", f"{sig_sql} AS _sig")
-        else:
-            sig = signature_expr(F.col("labels"), on=on, ignoring=ignoring)
-            mdf = many.df.withColumn("_sig", sig)
-            odf = one.df.withColumn("_sig", sig)
+        mdf = many.df.selectExpr("*", f"{sig_sql} AS _sig")
+        odf = one.df.selectExpr("*", f"{sig_sql} AS _sig")
 
         if self.ctx.strict:
             # Attach the raise to the JOIN KEY, not `v`: the key is
@@ -1388,62 +1332,28 @@ class Compiler:
             rl_sql = restrict_labels_sql("labels", drop_name=True)
         else:
             rl_sql = "labels"
-        from .model import _SQL_SAFE_LABEL
-
         for ln in matching.include:
-            if rl_sql is None or not _SQL_SAFE_LABEL.match(ln):
-                rl_sql = None
-                break
             rl_sql = _map_set_conditional_sql(
                 rl_sql,
                 ln,
-                f"coalesce(try_element_at(_olabels, '{ln}'), '')",
+                f"coalesce(try_element_at(_olabels, {sql_quote(ln)}), '')",
             )
-        if rl_sql is not None:
-            result_labels = F.expr(rl_sql)
-        else:  # non-identifier label name: Column fallback
-            result_labels = F.col("labels")
-            if card == VectorMatchCardinality.ONE_TO_ONE:
-                if matching.on:
-                    result_labels = restrict_labels_expr(
-                        F.col("labels"), keep=matching.matching_labels
-                    )
-                else:
-                    result_labels = restrict_labels_expr(
-                        F.col("labels"),
-                        drop=matching.matching_labels,
-                        drop_name=drop_name,
-                    )
-            elif drop_name:
-                result_labels = restrict_labels_expr(
-                    F.col("labels"), drop_name=True
-                )
-            for ln in matching.include:
-                result_labels = _map_set_conditional(
-                    result_labels,
-                    ln,
-                    F.coalesce(label_get(F.col("_olabels"), ln), F.lit("")),
-                )
 
-        if op in COMPARISON_OPS:
-            pred_sql = _ieee_cmp_sql(op, l_sql, r_sql)
-            if node.return_bool:
-                rv_sql = f"(CASE WHEN {pred_sql} THEN 1.0D ELSE 0.0D END)"
-            else:
-                # Filtered comparisons keep the ORIGINAL LHS value even
-                # under group_right: vectorElemBinop undoes the swap
-                # before applying the op (engine.go:1006-1010,1213-1225),
-                # so `a < on(x) group_right b` returns a's values.
-                j = j.filter(pred_sql)
-                rv_sql = l_sql
+        if op in COMPARISON_OPS and not node.return_bool:
+            # Filtered comparisons keep the ORIGINAL LHS value even
+            # under group_right: vectorElemBinop undoes the swap
+            # before applying the op (engine.go:1006-1010,1213-1225),
+            # so `a < on(x) group_right b` returns a's values.
+            j = j.filter(_ieee_cmp_sql(op, l_sql, r_sql))
+            rv_sql = l_sql
         else:
-            rv_sql = _arith_sql(op, l_sql, r_sql)
+            rv_sql = _binop_sql(op, l_sql, r_sql)
 
-        out = j.select(
+        out = j.selectExpr(
             "step_t",
             "_sig",
-            result_labels.alias("labels"),
-            F.expr(f"CAST({rv_sql} AS DOUBLE)").alias("v"),
+            f"{rl_sql} AS labels",
+            f"CAST({rv_sql} AS DOUBLE) AS v",
             "sample_t",
         )
         if self.ctx.strict:
@@ -1481,34 +1391,18 @@ class Compiler:
         assert isinstance(inner, VectorValue)
         df = inner.df
 
-        # batched SQL strings when the grouping labels are plain
-        # identifiers (always, for parsed PromQL) — PERF §13
         if node.without:
             rm_sql = restrict_labels_sql(
                 "labels", drop=node.grouping, drop_name=True
             )
         else:
             rm_sql = restrict_labels_sql("labels", keep=node.grouping)
-        if rm_sql is not None:
-            # one batched call; the duplicated restriction subtree in
-            # _gsig matches the pre-§13 Column version's shape
-            df = df.selectExpr(
-                "*",
-                f"{rm_sql} AS _gmap",
-                f"{canonical_labels_sql(rm_sql)} AS _gsig",
-            )
-        else:  # non-identifier label name: Column builders (no quoting)
-            if node.without:
-                result_map = restrict_labels_expr(
-                    F.col("labels"), drop=node.grouping, drop_name=True
-                )
-            else:
-                result_map = restrict_labels_expr(
-                    F.col("labels"), keep=node.grouping
-                )
-            df = df.withColumn("_gmap", result_map).withColumn(
-                "_gsig", canonical_labels_expr(F.col("_gmap"))
-            )
+        # one batched call (PERF §13)
+        df = df.selectExpr(
+            "*",
+            f"{rm_sql} AS _gmap",
+            f"{canonical_labels_sql(rm_sql)} AS _gsig",
+        )
 
         op = node.op
         if op in ("topk", "bottomk"):
@@ -1580,13 +1474,11 @@ class Compiler:
             # the grouping and hashes the metric AFTER lb.Set
             # (engine.go:1286-1294), so when the value label is itself
             # in by(...) the ORIGINAL value must not split groups.
-            df = df.withColumn("_vstr", _go_fmt(F.col("v"))).withColumn(
-                "_fmap",
-                _map_set_conditional(F.col("_gmap"), lbl, F.col("_vstr")),
+            df = df.withColumn("_vstr", _go_fmt(F.col("v"))).selectExpr(
+                "*", f"{_map_set_conditional_sql('_gmap', lbl, '_vstr')} AS _fmap"
             )
             grouped = df.groupBy(
-                "step_t",
-                canonical_labels_expr(F.col("_fmap")).alias("_fsig"),
+                "step_t", F.expr(canonical_labels_sql("_fmap")).alias("_fsig")
             ).agg(
                 F.first("_fmap").alias("labels"),
                 F.count(F.lit(1)).cast("double").alias("v"),
@@ -1734,7 +1626,7 @@ class Compiler:
         arg = self.compile(node.args[0])
         assert isinstance(arg, VectorValue)
         df = arg.df.withColumn("v", colfn(F.col("v")).cast("double")).withColumn(
-            "labels", _DROP_NAME()
+            "labels", F.expr(_DROP_NAME)
         )
         return VectorValue(_vv(df))
 
@@ -1799,7 +1691,7 @@ class Compiler:
             # is unguarded IEEE division (±0 → ±Inf, functions.go:332-350),
             # but Spark 4's ANSI mode makes `/` abort on a zero divisor —
             # so branch on zero and recover the zero's SIGN via the same
-            # pow trick _arith_col uses (signum(pow(±0, -1)) = ±1); the
+            # pow trick _arith_sql uses (signum(pow(±0, -1)) = ±1); the
             # inner when() keeps the live branch's divisor provably
             # nonzero so ANSI cannot fire there either
             arg = self.compile(node.args[0])
@@ -1826,7 +1718,7 @@ class Compiler:
         ).otherwise(F.floor(prod).cast("double"))
         out = (
             df.withColumn("v", (floored / inv_col).cast("double"))
-            .withColumn("labels", _DROP_NAME())
+            .withColumn("labels", F.expr(_DROP_NAME))
             .drop("_nearest")
         )
         return VectorValue(_vv(out))
@@ -1847,7 +1739,7 @@ class Compiler:
         bound = F.least(v, s_col) if is_max else F.greatest(v, s_col)
         newv = F.when(F.isnan(v) | F.isnan(s_col), _nan_lit()).otherwise(bound)
         out = df.withColumn("v", newv.cast("double")).withColumn(
-            "labels", _DROP_NAME()
+            "labels", F.expr(_DROP_NAME)
         )
         return VectorValue(_vv(out))
 
@@ -1957,7 +1849,7 @@ class Compiler:
             (F.coalesce(F.col("sample_t"), F.col("step_t")) / F.lit(1000.0)).cast(
                 "double"
             ),
-        ).withColumn("labels", _DROP_NAME())
+        ).withColumn("labels", F.expr(_DROP_NAME))
         return VectorValue(_vv(df))
 
     # ---- label manipulation ------------------------------------------
@@ -2006,13 +1898,12 @@ class Compiler:
                 )
             # unknown group name/number → expands to nothing (Expand)
         new_val = F.concat(*exprs) if exprs else F.lit("")
-        new_labels = F.when(
-            matched, _map_set_conditional(F.col("labels"), dst, new_val)
-        ).otherwise(F.col("labels"))
-        # `_m` is evaluated against the ORIGINAL labels (the `labels`
-        # column is only replaced in the next projection)
-        out = arg.df.withColumn("_m", matched).withColumn(
-            "labels", new_labels
+        # `_m` and `_nv` are evaluated against the ORIGINAL labels (the
+        # `labels` column is only replaced in the next projection)
+        out = arg.df.withColumns({"_m": matched, "_nv": new_val}).selectExpr(
+            "* EXCEPT (labels, _nv)",
+            f"CASE WHEN _m THEN {_map_set_conditional_sql('labels', dst, '_nv')} "
+            "ELSE labels END AS labels",
         )
         if self.ctx.strict:
             # the reference `continue`s past non-matching elements
@@ -2021,7 +1912,7 @@ class Compiler:
             # replaced set colliding with an untouched series is
             # silently kept (duplicate sets in the output and all)
             w = Window.partitionBy(
-                "step_t", canonical_labels_expr(F.col("labels"))
+                "step_t", F.expr(canonical_labels_sql("labels"))
             )
             mcnt = F.sum(F.col("_m").cast("int")).over(w)
             out = out.withColumn(
@@ -2060,14 +1951,15 @@ class Compiler:
             F.coalesce(label_get(F.col("labels"), s), F.lit("")) for s in srcs
         ]
         joined = F.concat_ws(sep, *parts) if parts else F.lit("")
-        out = arg.df.withColumn(
-            "labels", _map_set_conditional(F.col("labels"), dst, joined)
+        out = arg.df.withColumn("_nv", joined).selectExpr(
+            "* EXCEPT (labels, _nv)",
+            f"{_map_set_conditional_sql('labels', dst, '_nv')} AS labels",
         )
         if self.ctx.strict:
             # unlike label_replace, EVERY element enters the dup set
             # (functions.go:856-879): any output collision errors
             w = Window.partitionBy(
-                "step_t", canonical_labels_expr(F.col("labels"))
+                "step_t", F.expr(canonical_labels_sql("labels"))
             )
             out = out.withColumn("_c", F.count(F.lit(1)).over(w)).withColumn(
                 "v",
@@ -2118,7 +2010,7 @@ class Compiler:
         out = df.withColumn(
             "v",
             F.when(sane, colfn(ts).cast("double")).otherwise(_nan_lit()),
-        ).withColumn("labels", _DROP_NAME())
+        ).withColumn("labels", F.expr(_DROP_NAME))
         return VectorValue(_vv(out))
 
     def _fn_vector_of_time(self) -> DataFrame:
@@ -2718,7 +2610,7 @@ class Compiler:
             val = slope * kcol + intercept
         out = out.filter(F.col("_n") >= 2).select(
             "step_t",
-            restrict_labels_expr(F.col("_labels"), drop_name=True).alias("labels"),
+            F.expr(restrict_labels_sql("_labels", drop_name=True)).alias("labels"),
             val.cast("double").alias("v"),
             F.lit(None).cast("long").alias("sample_t"),
         )
@@ -2766,15 +2658,13 @@ class Compiler:
             # constant φ: the ∉[0,1] clamps resolve at compile time
             q = float(pv.const)
             if q < 0:
-                g = g.selectExpr("*", "CAST('-Infinity' AS DOUBLE) AS _hq")
+                g = g.selectExpr("*", f"{sql_double(-INF)} AS _hq")
             elif q > 1:
                 g = g.selectExpr("*", f"{_INF_SQL} AS _hq")
             else:
                 # q = NaN passes both clamps (comparisons false), like
-                # the reference — carry it as a NaN literal (a bare
-                # `nanD` would not parse)
-                q_sql = _NAN_SQL if math.isnan(q) else repr(q) + "D"
-                g = self._bucket_quantile_cols(g, q_sql)
+                # the reference
+                g = self._bucket_quantile_cols(g, sql_double(q))
         else:
             g, _ = self._scalar_col(pv, g, "_q")
             g = self._bucket_quantile_cols(g, "_q")

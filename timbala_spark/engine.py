@@ -29,7 +29,7 @@ from .compiler import (
     _base_scan,
     compile_query,
 )
-from .model import DEFAULT_LOOKBACK_MS, canonical_labels_expr, prepare_samples
+from .model import DEFAULT_LOOKBACK_MS, canonical_labels_sql, prepare_samples
 from .promql.ast import MatrixSelector, ParenExpr, ValueType
 from .promql.parser import parse
 
@@ -190,9 +190,7 @@ class Engine:
             if val.ordered:  # sort()/sort_desc() define the output order
                 return out
             if sorted_out:
-                return out.orderBy(
-                    canonical_labels_expr(F.col("labels")), F.col("t")
-                )
+                return out.orderBy(F.expr(canonical_labels_sql("labels")), "t")
             return out
         if isinstance(val, ScalarValue):
             sdf = ctx.scalar_df(val)
@@ -226,7 +224,7 @@ class Engine:
             F.col("v").cast("double").alias("v"),
         )
         if sorted_out:
-            return out.orderBy(canonical_labels_expr(F.col("labels")), F.col("t"))
+            return out.orderBy(F.expr(canonical_labels_sql("labels")), "t")
         return out
 
     # convenience for tests / smoke checks

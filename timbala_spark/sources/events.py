@@ -62,7 +62,7 @@ def events_to_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonical string ("__name__" < "user") with plain concat —
     # whole-stage-codegen — instead of the generic per-row
     # map-sort HOFs in series_id_expr (measured 53 s → much less for a
-    # 10M-row pivot; identical value to canonical_labels_expr)
+    # 10M-row pivot; identical value to canonical_labels_sql)
     canon = F.concat(
         F.lit("__name__" + SEP_KV),
         F.col("event_type"),

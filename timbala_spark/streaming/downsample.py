@@ -69,16 +69,16 @@ def streaming_downsample(
             F.first("labels").alias("_labels"),
         )
     )
-    from ..model import series_id_expr
+    from ..model import series_id_expr, sql_quote
 
-    name = F.concat(F.col("_name"), F.lit(record_suffix))
-    labels = F.map_concat(
-        F.map_filter(F.col("_labels"), lambda k, _v: k != F.lit("__name__")),
-        F.create_map(F.lit("__name__"), name),
+    name = f"concat(_name, {sql_quote(record_suffix)})"
+    labels = (
+        "map_concat(map_filter(_labels, (k, v) -> k != '__name__'), "
+        f"map('__name__', {name}))"
     )
     return out.select(
-        name.alias("name"),
-        labels.alias("labels"),
+        F.expr(name).alias("name"),
+        F.expr(labels).alias("labels"),
         # identity derives from the rollup's own label set (suffixed
         # name), not the raw series — rollup and raw series never alias
         series_id_expr(labels).alias("series_id"),
