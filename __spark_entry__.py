@@ -668,7 +668,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     docs = _tbl(spark, sf_dir, "documents")
 
     # build the incr cache FIRST: the probes inside open their own
-    # tracked-pin scope, which would evict the full branch's pins if
+    # pin scope, which would evict the full branch's pins if
     # the full operator ran first (the fan-out re-execution class of
     # PERF §20c take 8 — caught in the r9 self-review)
     key = ("ngram_incr", sf_dir)
@@ -881,7 +881,7 @@ def q_dedup_embedding(spark, sf_dir):
     surv = emb.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
 
     # build the incr cache FIRST: the probes inside open their own
-    # tracked-pin scope, which would evict the full branch's pins if
+    # pin scope, which would evict the full branch's pins if
     # the full operator ran first (same ordering rule as
     # q_dedup_ngram_jaccard)
     key = ("emb_incr", sf_dir)

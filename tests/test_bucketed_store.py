@@ -333,15 +333,3 @@ class TestAutoBucketLadder:
         )
         want = plain.join(d, "series_id").select(*got.columns)
         assert _hash(got) == _hash(want)
-
-    def test_env_auto(self, spark, store, monkeypatch):
-        from timbala_spark.streaming.compact import (
-            compact_store,
-            read_bucket_meta,
-        )
-        from timbala_spark.streaming.store import resolve_store
-
-        monkeypatch.setenv("TIMBALA_BUCKET_BY_SERIES", "auto")
-        compact_store(spark, store)
-        gdir = os.path.dirname(resolve_store(store).samples)
-        assert read_bucket_meta(gdir)["buckets"] == 4

@@ -542,6 +542,27 @@ class TestDedup:
         assert small_arm == big_arm
         assert {(0, 1000), (1, 1001)} <= {(a, b) for a, b, _ in small_arm}
 
+    def test_minhash_fold_and_codegen_arms_agree_on_twenty_docs(
+        self, spark, documents, tmp_path, monkeypatch
+    ):
+        """Default-tier sibling of the 66-row slow test: the fold and
+        codegen signature arms return the same pairs on 20 documents."""
+        from timbala_spark.pipeline import minhash_lsh_pairs
+
+        p = str(tmp_path / "docs")
+        documents.limit(16).union(
+            documents.limit(4).withColumn("doc_id", F.col("doc_id") + 1000)
+        ).write.parquet(p)
+        docs = spark.read.parquet(p)
+        arms = []
+        for cut in (str(1 << 40), "0"):
+            monkeypatch.setenv("TIMBALA_SMALL_CORPUS_BYTES", cut)
+            arms.append(
+                sorted(map(tuple, minhash_lsh_pairs(docs, threshold=0.5).collect()))
+            )
+        assert arms[0] == arms[1]
+        assert {(0, 1000), (1, 1001)} <= {(a, b) for a, b, _ in arms[0]}
+
     def test_simhash_votes_fast_path_matches_join_path(self, spark, documents):
         """r12: on token-filtered input, the assume_tokenized fast path
         (no ids left-join) must equal the join path row-for-row; and

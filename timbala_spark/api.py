@@ -88,9 +88,6 @@ class PromAPI:
     #: fresh PromAPI whenever the store changes, so nothing is ever
     #: served across snapshots.
     range_cache_rows: int = 2_000_000
-    #: widening quantum in seconds (None = auto: extent/4 clamped to
-    #: [60 s, 1 h], rounded up to a step multiple)
-    range_cache_quantum_s: float | None = None
     #: driver-boundedness guard for the metadata endpoints
     #: (label_values / series): they are the ONLY collects whose size
     #: is data-cardinality-bound rather than grid-bound, and at the
@@ -356,12 +353,7 @@ class PromAPI:
         t_ms = int(round(time * 1000))
         if t_ms % INSTANT_STEP_MS != 0:
             return None
-        quantum_ms = (
-            int(self.range_cache_quantum_s * 1000)
-            if self.range_cache_quantum_s is not None
-            else None
-        )
-        a, b = quantize_range(t_ms, t_ms, INSTANT_STEP_MS, quantum_ms)
+        a, b = quantize_range(t_ms, t_ms, INSTANT_STEP_MS)
         if (b - a) // INSTANT_STEP_MS > self.engine.max_points:
             return None
         # same keyspace as the range path on purpose: a 1 s-step range
@@ -401,12 +393,7 @@ class PromAPI:
         step_ms = int(round(step * 1000))
         if step_ms <= 0:
             return None
-        quantum_ms = (
-            int(self.range_cache_quantum_s * 1000)
-            if self.range_cache_quantum_s is not None
-            else None
-        )
-        a, b = quantize_range(start_ms, end_ms, step_ms, quantum_ms)
+        a, b = quantize_range(start_ms, end_ms, step_ms)
         if (b - a) // step_ms > self.engine.max_points:
             return None
         key = (query, step_ms, a, b)

@@ -76,6 +76,7 @@ from .promql.ast import (
     VectorMatching,
     VectorSelector,
 )
+from .rollup import SELECTOR, pick_rollup
 
 NAN = float("nan")
 INF = float("inf")
@@ -622,22 +623,19 @@ def compile_vector_selector(vs: VectorSelector, ctx: EvalContext) -> VectorValue
     float combine at all (:func:`_rollup_selector`); this is the most
     common dashboard class (instant selector + aggregation), so at the
     100 TB bar it is the read-path win that matters most."""
-    if ctx.rollups:
-        from .rollup import SELECTOR, pick_rollup
-
-        w = pick_rollup(
-            ctx.rollups,
-            ctx.lookback,
-            vs.offset_ms,
-            ctx.start,
-            ctx.step,
-            ctx.n_steps,
-            SELECTOR,
-        )
-        # pre-r8 rollup tables lack the marker columns — refuse rather
-        # than mis-handle staleness
-        if w is not None and "st_l" in ctx.rollups[w].columns:
-            return VectorValue(_rollup_selector(vs, ctx, w))
+    w = pick_rollup(
+        ctx.rollups,
+        ctx.lookback,
+        vs.offset_ms,
+        ctx.start,
+        ctx.step,
+        ctx.n_steps,
+        SELECTOR,
+    )
+    # pre-r8 rollup tables lack the marker columns — refuse rather
+    # than mis-handle staleness
+    if w is not None and "st_l" in ctx.rollups[w].columns:
+        return VectorValue(_rollup_selector(vs, ctx, w))
     lo = ctx.start - ctx.lookback - vs.offset_ms
     hi = ctx.end - vs.offset_ms
     base = _base_scan(ctx, vs.name, vs.matchers, lo, hi)
@@ -2049,31 +2047,28 @@ class Compiler:
     # ---- *_over_time -------------------------------------------------
     def _over_time(self, node, agg: dict[str, Column], final: Column) -> VectorValue:
         ms = self._matrix_arg(node.args[0] if node.func.name != "quantile_over_time" else node.args[1])
-        if self.ctx.rollups:
-            # opt-in EXACT rollup routing (timbala_spark.rollup): serve
-            # the decomposable *_over_time family from a registered
-            # downsampled table when its windows tile this query's
-            # inclusive ranges exactly; otherwise fall through to raw
-            from .rollup import pick_rollup
-
-            w = pick_rollup(
-                self.ctx.rollups,
-                ms.range_ms,
-                ms.offset_ms,
-                self.ctx.start,
-                self.ctx.step,
-                self.ctx.n_steps,
-                node.func.name,
+        # opt-in EXACT rollup routing (timbala_spark.rollup): serve the
+        # decomposable *_over_time family from a registered downsampled
+        # table when its windows tile this query's inclusive ranges
+        # exactly; otherwise fall through to raw
+        w = pick_rollup(
+            self.ctx.rollups,
+            ms.range_ms,
+            ms.offset_ms,
+            self.ctx.start,
+            self.ctx.step,
+            self.ctx.n_steps,
+            node.func.name,
+        )
+        if w is not None:
+            df = _rollup_combine(ms, self.ctx, w, node.func.name)
+            out = df.select(
+                "step_t",
+                "labels",
+                F.col("_v").alias("v"),
+                F.lit(None).cast("long").alias("sample_t"),
             )
-            if w is not None:
-                df = _rollup_combine(ms, self.ctx, w, node.func.name)
-                out = df.select(
-                    "step_t",
-                    "labels",
-                    F.col("_v").alias("v"),
-                    F.lit(None).cast("long").alias("sample_t"),
-                )
-                return VectorValue(out)
+            return VectorValue(out)
         df = _matrix_agg(ms, self.ctx, agg)
         out = df.select(
             "step_t",
@@ -2278,10 +2273,6 @@ class Compiler:
         of within-window pre-aggregates plus cross-window boundary
         drops reconstructed by the pair grid's lag. Returns None when
         no registered resolution tiles this query (→ raw path)."""
-        if not self.ctx.rollups:
-            return None
-        from .rollup import pick_rollup
-
         fn = "rate" if is_counter else "delta"
         w = pick_rollup(
             self.ctx.rollups,
@@ -2380,10 +2371,6 @@ class Compiler:
         so nothing can lie between present windows). The result is
         normalized into the raw kernel's ``_s`` struct so the
         arithmetic tail is shared verbatim."""
-        if not self.ctx.rollups:
-            return None
-        from .rollup import pick_rollup
-
         w = pick_rollup(
             self.ctx.rollups,
             ms.range_ms,
@@ -2458,10 +2445,6 @@ class Compiler:
         pre-aggregated at build time (``rst``/``chg``); the cross-window
         pair is evaluated with the SAME raw condition re-bound to
         (prev window's last value, next window's first value)."""
-        if not self.ctx.rollups:
-            return None
-        from .rollup import pick_rollup
-
         w = pick_rollup(
             self.ctx.rollups,
             ms.range_ms,

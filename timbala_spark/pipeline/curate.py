@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import connected_components, ngram_jaccard_pairs
-from .util import release_tracked, small_corpus, tracked_persist
+from .util import pin, pinning, release_pins, small_corpus
 
 #: Bounded-collect union-find opt-in for the pipeline's components
 #: stage (r11): near-dup pair graphs are a vanishing fraction of the
@@ -39,6 +39,7 @@ from .util import release_tracked, small_corpus, tracked_persist
 COMPONENTS_COLLECT_EDGES = 200_000
 
 
+@pinning
 def near_dup_pipeline(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -56,16 +57,15 @@ def near_dup_pipeline(
     # (the stop-shingle report, component-label seeding, the canonical
     # join) — unpinned, each would re-run the sha256 pass and the
     # digest shuffle over the whole corpus (PERF §20c take 3).
-    # Ids+digest are ~50 B/doc. This is the composition's OPENING pin:
-    # it releases the previous query's tracked frames.
-    ids = tracked_persist(ids, release_previous=True)
+    # Ids+digest are ~50 B/doc.
+    ids = pin(ids)
     reps = ids.groupBy("_digest").agg(F.min("_id").alias("_rep"))
     # reps feeds FOUR separate consumers (the doc→rep mapping, the
     # survivor text join, the component seed, components' final semi
     # join), several of them in their own actions — pin it (~40 B/doc)
     # so each reads a cache scan instead of re-running the digest
     # aggregation exchange (PERF §20c take 8)
-    reps = tracked_persist(reps, release_previous=False)
+    reps = pin(reps)
     # doc → exact representative (digest join: 32-byte key, never text)
     mapping = ids.join(reps, "_digest").select("_id", "_rep")
     survivors = (
@@ -79,7 +79,6 @@ def near_dup_pipeline(
         text_col=text_col,
         threshold=threshold,
         n=n,
-        _release_previous=False,  # keep the ids/reps pins above alive
         eager=True,  # pair list is consumed by 2 union branches +
         # the components loop: checkpoint it once, drop the
         # text/posting pins (PERF §20c take 8)
@@ -111,6 +110,7 @@ def near_dup_pipeline(
     )
 
 
+@pinning
 def curate_corpus(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
@@ -199,9 +199,9 @@ def curate_corpus(
         # shuffle files become reclaimable while the layout stages run
         cur = cur.localCheckpoint(eager=True)
         # past the checkpoint nothing recomputes the dedup lineage —
-        # drop its pins (digest map, reps, text, postings: ~15 GB of
-        # cache at 20M docs) before the scrub/layout stages run
-        release_tracked()
+        # drop this call's pins (digest map, reps, text, postings:
+        # ~15 GB of cache at 20M docs) before the scrub/layout stages
+        release_pins()
     out = (
         docs.join(cur, id_col)
         .filter(F.col("is_canonical") == 1)
@@ -259,10 +259,9 @@ def curate_corpus(
         # the whole dedup/scrub lineage (AQE re-plans per action, so
         # shuffle-stage reuse cannot be relied on — measured 3× the
         # end-to-end wall at 5M docs without this persist, PERF §20).
-        # release_previous=False: the dedup stages' own tracked
-        # persists may still back this lineage. (With ``scratch_dir``
-        # the lineage is just the parquet scan — the persist then only
-        # buys the quantile/subtotal passes a local read.)
-        out = tracked_persist(out, release_previous=False)
+        # (With ``scratch_dir`` the lineage is just the parquet scan —
+        # the persist then only buys the quantile/subtotal passes a
+        # local read.)
+        out = pin(out)
         out = pack_greedy(out, shard_budget, "n_tokens", id_col)
     return out

@@ -31,8 +31,10 @@ from .text import sliding_join_expr, tokens_expr
 from .util import (
     ensure_parallelism,
     hash64_expr,
+    pin,
+    pinning,
+    release_pins,
     small_corpus,
-    tracked_persist,
 )
 
 
@@ -91,6 +93,7 @@ def word_shingles_expr(text: Column, n: int, small: bool = False) -> Column:
 _DEFAULT_MAX_POSTINGS = 256
 
 
+@pinning
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -98,7 +101,6 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.2,
     max_postings: int | None = _DEFAULT_MAX_POSTINGS,
-    _release_previous: bool = True,
     eager: bool = False,
 ) -> DataFrame:
     """Exact Jaccard similarity over word n-gram sets for every pair of
@@ -174,17 +176,10 @@ def ngram_jaccard_pairs(
     # unknown size ⇒ big ⇒ full machinery.  Results are identical on
     # both paths — only actions and the cap log differ.
     small = small_corpus(df)
-    _local_pins: list[DataFrame] = []
-
-    def _pin(frame: DataFrame, release_previous: bool) -> DataFrame:
-        out = tracked_persist(frame, release_previous=release_previous)
-        _local_pins.append(out)
-        return out
-
     src = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     )
-    src = _pin(src, _release_previous)
+    src = pin(src)
     sh = src.select(
         "_id", word_shingles_expr(F.col("_text"), n, small=small).alias("_sh")
     ).withColumn("_n", F.size("_sh"))
@@ -208,7 +203,7 @@ def ngram_jaccard_pairs(
         # own action, and the candidate join consumes the table again —
         # without the pin each re-shingles the whole corpus (PERF §20c
         # take 7)
-        posting = _pin(posting, False)
+        posting = pin(posting)
         hot = (
             posting.groupBy("_s")
             .count()
@@ -222,7 +217,7 @@ def ngram_jaccard_pairs(
         # posting-wide agg ran twice per invocation).  `hot` is tiny
         # (over-cap shingles only), the agg over the pinned postings is
         # the expensive part.  Values unchanged — plan-shape only.
-        hot = _pin(hot, False)
+        hot = pin(hot)
         # fired-cap report, same contract as the LSH bucket cap:
         # a few boilerplate shingles are the design; most shingles
         # over-cap means the corpus is duplicate-dominated and the
@@ -285,7 +280,7 @@ def ngram_jaccard_pairs(
             # 5k-doc bench corpus (r9 A/B on dedup_pipeline)
             cand = cand.localCheckpoint(eager=True)
         else:
-            cand = _pin(cand, False)
+            cand = pin(cand)
         # Semi-join reduction BEFORE the verify joins (r8, PERF §20c):
         # only documents that appear in some candidate pair need their
         # shingle ARRAYS at verify time — on a mostly-unique corpus
@@ -324,7 +319,7 @@ def ngram_jaccard_pairs(
         # invocation's heaviest duplicate jobs).  Candidate-reduced, so
         # the pin is small by design at every scale — the same pin the
         # incremental probe's _verify_pairs has always taken.
-        sh_c = _pin(sh_c, False)
+        sh_c = pin(sh_c)
         out = (
             cand.join(
                 sh_c.select(
@@ -372,15 +367,10 @@ def ngram_jaccard_pairs(
     )
     if eager:
         # one execution of the candidate machinery, then the pair list
-        # (ids + a double — tiny) is storage-backed and the text/
-        # posting pins are dead weight; entries left in the tracked
-        # registry are harmless (double-unpersist is a no-op)
+        # (ids + a double — tiny) is storage-backed and this call's
+        # text/posting pins are dead weight (a caller's stay pinned)
         result = result.localCheckpoint(eager=True)
-        for p in _local_pins:
-            try:
-                p.unpersist(blocking=False)
-            except Exception:
-                pass
+        release_pins()
     return result
 
 
@@ -536,6 +526,7 @@ def minhash_params_for(threshold: float, num_hashes: int = 64) -> int:
     return best
 
 
+@pinning
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -588,7 +579,7 @@ def minhash_lsh_pairs(
         base = base.withColumn(
             "_hs", F.transform(F.col("_sh"), lambda s: hash64_expr(s, hash_algo))
         ).withColumn("_sig", minhash_signature_expr(F.col("_hs"), num_hashes))
-    base = tracked_persist(base)
+    base = pin(base)
     # a document too short/empty to shingle has no MinHash (min over
     # an empty set) and no Jaccard (0/0 — would ANSI-abort the
     # verify): it generates no candidates, same as the n-gram path
@@ -611,10 +602,7 @@ def minhash_lsh_pairs(
         # big arm: the codegen signature aggregation, pinned — the band
         # self-join reads it on both sides (ids + 64 longs ≈ 520 B/row,
         # far smaller than the small arm's _hs/_sig pin).
-        sigs = tracked_persist(
-            _minhash_sigs_by_id(base, num_hashes, hash_algo),
-            release_previous=False,
-        )
+        sigs = pin(_minhash_sigs_by_id(base, num_hashes, hash_algo))
         banded = sigs.select(
             "_id",
             F.explode(
@@ -676,6 +664,7 @@ _LSH_VS_BLAS_PAIR_COST = 64
 _DEFAULT_MAX_BUCKET_ROWS = 2048
 
 
+@pinning
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -740,7 +729,7 @@ def embedding_near_dup_pairs(
     e = ensure_parallelism(df).select(
         F.col(id_col).alias("_id"), as_double_array(F.col(vec_col)).alias("_v")
     ).withColumn("_norm", norm_sql("_v", dim))
-    e = tracked_persist(e)
+    e = pin(e)
     if mode == "auto":
         import logging
 
@@ -917,7 +906,7 @@ def embedding_near_dup_pairs(
         # through it multiplies the shuffle by the embedding width ×
         # duplicate bucket hits (OOMed at sf0.1); vectors are
         # re-attached per distinct pair afterwards.
-        banded = tracked_persist(banded, release_previous=False)
+        banded = pin(banded)
         if max_bucket_rows is not None:
             # stop-bucket exclusion, mirroring the n-gram stop-shingle
             # cap: an over-cap (table, bucket) cell generates no
@@ -932,10 +921,10 @@ def embedding_near_dup_pairs(
             # execute once per side (r12: the plan showed the
             # HashAggregate+Exchange subtree twice — the same
             # duplicated-subtree shape as the n-gram stop-shingle pin
-            # at `_pin(hot, False)` above).  `cells` is one row per
+            # at `pin(hot)` above).  `cells` is one row per
             # (table, bucket) cell — tiny next to `banded` — so pin it
             # on both arms; the pin is lazy and adds no action job.
-            cells = tracked_persist(cells, release_previous=False)
+            cells = pin(cells)
             hot = cells.filter(F.col("count") > max_bucket_rows).select(
                 "_tbl", "_bkt"
             )
@@ -1311,6 +1300,7 @@ def with_simhash(
     )
 
 
+@pinning
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1348,7 +1338,7 @@ def simhash_pairs(
         # invocation (r12; plan: 16 -> fewer Exchange, one join gone)
         assume_tokenized=True,
     ).withColumnRenamed("_sh_id", "_id")
-    h = tracked_persist(h)
+    h = pin(h)
     mask = (1 << band_bits) - 1
     banded = h.select(
         "_id",

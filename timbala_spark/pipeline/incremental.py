@@ -99,7 +99,7 @@ from .dedup import (
     minhash_signature_expr,
     word_shingles_expr,
 )
-from .util import ensure_parallelism, small_corpus, tracked_persist
+from .util import ensure_parallelism, pin, pinning, small_corpus
 
 _META = "_index_meta.json"
 
@@ -448,7 +448,7 @@ def _verify_pairs(
     )
     # pinned: sh feeds both sides of the pair join; its lineage holds
     # the corpus semi-join, which must not run twice
-    sh = tracked_persist(sh, release_previous=False)
+    sh = pin(sh)
     return (
         cand.join(
             sh.select(
@@ -577,6 +577,7 @@ def ngram_index_append(
     )
 
 
+@pinning
 def ngram_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -615,8 +616,8 @@ def ngram_index_probe(
 
     bpost = _ngram_postings(batch, id_col, text_col, n, algo)
     # pinned: feeds the degree count, the cross join and the
-    # within-batch join (opens the query's tracked-pin scope)
-    bpost = tracked_persist(bpost)
+    # within-batch join
+    bpost = pin(bpost)
     bkeys = bpost.select(F.col("_s").alias("s")).distinct()
     if batch_broadcast:
         bkeys = F.broadcast(bkeys)
@@ -647,7 +648,7 @@ def ngram_index_probe(
     # unpinned, each consumer re-executes the index scan (the fan-out
     # re-execution lesson of PERF §20c take 8, which this module
     # exists to apply)
-    matched = tracked_persist(matched, release_previous=False)
+    matched = pin(matched)
 
     if max_postings is not None:
         # global degree = index degree + batch degree, per shingle —
@@ -668,7 +669,7 @@ def ngram_index_probe(
         # unpinned, the union+aggregation executes once per broadcast
         # build (r12, same duplicated-subtree shape as the batch
         # operator's stop-shingle pin).  Over-cap shingles only — tiny.
-        hot = tracked_persist(hot, release_previous=False)
+        hot = pin(hot)
         matched = matched.join(F.broadcast(hot), "s", "left_anti")
         bpost_c = bpost.join(
             F.broadcast(hot).withColumnRenamed("s", "_s"), "_s", "left_anti"
@@ -809,6 +810,7 @@ def minhash_index_append(
     )
 
 
+@pinning
 def minhash_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -840,7 +842,7 @@ def minhash_index_probe(
         meta["hash_algo"],
     )
     # pinned: feeds the key set, the cross join and the within join
-    bb = tracked_persist(bb)
+    bb = pin(bb)
     bkeys = bb.select(
         F.col("_band").alias("band"), F.col("_bucket").alias("bucket")
     ).distinct()
@@ -857,7 +859,7 @@ def minhash_index_probe(
         .join(F.broadcast(b_ids), "_oid", "left_anti")
         .dropDuplicates(["_oid", "band", "bucket"])  # see ngram probe
     )
-    matched = tracked_persist(matched, release_previous=False)
+    matched = pin(matched)
     cross = (
         matched.join(
             bb.select(
@@ -1117,7 +1119,7 @@ def _verify_cosine(
     )
     # pinned: v feeds both sides of the pair join (same fan-out rule
     # as _verify_pairs)
-    v = tracked_persist(v, release_previous=False)
+    v = pin(v)
     return (
         cand.join(
             v.select(
@@ -1238,6 +1240,7 @@ def embedding_index_append(
     )
 
 
+@pinning
 def embedding_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -1283,7 +1286,7 @@ def embedding_index_probe(
     )
     # pinned: feeds the key set, the degree count, the cross join and
     # the within join
-    bb = tracked_persist(bb)
+    bb = pin(bb)
     bkeys = bb.select(
         F.col("_tbl").alias("tbl"), F.col("_bkt").alias("bkt")
     ).distinct()
@@ -1298,7 +1301,7 @@ def embedding_index_probe(
         .join(F.broadcast(b_ids), "_oid", "left_anti")
         .dropDuplicates(["_oid", "tbl", "bkt"])  # see ngram probe
     )
-    matched = tracked_persist(matched, release_previous=False)
+    matched = pin(matched)
 
     if max_bucket_rows is not None and max_bucket_rows > 0:
         # global cell size = index rows + batch rows per (tbl, bkt) —
@@ -1322,7 +1325,7 @@ def embedding_index_probe(
         # unpinned, the union+aggregation executes once per broadcast
         # build (r12, same duplicated-subtree shape as the batch
         # operator's cell pin).  Over-cap cells only — tiny.
-        hot = tracked_persist(hot, release_previous=False)
+        hot = pin(hot)
         matched = matched.join(F.broadcast(hot), ["tbl", "bkt"], "left_anti")
         bb_c = bb.join(
             F.broadcast(hot)

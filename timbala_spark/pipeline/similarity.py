@@ -20,7 +20,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .util import ensure_parallelism, tracked_persist
+from .util import ensure_parallelism, pin, pinning
 
 
 def as_double_array(col: Column) -> Column:
@@ -326,6 +326,7 @@ def lsh_cosine_topk(
     )
 
 
+@pinning
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -356,7 +357,7 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"),
         as_double_array(F.col(vec_col)).alias("_cv"),
     )
-    c = tracked_persist(c)
+    c = pin(c)
     init = [
         r["_cv"]
         for r in c.orderBy("neighbor_id").limit(n_cells).collect()

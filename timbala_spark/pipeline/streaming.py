@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .text import tokens_expr
+from .util import release_pins
 
 
 def streaming_exact_dedup(
@@ -622,7 +623,7 @@ def streaming_near_dup(
     if auto_ladder and kind != "embedding":
         raise ValueError('n_planes="auto" applies to kind="embedding"')
 
-    def _process(batch_df, batch_id):
+    def _process_batch(batch_df, batch_id):
         from ..streaming.backend import get_backend
 
         spark = batch_df.sparkSession
@@ -755,6 +756,14 @@ def streaming_near_dup(
             # generation this batch — nothing left to fold)
             if not climbed:
                 index_compact(spark, index_dir)
+
+    def _process(batch_df, batch_id):
+        # the next batch may run on another callback thread, so this
+        # batch's pins go when it returns (its outputs are checkpointed)
+        try:
+            _process_batch(batch_df, batch_id)
+        finally:
+            release_pins()
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint

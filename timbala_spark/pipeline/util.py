@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import functools
 import re
+import threading
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -55,43 +57,77 @@ def hash64_expr(c: Column, algo: str = "xxhash64") -> Column:
         return F.shiftleft(hi, 32).bitwiseOR(lo)
     raise ValueError(f"unknown hash64 algo {algo!r}")
 
-#: DataFrames persisted by pipeline operators, kept so a long session
-#: running many pipeline queries does not leak block-manager memory.
-_TRACKED: list[DataFrame] = []
+#: Each thread's pins (:func:`pin`) as a stack of lists: one per live
+#: :func:`pinning` call, innermost last, above the pins of the thread's
+#: last finished call, which the lazy frame it returned still reads.
+#: The dict is guarded by ``_PINS_LOCK``; a stack is touched only by
+#: its own thread, until the thread exits and a sweep takes it.
+_PINS: dict[threading.Thread, list[list[DataFrame]]] = {}
+_PINS_LOCK = threading.Lock()
 
 
-def tracked_persist(df: DataFrame, release_previous: bool = True) -> DataFrame:
-    """``persist()`` with lifecycle tracking.
+def _pin_stack() -> list[list[DataFrame]]:
+    with _PINS_LOCK:
+        return _PINS.setdefault(threading.current_thread(), [[]])
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    while frames:
+        try:
+            frames.pop().unpersist(blocking=False)
+        except Exception:
+            pass  # session already stopped
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``persist()`` owned by the calling thread's current
+    :func:`pinning` call.
 
     Sketch/signature stages feed several plan branches and must be
-    persisted (PERF.md §7), but each contract query is consumed once —
-    holding every query's blocks for the whole session piles up
+    persisted (PERF.md §7), but each pipeline result is consumed once —
+    holding every call's blocks for the whole session piles up
     executor memory and GC pressure (measured: a warmed 1 s query
-    degrading to 11 s after a dozen persist-leaking queries).
-    ``tracked_persist`` releases the *previous* operators' blocks
-    before pinning the new stage, bounding resident persisted data to
-    the live query. Results already returned to callers stay correct —
-    re-consuming one simply recomputes its lineage.
-
-    ``release_previous=False`` chains a second persist within the SAME
-    query (e.g. the normalized-vector frame AND the LSH signature frame
-    both feed multiple branches); the pair is released together when the
-    next query's first tracked_persist runs.
-    """
-    if release_previous:
-        release_tracked()
+    degrading to 11 s after a dozen persist-leaking queries).  So the
+    first pin made inside an outermost call releases the pins of the
+    thread's previous call and those of threads that have exited.  A
+    nested call never releases its caller's pins, and no call touches
+    another live thread's.  A result already returned stays correct
+    after its pins go: re-consuming it recomputes its lineage."""
+    stack = _pin_stack()
+    if len(stack) > 1:
+        with _PINS_LOCK:
+            gone = [_PINS.pop(t) for t in list(_PINS) if not t.is_alive()]
+        for dead in gone:
+            _unpersist(dead[0])
+        _unpersist(stack[0])
     out = df.persist()
-    _TRACKED.append(out)
+    stack[-1].append(out)
     return out
 
 
-def release_tracked() -> None:
-    """Unpersist every tracked stage (non-blocking)."""
-    while _TRACKED:
+def pinning(fn):
+    """Marks a public operator that pins: the pins made inside a call,
+    by it or by the calls nested in it, belong to the outermost call
+    (see :func:`pin`)."""
+
+    @functools.wraps(fn)
+    def call(*args, **kwargs):
+        stack = _pin_stack()
+        stack.append([])
         try:
-            _TRACKED.pop().unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped
+            return fn(*args, **kwargs)
+        finally:
+            mine = stack.pop()
+            stack[-1].extend(mine)
+
+    return call
+
+
+def release_pins() -> None:
+    """Unpersist the current call's pins: those made inside it and
+    inside the calls it has returned from.  Outside any call, those of
+    the thread's last call."""
+    _unpersist(_pin_stack()[-1])
 
 
 #: Shared small-corpus gate threshold (see :func:`small_corpus`).

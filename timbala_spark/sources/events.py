@@ -21,10 +21,9 @@ USER_BUCKETS = 8
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # the events table carries nanosecond parquet timestamps, which
-        # Spark only reads with the nanosAsLong escape hatch
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """The ``events`` table carries nanosecond parquet timestamps, which
+    Spark reads only with ``spark.sql.legacy.parquet.nanosAsLong`` on:
+    session setup sets it (``__spark_entry__._setup``)."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

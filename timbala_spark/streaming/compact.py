@@ -233,15 +233,8 @@ def compact_store(
     count from the source series dictionary's distinct-series count on
     the power-of-two ladder (:func:`auto_bucket_count`): stable within
     a rung (incremental composes), one sanctioned full re-bucket when
-    growth crosses a rung.  Defaults to the
-    ``TIMBALA_BUCKET_BY_SERIES`` env var (0/unset = off, ``auto`` =
-    the ladder) so the store suites can run wholesale with the option
-    on."""
-    if bucket_by_series is None:
-        _env = os.environ.get("TIMBALA_BUCKET_BY_SERIES", "0")
-        bucket_by_series = (
-            "auto" if _env == "auto" else (int(_env) or None)
-        )
+    growth crosses a rung.  ``None`` (the default) writes the plain
+    layout."""
     with maintenance_lock(path, timeout_s=lock_timeout_s):
         _compact_locked(
             spark,
