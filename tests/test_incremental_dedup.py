@@ -655,6 +655,32 @@ class TestBatchBroadcastOff:
         assert von and von == voff
 
 
+    @pytest.mark.parametrize("kind", ["ngram", "minhash", "embedding"])
+    def test_each_kind_identical(self, spark, tmp_path, kind):
+        """The fast sibling of the test above, over every index kind
+        on ≤40-row inputs: broadcast on == off, with pairs to find."""
+        from timbala_spark.pipeline import incremental as inc
+
+        if kind == "embedding":
+            rows = _vec_rows(seed=41, n=32)
+            mk, pairs, thr, build_kw = _mk_vecs, _cos_pairs_set, 0.99, _EMB_KW
+        else:
+            rows = _corpus(seed=37, n_docs=32)
+            mk, pairs, thr = _mk_docs, _pairs_set, 0.2
+            build_kw = dict(n=3)
+            if kind == "minhash":
+                build_kw.update(num_hashes=32, bands=16)
+        corpus = mk(spark, rows)
+        d = str(tmp_path / kind)
+        getattr(inc, f"{kind}_index_build")(corpus, d, **build_kw)
+        probe = getattr(inc, f"{kind}_index_probe")
+        batch = mk(spark, [(1000, rows[0][1]), (1001, rows[8][1])])
+        kw = dict(corpus=corpus.unionByName(batch), threshold=thr)
+        on = pairs(probe(batch, d, **kw))
+        off = pairs(probe(batch, d, batch_broadcast=False, **kw))
+        assert on and on == off
+
+
 class TestEmbeddingProbePlan:
     def test_probe_reads_only_candidate_vectors(self, spark, tmp_path):
         """The embedding probe must not re-sign or re-read the corpus:

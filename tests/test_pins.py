@@ -221,3 +221,115 @@ def test_registry_under_thread_churn():
     assert len(made) == 16 * 200 * 4
     outer()
     assert not any(f.cached for f in made)
+
+
+class _SharedFrame:
+    """Stands in for a DataFrame whose plan is one of a few: frames of
+    one plan share one cache entry, as in Spark's CacheManager."""
+
+    cache: dict = {}
+
+    def __init__(self, key):
+        self.key = key
+
+    def semanticHash(self):
+        return self.key
+
+    @property
+    def cached(self):
+        return self.cache.get(self.key, False)
+
+    def persist(self):
+        self.cache[self.key] = True
+        return self
+
+    def unpersist(self, blocking=False):
+        self.cache[self.key] = False
+
+
+def test_shared_plans_under_thread_churn():
+    """Many threads pinning the same few plans, with a short switch
+    interval: no release ever drops a cache entry that a live pin on
+    another thread still holds, and once every pin is released every
+    entry is gone."""
+    from timbala_spark.pipeline.util import pin, pinning, release_pins
+
+    keys = [("shared-plan", i) for i in range(3)]
+
+    @pinning
+    def call():
+        mine = [pin(_SharedFrame(k)) for k in keys]
+        assert all(f.cached for f in mine)
+        return mine
+
+    errors = []
+
+    def work():
+        try:
+            for _ in range(200):
+                cur = call()
+                assert all(f.cached for f in cur)
+        except BaseException as e:
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    call()  # sweeps the exited threads' pins
+    release_pins()
+    assert not any(_SharedFrame.cache[k] for k in keys)
+
+
+def test_identical_plans_on_two_threads_share_one_cache_entry(spark, pins):
+    """Two threads pin identical plans, which Spark caches as ONE
+    entry: B releasing its pins (its next call) must not unpersist the
+    frames A's unread result still reads."""
+    from timbala_spark.pipeline import simhash_pairs
+
+    a_pinned, b_done = threading.Event(), threading.Event()
+    out, errors = {}, []
+
+    def run_a():
+        try:
+            res = simhash_pairs(_docs(spark, 6, 2), max_hamming=0)
+            a_pinned.set()
+            assert b_done.wait(300)
+            out["a"] = _rows(res)
+        except BaseException as e:  # surfaced by the main thread
+            errors.append(e)
+            a_pinned.set()
+
+    def run_b():
+        try:
+            assert a_pinned.wait(300)
+            simhash_pairs(_docs(spark, 6, 2), max_hamming=0)
+            simhash_pairs(_docs(spark, 7, 2), max_hamming=0)  # releases
+            out["a_pins_cached"] = [
+                _cached(f) for t, f in list(pins) if t == "share-a"
+            ]
+        except BaseException as e:
+            errors.append(e)
+        finally:
+            b_done.set()
+
+    threads = [
+        threading.Thread(target=run_a, name="share-a"),
+        threading.Thread(target=run_b, name="share-b"),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert out["a_pins_cached"] and all(out["a_pins_cached"])
+    assert {(0, 1000), (1, 1001)} <= {r[:2] for r in out["a"]}

@@ -93,6 +93,40 @@ def word_shingles_expr(text: Column, n: int, small: bool = False) -> Column:
 _DEFAULT_MAX_POSTINGS = 256
 
 
+def _jaccard_verify(
+    cand: DataFrame, sh: DataFrame, threshold: float, sets: bool = True
+) -> DataFrame:
+    """The exact-Jaccard verify tail of ``ngram_jaccard_pairs``,
+    ``minhash_lsh_pairs`` and the incremental text probes: ``cand``
+    (id_a, id_b) joined on both ends to ``sh`` (_id, _sh, _n) — a
+    document's shingle set and its size — then |a ∩ b| / |a ∪ b| ≥
+    ``threshold``.  ``sets=False``: ``cand`` already carries
+    ``_shared`` and ``sh`` is (_id, _n) (the uncapped n-gram count
+    path).  Returns (id_a, id_b, jaccard)."""
+
+    def side(s: str) -> DataFrame:
+        return sh.select(
+            F.col("_id").alias(f"id_{s}"),
+            *([F.col("_sh").alias(f"_sh{s}")] if sets else []),
+            F.col("_n").alias(f"_n{s}"),
+        )
+
+    out = cand.join(side("a"), "id_a").join(side("b"), "id_b")
+    if sets:
+        out = out.withColumn(
+            "_shared", F.size(F.array_intersect("_sha", "_shb"))
+        )
+    return (
+        out.withColumn(
+            "jaccard",
+            F.col("_shared")
+            / (F.col("_na") + F.col("_nb") - F.col("_shared")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 @pinning
 def ngram_jaccard_pairs(
     df: DataFrame,
@@ -318,53 +352,17 @@ def ngram_jaccard_pairs(
         # computation (job audit: the two ~KB/doc array passes were the
         # invocation's heaviest duplicate jobs).  Candidate-reduced, so
         # the pin is small by design at every scale — the same pin the
-        # incremental probe's _verify_pairs has always taken.
+        # incremental text probes take.
         sh_c = pin(sh_c)
-        out = (
-            cand.join(
-                sh_c.select(
-                    F.col("_id").alias("id_a"),
-                    F.col("_sh").alias("_sha"),
-                    F.col("_n").alias("_na"),
-                ),
-                "id_a",
-            )
-            .join(
-                sh_c.select(
-                    F.col("_id").alias("id_b"),
-                    F.col("_sh").alias("_shb"),
-                    F.col("_n").alias("_nb"),
-                ),
-                "id_b",
-            )
-            .withColumn(
-                "_shared", F.size(F.array_intersect("_sha", "_shb"))
-            )
-        )
+        result = _jaccard_verify(cand, sh_c, threshold)
     else:
-        sizes = sh.select("_id", "_n")
         shared = (
             a.join(b, "_s")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("_shared"))
         )
-        out = shared.join(
-            sizes.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na")),
-            "id_a",
-        ).join(
-            sizes.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb")),
-            "id_b",
-        )
-    result = (
-        out.withColumn(
-            "jaccard",
-            F.col("_shared")
-            / (F.col("_na") + F.col("_nb") - F.col("_shared")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+        result = _jaccard_verify(shared, sh, threshold, sets=False)
     if eager:
         # one execution of the candidate machinery, then the pair list
         # (ids + a double — tiny) is storage-backed and this call's
@@ -625,27 +623,7 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    sh_a = base.select(
-        F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"), F.col("_n").alias("_na")
-    )
-    sh_b = base.select(
-        F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"), F.col("_n").alias("_nb")
-    )
-    verified = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "_shared", F.size(F.array_intersect(F.col("_sha"), F.col("_shb")))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("_shared")
-            / (F.col("_na") + F.col("_nb") - F.col("_shared")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
+    return _jaccard_verify(cand, base, threshold)
 
 
 #: blocked mode evaluates all pairs but at BLAS (vector-instruction)
@@ -662,6 +640,42 @@ _LSH_VS_BLAS_PAIR_COST = 64
 #: recall-only because a true pair needs just one non-degenerate
 #: collision among the independent tables.
 _DEFAULT_MAX_BUCKET_ROWS = 2048
+
+
+def _cosine_verify(
+    pairs: DataFrame | None, v: DataFrame, threshold: float, dim: int
+) -> DataFrame:
+    """The exact-cosine verify tail of ``embedding_near_dup_pairs``
+    and the incremental vector probe: ``pairs`` (id_a, id_b) — or
+    ``None`` for every pair (the exact mode's cross join) — joined on
+    both ends to ``v`` (_id, _v, _norm), scored by the guarded unrolled
+    dot kernel (``similarity.dot_sql``: bit-identical to the fold at
+    every width, 3.8× per row) and kept at cos ≥ ``threshold``.
+    Returns (id_a, id_b, cos)."""
+    from .similarity import cosine_from_parts, dot_sql
+
+    a = v.select(
+        F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
+        F.col("_norm").alias("_na"),
+    )
+    b = v.select(
+        F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
+        F.col("_norm").alias("_nb"),
+    )
+    if pairs is None:
+        cand = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    else:
+        cand = pairs.join(a, "id_a").join(b, "id_b")
+    return (
+        cand.withColumn(
+            "cos",
+            cosine_from_parts(
+                dot_sql("_va", "_vb", dim), F.col("_na"), F.col("_nb")
+            ),
+        )
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
+    )
 
 
 @pinning
@@ -717,7 +731,7 @@ def embedding_near_dup_pairs(
       (planes, tables) and a default bucket cap. The decision is
       logged (``timbala_spark.pipeline.dedup`` logger).
     """
-    from .similarity import as_double_array, dot_sql, norm_sql, _planes
+    from .similarity import as_double_array, norm_sql
 
     # norm once per row (bit-identical to computing it per pair; see the
     # cosine_topk note) — the per-pair cost is a single dot kernel.
@@ -763,15 +777,7 @@ def embedding_near_dup_pairs(
                 n_corpus, threshold, n_planes, n_tables, sel, max_bucket_rows,
             )
     if mode == "exact":
-        a = e.select(
-            F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
-            F.col("_norm").alias("_na"),
-        )
-        b = e.select(
-            F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
-            F.col("_norm").alias("_nb"),
-        )
-        cand = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+        pair_ids = None
     elif mode == "blocked":
         import numpy as np
         from pyspark.sql.types import LongType, StructField, StructType
@@ -829,19 +835,6 @@ def embedding_near_dup_pairs(
                 [StructField("id_a", LongType()), StructField("id_b", LongType())]
             ),
         )
-        cand = pair_ids.join(
-            e.select(
-                F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
-                F.col("_norm").alias("_na"),
-            ),
-            "id_a",
-        ).join(
-            e.select(
-                F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
-                F.col("_norm").alias("_nb"),
-            ),
-            "id_b",
-        )
     elif mode == "lsh":
         if max_bucket_rows is None:
             # VERDICT r6: explicit LSH used to leave buckets uncapped,
@@ -873,32 +866,11 @@ def embedding_near_dup_pairs(
             n_planes = n_planes if n_planes is not None else p_auto
             n_tables = n_tables if n_tables is not None else t_auto
         # ONE pass computes every table's bucket (explode of a struct
-        # array, same shape as minhash banding) — the previous
-        # one-branch-per-table union re-scanned the source and re-ran
-        # the array conversion n_tables times. Values are identical:
-        # lsh_bucket_expr over the same planes, just evaluated in a
-        # single projection.
-        from .similarity import lsh_bucket_sql
+        # array, same shape as minhash banding) — the construction the
+        # embedding index persists
+        from .similarity import _lsh_banded
 
-        banded = e.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("_tbl"),
-                            # string-built fold (r11): one F.expr parse
-                            # per table vs a py4j Column forest —
-                            # value-identical, see lsh_bucket_sql
-                            lsh_bucket_sql(
-                                "_v", _planes(dim, n_planes, seed + t)
-                            ).alias("_bkt"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("_tb"),
-        ).select("_id", F.col("_tb._tbl").alias("_tbl"), F.col("_tb._bkt").alias("_bkt"))
+        banded = _lsh_banded(e, "_v", ["_id"], dim, n_planes, n_tables, seed)
         # bucket signatures (n_tables × n_planes dot products per row)
         # feed both sides of the self-join — persist (see
         # minhash_lsh_pairs note; chained with `e`'s persist above).
@@ -981,35 +953,9 @@ def embedding_near_dup_pairs(
             )
             .dropDuplicates(["id_a", "id_b"])
         )
-        cand = pair_ids.join(
-            e.select(
-                F.col("_id").alias("id_a"), F.col("_v").alias("_va"),
-                F.col("_norm").alias("_na"),
-            ),
-            "id_a",
-        ).join(
-            e.select(
-                F.col("_id").alias("id_b"), F.col("_v").alias("_vb"),
-                F.col("_norm").alias("_nb"),
-            ),
-            "id_b",
-        )
     else:
         raise ValueError(f"unknown mode {mode!r}")
-    from .similarity import cosine_from_parts
-
-    return (
-        cand.withColumn(
-            "cos",
-            cosine_from_parts(
-                dot_sql("_va", "_vb", dim),
-                F.col("_na"),
-                F.col("_nb"),
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
+    return _cosine_verify(pair_ids, e, threshold, dim)
 
 
 def connected_components(

@@ -34,6 +34,22 @@ treatment:
   (compaction: drops deleted docs, re-applies current parameters),
   with the old generation removed only after the meta pointer moves.
 
+The protocol is written ONCE, over a modality table (``_MODALITIES``
+at the end of the module): one ``_Modality`` entry per kind —
+n-gram postings, MinHash bands, embedding hyperplane buckets — names
+the kind's physical row schema (id column + key columns), its row
+builder, its meta parameters, its default candidate cap and its exact
+verify (Jaccard or cosine: the batch operators' own verify tails,
+``dedup._jaccard_verify`` / ``dedup._cosine_verify``).  The
+embedding-only parts ride on its entry and row builder: the width
+guard, the ``indexed_vecs`` ladder counter, a cap ≤ 0 meaning
+uncapped.  ``_build`` / ``_append`` / ``_probe`` / ``_reconcile`` and
+:func:`index_compact` take a kind and read everything else from the
+entry; the twelve public ``{ngram,minhash,embedding}_index_{build,
+append,probe,reconcile}`` functions are thin entries into them, and
+the streaming stage (``pipeline/streaming.py``) dispatches through
+the same table.  An unknown kind raises in ``_modality``.
+
 Equivalence contract (the metamorphic property tested in
 ``tests/test_incremental_dedup.py``): processing a corpus as ANY
 sequence of batches — ``pairs = ⋃ probe(batch_i); append(batch_i)`` —
@@ -85,12 +101,18 @@ does not reconcile under its own in-flight probe.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .dedup import (
+    _DEFAULT_MAX_BUCKET_ROWS,
+    _DEFAULT_MAX_POSTINGS,
+    _cosine_verify,
+    _jaccard_verify,
     _minhash_band_structs,
     _minhash_band_structs_fold,
     _minhash_sigs_by_id,
@@ -276,48 +298,8 @@ def _publish_reconcile(
         _drop_other_generations(index_dir, new_gen)
 
 
-#: physical row schema per index kind (what probes read and
-#: index_compact rewrites)
-_KIND_SCHEMAS = {
-    "ngram": "doc_id long, s long",
-    "minhash": "doc_id long, band int, bucket long",
-    "embedding": "vec_id long, tbl int, bkt long",
-}
-
-
-def index_compact(
-    spark: SparkSession, index_dir: str, lock_timeout_s: float = 30.0
-) -> None:
-    """Consolidate the current generation's files — including the
-    per-batch ``append-<tag>`` subdirs a streaming feeder accumulates
-    one-per-micro-batch — into a new generation, WITHOUT recomputing
-    any signatures: a pure rewrite of the ≤24 B/row index rows,
-    O(index bytes), vs ``reconcile``'s O(corpus) re-shingle/re-sign.
-    Works for every index kind (the schema comes from the meta).
-
-    Rows are ``distinct()``-ed in the rewrite: an at-least-once feeder
-    that replays a batch whose tagged append dir was already folded
-    re-creates the dir with rows the consolidated files now also hold
-    — the duplicates are neutralized at probe time (the probes dedup
-    matched index rows) and collapsed for good by the next compact.
-    Crash-safety is :func:`_publish_reconcile`'s (CAS'd pointer swap,
-    post-pointer sweep)."""
-    meta = _read_meta(index_dir)
-    schema = _KIND_SCHEMAS[meta["kind"]]
-
-    def out_fn(m):
-        return (
-            spark.read.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(_gen_dir(index_dir, m["generation"]))
-            .distinct()
-        )
-
-    _publish_reconcile(index_dir, meta["kind"], out_fn, {}, lock_timeout_s)
-
-
 # ---------------------------------------------------------------------------
-# shared candidate/verify machinery
+# row builders: (_id, _<key>...) per indexed row, one per modality
 
 
 def _ngram_postings(
@@ -396,123 +378,451 @@ def _minhash_bands(
     )
 
 
-def _verify_pairs(
-    cand: DataFrame,
-    texts: DataFrame,
-    n: int,
-    threshold: float,
+def _embedding_buckets(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    seed: int,
 ) -> DataFrame:
-    """Candidate-reduced exact verify, the invariant shared with the
-    batch operators: shingle ARRAYS are computed map-side for
-    candidate documents only and never enter a corpus-wide shuffle.
+    """(_id, _tbl, _bkt): the hyperplane bucket signature per table —
+    the bucket construction of ``embedding_near_dup_pairs``' LSH mode
+    (``similarity._lsh_banded``), so an index probe generates exactly
+    the batch operator's candidate cells.  Signatures are
+    corpus-independent: a vector's buckets never change as the lake
+    grows, which is what makes the incremental identity EXACT (no
+    prefix effect except through the optional bucket-size cap)."""
+    from .similarity import _lsh_banded, as_double_array
 
-    ``cand``: (id_a, id_b) with id_a < id_b.  ``texts``: (_id, _text)
-    covering every id in ``cand`` — the GUARDED lookup (missing ids
-    raise, they must not silently drop pairs)."""
-    cand_ids = (
+    # width guard (r10 ADVICE): zip_with null-pads a width mismatch,
+    # so without this every plane dot of a wrong-width vector is NULL,
+    # every signature collapses into bucket 0 of every table, and the
+    # default bucket cap then censors the one giant cell — the probe
+    # silently returns zero pairs.  A persisted-index API must fail
+    # loudly instead: raise per offending row (NULL vectors too —
+    # size(NULL) is NULL, failing the equality).
+    guarded = ensure_parallelism(df).select(
+        F.col(id_col).alias("_id"),
+        F.when(
+            F.size(F.col(vec_col)) == dim,
+            as_double_array(F.col(vec_col)),
+        )
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("embedding index: vector "),
+                    F.col(id_col).cast("string"),
+                    F.lit(" has "),
+                    F.coalesce(
+                        F.size(F.col(vec_col)).cast("string"),
+                        F.lit("NULL"),
+                    ),
+                    F.lit(
+                        f" components, index dim is {dim} — "
+                        "signatures would silently collapse to "
+                        "bucket 0; fix the column or rebuild the "
+                        "index with the right dim"
+                    ),
+                )
+            ).cast("array<double>")
+        )
+        .alias("_v"),
+    )
+    return _lsh_banded(guarded, "_v", ["_id"], dim, n_planes, n_tables, seed)
+
+
+# ---------------------------------------------------------------------------
+# candidate-reduced exact verify, one per similarity measure
+
+
+def _cand_ids(cand: DataFrame) -> DataFrame:
+    return (
         cand.select(F.col("id_a").alias("_id"))
         .union(cand.select(F.col("id_b").alias("_id")))
         .distinct()
     )
-    # guarded LEFT join (pipeline/sample.py's pattern): a candidate id
-    # absent from the text lookup means the caller's corpus frame does
-    # not cover the index — fail loudly, a silent inner join would
-    # just lose recall
-    sh = (
-        cand_ids.join(texts, "_id", "left")
-        .select(
-            "_id",
-            F.when(
-                F.col("_text").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "incremental near-dup verify: candidate doc "
-                        ),
-                        F.col("_id").cast("string"),
-                        F.lit(
-                            " has no text in the supplied corpus frame "
-                            "— the corpus must cover every indexed id"
-                        ),
-                    )
-                ).cast("array<string>"),
-            )
-            .otherwise(
-                word_shingles_expr(
-                    F.col("_text"), n, small=small_corpus(texts)
-                )
-            )
-            .alias("_sh"),
-        )
-        .withColumn("_n", F.size("_sh"))
-    )
-    # pinned: sh feeds both sides of the pair join; its lineage holds
-    # the corpus semi-join, which must not run twice
-    sh = pin(sh)
-    return (
-        cand.join(
-            sh.select(
-                F.col("_id").alias("id_a"),
-                F.col("_sh").alias("_sha"),
-                F.col("_n").alias("_na"),
-            ),
-            "id_a",
-        )
-        .join(
-            sh.select(
-                F.col("_id").alias("id_b"),
-                F.col("_sh").alias("_shb"),
-                F.col("_n").alias("_nb"),
-            ),
-            "id_b",
-        )
-        .withColumn("_shared", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn(
-            "jaccard",
-            F.col("_shared")
-            / (F.col("_na") + F.col("_nb") - F.col("_shared")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
-def _candidate_texts(
+def _candidate_values(
     cand: DataFrame,
     batch: DataFrame,
     corpus: DataFrame,
     id_col: str,
-    text_col: str,
+    val_col: str,
 ) -> DataFrame:
-    """(_id, _text) covering every candidate id: the batch's own texts
-    plus the matched INDEXED docs' texts pulled candidate-reduced from
-    ``corpus`` (ids-only semi join — the invariant that corpus text is
-    only ever read for verified candidates lives HERE, once, for both
-    probe kinds)."""
+    """(_id, _val) covering every candidate id: the batch's own values
+    plus the matched INDEXED ids' values pulled candidate-reduced from
+    ``corpus`` (ids-only semi join — the invariant that corpus text or
+    vectors are only ever read for verified candidates lives HERE,
+    once, for every kind).  Values stay RAW: shingling, the double
+    conversion and the norm are interpreted-HOF work that runs on the
+    candidate-REDUCED frame inside the verify, not on every corpus row
+    below the semi join."""
     return (
-        batch.select(
-            F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-        )
+        batch.select(F.col(id_col).alias("_id"), F.col(val_col).alias("_val"))
         .unionByName(
             corpus.select(
-                F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-            ).join(
-                cand.select(F.col("id_a").alias("_id"))
-                .union(cand.select(F.col("id_b").alias("_id")))
-                .distinct(),
-                "_id",
-                "left_semi",
-            )
+                F.col(id_col).alias("_id"), F.col(val_col).alias("_val")
+            ).join(_cand_ids(cand), "_id", "left_semi")
         )
         .dropDuplicates(["_id"])
     )
 
 
-def _ordered_pairs(a_id, b_id) -> list:
-    return [
-        F.least(a_id, b_id).alias("id_a"),
-        F.greatest(a_id, b_id).alias("id_b"),
-    ]
+def _lookup(
+    cand: DataFrame,
+    vals: DataFrame,
+    what: str,
+    value_type: str,
+    value,
+    alias: str,
+) -> DataFrame:
+    """(_id, ``alias``): ``value`` (a Column over ``_val``) for every
+    candidate id — the GUARDED lookup (``pipeline/sample.py``'s
+    pattern): a candidate id absent from ``vals`` means the caller's
+    corpus frame does not cover the index, so it raises; a silent inner
+    join would just lose recall."""
+    return _cand_ids(cand).join(vals, "_id", "left").select(
+        "_id",
+        F.when(
+            F.col("_val").isNull(),
+            F.raise_error(
+                F.concat(
+                    F.lit("incremental near-dup verify: candidate "),
+                    F.col("_id").cast("string"),
+                    F.lit(
+                        f" has no {what} in the supplied corpus frame "
+                        "— the corpus must cover every indexed id"
+                    ),
+                )
+            ).cast(value_type),
+        )
+        .otherwise(value)
+        .alias(alias),
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, vals: DataFrame, meta: dict, threshold: float
+) -> DataFrame:
+    """Exact Jaccard, the batch operators' verify tail: shingle ARRAYS
+    are computed map-side for candidate documents only and never enter
+    a corpus-wide shuffle."""
+    sh = _lookup(
+        cand,
+        vals,
+        "text",
+        "array<string>",
+        word_shingles_expr(F.col("_val"), meta["n"], small=small_corpus(vals)),
+        "_sh",
+    ).withColumn("_n", F.size("_sh"))
+    # pinned: sh feeds both sides of the pair join; its lineage holds
+    # the corpus semi-join, which must not run twice
+    return _jaccard_verify(cand, pin(sh), threshold)
+
+
+def _verify_cosine(
+    cand: DataFrame, vals: DataFrame, meta: dict, threshold: float
+) -> DataFrame:
+    """Exact cosine, ``embedding_near_dup_pairs``' verify tail: the
+    double conversion and the norm run on the candidate-reduced frame
+    (``dim`` from the index meta)."""
+    from .similarity import as_double_array, norm_sql
+
+    v = _lookup(
+        cand, vals, "vector", "array<double>", as_double_array(F.col("_val")), "_v"
+    ).withColumn("_norm", norm_sql("_v", meta["dim"]))
+    # pinned: v feeds both sides of the pair join
+    return _cosine_verify(cand, pin(v), threshold, meta["dim"])
+
+
+def _settle_bands(params: dict, threshold: float) -> dict:
+    """MinHash ``bands=None``: the band count whose S-curve inflection
+    sits nearest ``threshold`` (``minhash_params_for``)."""
+    if params["bands"] is not None:
+        return params
+    return {**params, "bands": minhash_params_for(threshold, params["num_hashes"])}
+
+
+# ---------------------------------------------------------------------------
+# the modality table and the protocol written once over it
+
+
+class _Modality(NamedTuple):
+    """One near-dup index kind: all the protocol below needs to know."""
+
+    kind: str
+    #: physical index rows: the id column, then the key columns (the
+    #: row builder names them ``_id`` and ``_<key>``)
+    schema: str
+    #: (df, id_col, value column, **params) → (_id, _<key>...)
+    rows: Callable
+    #: the meta parameters, which are the row builder's keywords
+    params: tuple
+    #: default candidate cap on a key's GLOBAL degree; None: no cap
+    cap: int | None
+    #: (cand, vals, meta, threshold) → exact pairs
+    verify: Callable
+    #: the public build: the parameter defaults are its signature's
+    build: Callable
+    #: meta counter of indexed ids that the plane-depth ladder climbs on
+    #: (``embedding_params_for``); appends advance it, reconcile resets it
+    ladder: str | None = None
+    #: a cap ≤ 0 means uncapped (``embedding_near_dup_pairs``' rule)
+    zero_cap_off: bool = False
+    #: (params, threshold) → params with the derived ones filled in
+    settle: Callable | None = None
+
+    @property
+    def id(self) -> str:
+        return self.schema.split()[0]
+
+    @property
+    def keys(self) -> list[str]:
+        return [c.split()[0] for c in self.schema.split(", ")[1:]]
+
+
+def _modality(kind: str) -> _Modality:
+    try:
+        return _MODALITIES[kind]
+    except KeyError:
+        raise ValueError(f"unknown near-dup kind {kind!r}") from None
+
+
+def _index_rows(
+    m: _Modality, df: DataFrame, id_col: str, val_col: str, params: dict
+) -> DataFrame:
+    """``df``'s physical index rows under ``params`` (a meta will do)."""
+    return m.rows(df, id_col, val_col, **{p: params[p] for p in m.params}).select(
+        F.col("_id").alias(m.id), *[F.col(f"_{k}").alias(k) for k in m.keys]
+    )
+
+
+def _n_ids(df: DataFrame, id_col: str) -> int:
+    return df.select(F.col(id_col)).distinct().count()
+
+
+def _build(
+    kind: str,
+    df: DataFrame,
+    index_dir: str,
+    id_col: str,
+    val_col: str,
+    params: dict,
+    lock_timeout_s: float,
+) -> None:
+    m = _modality(kind)
+    meta = {"kind": kind, **params, "generation": 0, "appended_batches": 0}
+    if m.ladder is not None:
+        meta[m.ladder] = _n_ids(df, id_col)
+    _publish_build(
+        index_dir, _index_rows(m, df, id_col, val_col, params), meta, lock_timeout_s
+    )
+
+
+def _append(
+    kind: str,
+    df: DataFrame,
+    index_dir: str,
+    id_col: str,
+    val_col: str,
+    batch_tag: str | None,
+    lock_timeout_s: float = 30.0,
+) -> None:
+    m = _modality(kind)
+    bump = None
+    if m.ladder is not None:
+        def bump(meta):
+            return {m.ladder: meta.get(m.ladder, 0) + _n_ids(df, id_col)}
+
+    _publish_append(
+        index_dir,
+        kind,
+        lambda meta: _index_rows(m, df, id_col, val_col, meta),
+        batch_tag,
+        lock_timeout_s,
+        meta_update_fn=bump,
+    )
+
+
+def _reconcile(
+    kind: str,
+    corpus: DataFrame,
+    index_dir: str,
+    id_col: str,
+    val_col: str,
+    lock_timeout_s: float = 30.0,
+    **params,
+) -> None:
+    """Rebuild under the meta's parameters, overridden by the non-None
+    ``params``."""
+    m = _modality(kind)
+    over = {k: v for k, v in params.items() if v is not None}
+    upd = dict(over)
+    if m.ladder is not None:
+        upd[m.ladder] = _n_ids(corpus, id_col)
+    _publish_reconcile(
+        index_dir,
+        kind,
+        lambda meta: _index_rows(m, corpus, id_col, val_col, {**meta, **over}),
+        upd,
+        lock_timeout_s,
+    )
+
+
+@pinning
+def _probe(
+    kind: str,
+    batch: DataFrame,
+    index_dir: str,
+    corpus: DataFrame,
+    id_col: str,
+    val_col: str,
+    threshold: float,
+    cap: int | None,
+    batch_broadcast: bool = True,
+) -> DataFrame:
+    """Pairs touching the batch: batch×index + batch×batch candidates
+    on shared keys, then the kind's exact verify."""
+    m = _modality(kind)
+    meta = _read_meta(index_dir)
+    _check_params(meta, kind)
+    if m.zero_cap_off and cap is not None and cap <= 0:
+        cap = None
+    keys = m.keys
+    as_keys = [F.col(f"_{k}").alias(k) for k in keys]
+    # recursiveFileLookup: per-batch idempotent appends (append-<tag>
+    # subdirs) live inside the generation alongside flat files
+    idx = (
+        batch.sparkSession.read.schema(m.schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(_gen_dir(index_dir, meta["generation"]))
+    )
+    # pinned: feeds the key set, the degree count, the cross join and
+    # the within-batch join
+    brows = pin(m.rows(batch, id_col, val_col, **{p: meta[p] for p in m.params}))
+    bkeys = brows.select(*as_keys).distinct()
+    if batch_broadcast:
+        bkeys = F.broadcast(bkeys)
+    # matched index rows: the only touch of the index — map-side when
+    # the batch side broadcasts; output bounded by the index degree of
+    # the batch's keys.  The batch's OWN ids are anti-joined out first:
+    # the protocol is probe-before-append, so on a first run this is a
+    # no-op — but on a foreachBatch REPLAY that crashed after the
+    # append, the batch's rows are already in the index, and without
+    # the exclusion they would (a) count twice in the global degree
+    # below, spuriously censoring keys near the cap only on the replay
+    # (r9 ADVICE — the replayed survivor set could differ from the
+    # crash-free run), and (b) duplicate every within-batch candidate
+    # through the cross join.  Excluding them restores first-run
+    # degrees exactly.
+    b_ids = batch.select(F.col(id_col).alias("_oid")).distinct()
+    matched = (
+        idx.join(bkeys, keys)
+        .select(F.col(m.id).alias("_oid"), *keys)
+        .join(F.broadcast(b_ids), "_oid", "left_anti")
+        # a healthy index has unique (id, key) rows; the dedup
+        # neutralizes the one anomaly the protocol admits — a tagged
+        # append replayed AFTER index_compact folded its dir — so
+        # duplicated rows can never inflate degree counts
+        .dropDuplicates(["_oid", *keys])
+    )
+    # pinned: matched feeds the degree count AND the cross join —
+    # unpinned, each consumer re-executes the index scan (the fan-out
+    # re-execution lesson of PERF §20c take 8, which this module
+    # exists to apply)
+    matched = pin(matched)
+
+    if cap is not None:
+        # global degree = index degree + batch degree, per key —
+        # exactly what the full rebuild censors on (its table is
+        # index ∪ batch at this point in the sequence).  ONE
+        # aggregation over the union of rows (r11: previously two
+        # groupBys + a full-outer join — an extra shuffle on every
+        # micro-batch probe for the identical hot set)
+        hot = (
+            matched.select(*keys)
+            .unionAll(brows.select(*as_keys))
+            .groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_deg"))
+            .filter(F.col("_deg") > cap)
+            .select(*keys)
+        )
+        # `hot` feeds two broadcast anti-joins (matched + batch side):
+        # unpinned, the union+aggregation executes once per broadcast
+        # build (r12, the duplicated-subtree shape of the batch
+        # operators' stop-shingle and cell pins).  Over-cap keys only —
+        # tiny.
+        hot = pin(hot)
+        matched = matched.join(F.broadcast(hot), keys, "left_anti")
+        brows = brows.join(
+            F.broadcast(hot).select(*[F.col(k).alias(f"_{k}") for k in keys]),
+            [f"_{k}" for k in keys],
+            "left_anti",
+        )
+
+    cross = (
+        matched.join(brows.select(F.col("_id").alias("_bid"), *as_keys), keys)
+        .filter(F.col("_oid") != F.col("_bid"))
+        .select(
+            F.least("_oid", "_bid").alias("id_a"),
+            F.greatest("_oid", "_bid").alias("id_b"),
+        )
+    )
+    within = (
+        brows.alias("x")
+        .join(
+            brows.alias("y"),
+            functools.reduce(
+                lambda a, b: a & b,
+                [F.col(f"x._{k}") == F.col(f"y._{k}") for k in keys]
+                + [F.col("x._id") < F.col("y._id")],
+            ),
+        )
+        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
+    )
+    # materialize the candidate list ONCE (ids-only, probe-bounded):
+    # it fans into the candidate ids (twice) + the verify pair join,
+    # and Spark re-executes the whole candidate machinery per consumer
+    # otherwise (measured 90 s vs 24 s FULL REBUILD at 1M docs before
+    # this line existed — the probe was losing to the thing it
+    # replaces)
+    cand = cross.union(within).distinct().localCheckpoint(eager=True)
+    vals = _candidate_values(cand, batch, corpus, id_col, val_col)
+    return m.verify(cand, vals, meta, threshold)
+
+
+def index_compact(
+    spark: SparkSession, index_dir: str, lock_timeout_s: float = 30.0
+) -> None:
+    """Consolidate the current generation's files — including the
+    per-batch ``append-<tag>`` subdirs a streaming feeder accumulates
+    one-per-micro-batch — into a new generation, WITHOUT recomputing
+    any signatures: a pure rewrite of the ≤24 B/row index rows,
+    O(index bytes), vs ``reconcile``'s O(corpus) re-shingle/re-sign.
+    Works for every index kind (the schema comes from the meta).
+
+    Rows are ``distinct()``-ed in the rewrite: an at-least-once feeder
+    that replays a batch whose tagged append dir was already folded
+    re-creates the dir with rows the consolidated files now also hold
+    — the duplicates are neutralized at probe time (the probes dedup
+    matched index rows) and collapsed for good by the next compact.
+    Crash-safety is :func:`_publish_reconcile`'s (CAS'd pointer swap,
+    post-pointer sweep)."""
+    kind = _read_meta(index_dir)["kind"]
+    schema = _modality(kind).schema
+
+    def out_fn(m):
+        return (
+            spark.read.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(_gen_dir(index_dir, m["generation"]))
+            .distinct()
+        )
+
+    _publish_reconcile(index_dir, kind, out_fn, {}, lock_timeout_s)
 
 
 # ---------------------------------------------------------------------------
@@ -532,18 +842,9 @@ def ngram_index_build(
 
     Postings are (doc_id, shingle_hash) — 16 B/row, written once;
     probes against the index never re-shingle these documents."""
-    post = _ngram_postings(docs, id_col, text_col, n, hash_algo)
-    _publish_build(
-        index_dir,
-        post.select(F.col("_id").alias("doc_id"), F.col("_s").alias("s")),
-        {
-            "kind": "ngram",
-            "n": n,
-            "hash_algo": hash_algo,
-            "generation": 0,
-            "appended_batches": 0,
-        },
-        lock_timeout_s,
+    _build(
+        "ngram", docs, index_dir, id_col, text_col,
+        dict(n=n, hash_algo=hash_algo), lock_timeout_s,
     )
 
 
@@ -566,18 +867,9 @@ def ngram_index_append(
     duplicating them — duplicated postings would double the batch's
     contribution to the probe's degree counts and spuriously censor
     shingles near the cap."""
-    _publish_append(
-        index_dir,
-        "ngram",
-        lambda meta: _ngram_postings(
-            docs, id_col, text_col, meta["n"], meta["hash_algo"]
-        ).select(F.col("_id").alias("doc_id"), F.col("_s").alias("s")),
-        batch_tag,
-        lock_timeout_s,
-    )
+    _append("ngram", docs, index_dir, id_col, text_col, batch_tag, lock_timeout_s)
 
 
-@pinning
 def ngram_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -602,106 +894,10 @@ def ngram_index_probe(
     posting table so the index join is map-side (zero index shuffle);
     disable for batches too large to broadcast (~>1M docs), which
     falls back to a 16 B/row hash join."""
-    meta = _read_meta(index_dir)
-    _check_params(meta, "ngram")
-    n, algo = meta["n"], meta["hash_algo"]
-    spark = batch.sparkSession
-    # recursiveFileLookup: per-batch idempotent appends (append-<tag>
-    # subdirs) live inside the generation alongside flat files
-    idx = (
-        spark.read.schema("doc_id long, s long")
-        .option("recursiveFileLookup", "true")
-        .parquet(_gen_dir(index_dir, meta["generation"]))
+    return _probe(
+        "ngram", batch, index_dir, corpus, id_col, text_col, threshold,
+        max_postings, batch_broadcast,
     )
-
-    bpost = _ngram_postings(batch, id_col, text_col, n, algo)
-    # pinned: feeds the degree count, the cross join and the
-    # within-batch join
-    bpost = pin(bpost)
-    bkeys = bpost.select(F.col("_s").alias("s")).distinct()
-    if batch_broadcast:
-        bkeys = F.broadcast(bkeys)
-    # matched index postings: the only touch of the index — map-side
-    # when the batch side broadcasts; output bounded by the index
-    # degree of the batch's shingles.  The batch's OWN ids are
-    # anti-joined out first: the protocol is probe-before-append, so
-    # on a first run this is a no-op — but on a foreachBatch REPLAY
-    # that crashed after the append, the batch's postings are already
-    # in the index, and without the exclusion they would (a) count
-    # twice in the global degree below, spuriously censoring shingles
-    # near the cap only on the replay (r9 ADVICE — the replayed
-    # survivor set could differ from the crash-free run), and
-    # (b) duplicate every within-batch candidate through the cross
-    # join.  Excluding them restores first-run degrees exactly.
-    b_ids = batch.select(F.col(id_col).alias("_oid")).distinct()
-    matched = (
-        idx.join(bkeys, "s")
-        .select(F.col("doc_id").alias("_oid"), "s")
-        .join(F.broadcast(b_ids), "_oid", "left_anti")
-        # a healthy index has unique (doc, shingle) rows; the dedup
-        # neutralizes the one anomaly the protocol admits — a tagged
-        # append replayed AFTER index_compact folded its dir — so
-        # duplicated postings can never inflate degree counts
-        .dropDuplicates(["_oid", "s"])
-    )
-    # pinned: matched feeds the degree count AND the cross join —
-    # unpinned, each consumer re-executes the index scan (the fan-out
-    # re-execution lesson of PERF §20c take 8, which this module
-    # exists to apply)
-    matched = pin(matched)
-
-    if max_postings is not None:
-        # global degree = index degree + batch degree, per shingle —
-        # exactly what the full rebuild censors on (its posting table
-        # is index ∪ batch at this point in the sequence).  ONE
-        # aggregation over the union of posting rows (r11: previously
-        # two groupBys + a full-outer join — an extra shuffle on every
-        # micro-batch probe for the identical hot set)
-        hot = (
-            matched.select("s")
-            .unionAll(bpost.select(F.col("_s").alias("s")))
-            .groupBy("s")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .filter(F.col("_deg") > max_postings)
-            .select("s")
-        )
-        # `hot` feeds two broadcast anti-joins (matched + batch side):
-        # unpinned, the union+aggregation executes once per broadcast
-        # build (r12, same duplicated-subtree shape as the batch
-        # operator's stop-shingle pin).  Over-cap shingles only — tiny.
-        hot = pin(hot)
-        matched = matched.join(F.broadcast(hot), "s", "left_anti")
-        bpost_c = bpost.join(
-            F.broadcast(hot).withColumnRenamed("s", "_s"), "_s", "left_anti"
-        )
-    else:
-        bpost_c = bpost
-
-    cross = (
-        matched.join(
-            bpost_c.select(F.col("_id").alias("_bid"), F.col("_s").alias("s")),
-            "s",
-        )
-        .filter(F.col("_oid") != F.col("_bid"))
-        .select(*_ordered_pairs(F.col("_oid"), F.col("_bid")))
-    )
-    within = (
-        bpost_c.alias("x")
-        .join(
-            bpost_c.alias("y"),
-            (F.col("x._s") == F.col("y._s"))
-            & (F.col("x._id") < F.col("y._id")),
-        )
-        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
-    )
-    # materialize the candidate list ONCE (ids-only, probe-bounded):
-    # it fans into cand_ids (twice) + the verify pair join, and Spark
-    # re-executes the whole candidate machinery per consumer otherwise
-    # (measured 90 s vs 24 s FULL REBUILD at 1M docs before this line
-    # existed — the probe was losing to the thing it replaces)
-    cand = cross.union(within).distinct().localCheckpoint(eager=True)
-    texts = _candidate_texts(cand, batch, corpus, id_col, text_col)
-    return _verify_pairs(cand, texts, n, threshold)
 
 
 def ngram_index_reconcile(
@@ -717,20 +913,10 @@ def ngram_index_reconcile(
     drops postings of deleted docs, optionally re-parameterizes, and
     swaps atomically at the meta pointer (conditional PUT) before
     removing the old generation's files."""
-
-    def out_fn(meta):
-        eff_n = meta["n"] if n is None else n
-        eff_algo = meta["hash_algo"] if hash_algo is None else hash_algo
-        return _ngram_postings(
-            corpus, id_col, text_col, eff_n, eff_algo
-        ).select(F.col("_id").alias("doc_id"), F.col("_s").alias("s"))
-
-    upd: dict = {}
-    if n is not None:
-        upd["n"] = n
-    if hash_algo is not None:
-        upd["hash_algo"] = hash_algo
-    _publish_reconcile(index_dir, "ngram", out_fn, upd, lock_timeout_s)
+    _reconcile(
+        "ngram", corpus, index_dir, id_col, text_col, lock_timeout_s,
+        n=n, hash_algo=hash_algo,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -755,26 +941,10 @@ def minhash_index_build(
     document regardless of text size.  A document's signature is
     corpus-independent, so incremental probing is EXACTLY equivalent
     to a full rebuild (no cap, no prefix effect)."""
-    if bands is None:
-        bands = minhash_params_for(threshold, num_hashes)
-    b = _minhash_bands(docs, id_col, text_col, n, num_hashes, bands, hash_algo)
-    _publish_build(
-        index_dir,
-        b.select(
-            F.col("_id").alias("doc_id"),
-            F.col("_band").alias("band"),
-            F.col("_bucket").alias("bucket"),
-        ),
-        {
-            "kind": "minhash",
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "hash_algo": hash_algo,
-            "generation": 0,
-            "appended_batches": 0,
-        },
-        lock_timeout_s,
+    params = dict(n=n, num_hashes=num_hashes, bands=bands, hash_algo=hash_algo)
+    _build(
+        "minhash", docs, index_dir, id_col, text_col,
+        _settle_bands(params, threshold), lock_timeout_s,
     )
 
 
@@ -789,28 +959,9 @@ def minhash_index_append(
     """Append a batch's band signatures (probe the batch first).
     ``batch_tag``: idempotent per-batch append, see
     :func:`ngram_index_append`."""
-    _publish_append(
-        index_dir,
-        "minhash",
-        lambda meta: _minhash_bands(
-            docs,
-            id_col,
-            text_col,
-            meta["n"],
-            meta["num_hashes"],
-            meta["bands"],
-            meta["hash_algo"],
-        ).select(
-            F.col("_id").alias("doc_id"),
-            F.col("_band").alias("band"),
-            F.col("_bucket").alias("bucket"),
-        ),
-        batch_tag,
-        lock_timeout_s,
-    )
+    _append("minhash", docs, index_dir, id_col, text_col, batch_tag, lock_timeout_s)
 
 
-@pinning
 def minhash_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -824,67 +975,10 @@ def minhash_index_probe(
     candidates share a (band, bucket) cell with a batch document, then
     the exact-Jaccard verify.  Identical pair set to a full
     ``minhash_lsh_pairs`` run restricted to pairs touching the batch."""
-    meta = _read_meta(index_dir)
-    _check_params(meta, "minhash")
-    spark = batch.sparkSession
-    idx = (
-        spark.read.schema("doc_id long, band int, bucket long")
-        .option("recursiveFileLookup", "true")
-        .parquet(_gen_dir(index_dir, meta["generation"]))
+    return _probe(
+        "minhash", batch, index_dir, corpus, id_col, text_col, threshold,
+        None, batch_broadcast,
     )
-    bb = _minhash_bands(
-        batch,
-        id_col,
-        text_col,
-        meta["n"],
-        meta["num_hashes"],
-        meta["bands"],
-        meta["hash_algo"],
-    )
-    # pinned: feeds the key set, the cross join and the within join
-    bb = pin(bb)
-    bkeys = bb.select(
-        F.col("_band").alias("band"), F.col("_bucket").alias("bucket")
-    ).distinct()
-    if batch_broadcast:
-        bkeys = F.broadcast(bkeys)
-    # batch's own ids excluded for the same replay-safety reason as
-    # ngram_index_probe (no degree cap here, so this is purely the
-    # cross-join dedup + work reduction — the pair set was already
-    # replay-identical via the final distinct)
-    b_ids = batch.select(F.col(id_col).alias("_oid")).distinct()
-    matched = (
-        idx.join(bkeys, ["band", "bucket"])
-        .select(F.col("doc_id").alias("_oid"), "band", "bucket")
-        .join(F.broadcast(b_ids), "_oid", "left_anti")
-        .dropDuplicates(["_oid", "band", "bucket"])  # see ngram probe
-    )
-    matched = pin(matched)
-    cross = (
-        matched.join(
-            bb.select(
-                F.col("_id").alias("_bid"),
-                F.col("_band").alias("band"),
-                F.col("_bucket").alias("bucket"),
-            ),
-            ["band", "bucket"],
-        )
-        .filter(F.col("_oid") != F.col("_bid"))
-        .select(*_ordered_pairs(F.col("_oid"), F.col("_bid")))
-    )
-    within = (
-        bb.alias("x")
-        .join(
-            bb.alias("y"),
-            (F.col("x._band") == F.col("y._band"))
-            & (F.col("x._bucket") == F.col("y._bucket"))
-            & (F.col("x._id") < F.col("y._id")),
-        )
-        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
-    )
-    cand = cross.union(within).distinct().localCheckpoint(eager=True)
-    texts = _candidate_texts(cand, batch, corpus, id_col, text_col)
-    return _verify_pairs(cand, texts, meta["n"], threshold)
 
 
 def minhash_index_reconcile(
@@ -895,25 +989,7 @@ def minhash_index_reconcile(
     lock_timeout_s: float = 30.0,
 ) -> None:
     """Full signature rebuild into a new generation (compaction)."""
-    _publish_reconcile(
-        index_dir,
-        "minhash",
-        lambda meta: _minhash_bands(
-            corpus,
-            id_col,
-            text_col,
-            meta["n"],
-            meta["num_hashes"],
-            meta["bands"],
-            meta["hash_algo"],
-        ).select(
-            F.col("_id").alias("doc_id"),
-            F.col("_band").alias("band"),
-            F.col("_bucket").alias("bucket"),
-        ),
-        {},
-        lock_timeout_s,
-    )
+    _reconcile("minhash", corpus, index_dir, id_col, text_col, lock_timeout_s)
 
 
 # ---------------------------------------------------------------------------
@@ -958,198 +1034,6 @@ def embedding_params_for(
     )
 
 
-def _embedding_buckets(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_planes: int,
-    n_tables: int,
-    seed: int,
-) -> DataFrame:
-    """(_id, _tbl, _bkt): the hyperplane bucket signature per table —
-    IDENTICAL construction to ``embedding_near_dup_pairs``' LSH mode
-    (``dedup.py``: ``lsh_bucket_expr`` over ``_planes(dim, n_planes,
-    seed + t)``), so an index probe generates exactly the batch
-    operator's candidate cells.  Signatures are corpus-independent:
-    a vector's buckets never change as the lake grows, which is what
-    makes the incremental identity EXACT (no prefix effect except
-    through the optional bucket-size cap)."""
-    from .similarity import _planes, as_double_array, lsh_bucket_sql
-
-    # width guard (r10 ADVICE): zip_with null-pads a width mismatch,
-    # so without this every plane dot of a wrong-width vector is NULL,
-    # every signature collapses into bucket 0 of every table, and the
-    # default bucket cap then censors the one giant cell — the probe
-    # silently returns zero pairs.  A persisted-index API must fail
-    # loudly instead: raise per offending row (NULL vectors too —
-    # size(NULL) is NULL, failing the equality).
-    return (
-        ensure_parallelism(df)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.when(
-                F.size(F.col(vec_col)) == dim,
-                as_double_array(F.col(vec_col)),
-            )
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("embedding index: vector "),
-                        F.col(id_col).cast("string"),
-                        F.lit(" has "),
-                        F.coalesce(
-                            F.size(F.col(vec_col)).cast("string"),
-                            F.lit("NULL"),
-                        ),
-                        F.lit(
-                            f" components, index dim is {dim} — "
-                            "signatures would silently collapse to "
-                            "bucket 0; fix the column or rebuild the "
-                            "index with the right dim"
-                        ),
-                    )
-                ).cast("array<double>")
-            )
-            .alias("_v"),
-        )
-        .select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            # string-built fold: one F.expr parse per
-                            # table vs a py4j Column forest costing
-                            # ~4 s of driver time per call at
-                            # 22 planes × 4 tables (r11; PERF §13)
-                            lsh_bucket_sql(
-                                "_v", _planes(dim, n_planes, seed + t)
-                            ).alias("bkt"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("_tb"),
-        )
-        .select(
-            "_id",
-            F.col("_tb.tbl").alias("_tbl"),
-            F.col("_tb.bkt").alias("_bkt"),
-        )
-    )
-
-
-def _candidate_vectors(
-    cand: DataFrame,
-    batch: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(_id, _raw) covering every candidate id — the vector twin of
-    :func:`_candidate_texts`: the batch's own vectors plus matched
-    INDEXED vectors pulled candidate-reduced from ``corpus`` (ids-only
-    semi join; corpus vectors are only ever read for verified
-    candidates).  Vectors stay RAW here — the double conversion and
-    the norm fold are interpreted-HOF work that must run on the
-    candidate-REDUCED frame inside :func:`_verify_cosine`, not on
-    every corpus row below the semi join (same deferral as the text
-    twin, which shingles only after the reduction)."""
-    return (
-        batch.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw")
-        )
-        .unionByName(
-            corpus.select(
-                F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw")
-            ).join(
-                cand.select(F.col("id_a").alias("_id"))
-                .union(cand.select(F.col("id_b").alias("_id")))
-                .distinct(),
-                "_id",
-                "left_semi",
-            )
-        )
-        .dropDuplicates(["_id"])
-    )
-
-
-def _verify_cosine(
-    cand: DataFrame, vecs: DataFrame, threshold: float, dim: int
-) -> DataFrame:
-    """Candidate-reduced exact-cosine verify — the embedding analog of
-    :func:`_verify_pairs`.  ``vecs``: (_id, _raw) covering every id in
-    ``cand`` (GUARDED: a candidate id with no vector raises; a silent
-    inner join would just lose recall).  The double conversion and the
-    norm run HERE, on the reduced frame — via the guarded unrolled
-    codegen kernel (``similarity.dot_sql``, r11: bit-identical to the
-    fold at every width, 3.8× per row; ``dim`` from the index meta)."""
-    from .similarity import as_double_array, cosine_from_parts, dot_sql, norm_sql
-
-    cand_ids = (
-        cand.select(F.col("id_a").alias("_id"))
-        .union(cand.select(F.col("id_b").alias("_id")))
-        .distinct()
-    )
-    v = (
-        cand_ids.join(vecs, "_id", "left")
-        .select(
-            "_id",
-            F.when(
-                F.col("_raw").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "incremental embedding verify: candidate vec "
-                        ),
-                        F.col("_id").cast("string"),
-                        F.lit(
-                            " has no vector in the supplied corpus frame "
-                            "— the corpus must cover every indexed id"
-                        ),
-                    )
-                ).cast("array<double>"),
-            )
-            .otherwise(as_double_array(F.col("_raw")))
-            .alias("_v"),
-        )
-        .withColumn("_norm", norm_sql("_v", dim))
-    )
-    # pinned: v feeds both sides of the pair join (same fan-out rule
-    # as _verify_pairs)
-    v = pin(v)
-    return (
-        cand.join(
-            v.select(
-                F.col("_id").alias("id_a"),
-                F.col("_v").alias("_va"),
-                F.col("_norm").alias("_na"),
-            ),
-            "id_a",
-        )
-        .join(
-            v.select(
-                F.col("_id").alias("id_b"),
-                F.col("_v").alias("_vb"),
-                F.col("_norm").alias("_nb"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "cos",
-            cosine_from_parts(
-                dot_sql("_va", "_vb", dim),
-                F.col("_na"),
-                F.col("_nb"),
-            ),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
 def embedding_index_build(
     vecs: DataFrame,
     index_dir: str,
@@ -1174,28 +1058,9 @@ def embedding_index_build(
     missing #1: an embedding-bearing lake no longer re-signs O(corpus)
     per curation pass; reference analog the leveled compactor,
     ``vendor/github.com/prometheus/tsdb/compact.go:128-167``)."""
-    b = _embedding_buckets(
-        vecs, id_col, vec_col, dim, n_planes, n_tables, seed
-    )
-    _publish_build(
-        index_dir,
-        b.select(
-            F.col("_id").alias("vec_id"),
-            F.col("_tbl").alias("tbl"),
-            F.col("_bkt").alias("bkt"),
-        ),
-        {
-            "kind": "embedding",
-            "dim": dim,
-            "n_planes": n_planes,
-            "n_tables": n_tables,
-            "seed": seed,
-            "generation": 0,
-            "appended_batches": 0,
-            # the ladder counter (embedding_params_for): appends
-            # advance it, reconcile resets it exactly
-            "indexed_vecs": vecs.select(F.col(id_col)).distinct().count(),
-        },
+    _build(
+        "embedding", vecs, index_dir, id_col, vec_col,
+        dict(dim=dim, n_planes=n_planes, n_tables=n_tables, seed=seed),
         lock_timeout_s,
     )
 
@@ -1215,32 +1080,9 @@ def embedding_index_append(
     count job; advisory — a replayed append double-bumps, which only
     climbs the ladder a rung early, and reconcile resets it
     exactly)."""
-    _publish_append(
-        index_dir,
-        "embedding",
-        lambda meta: _embedding_buckets(
-            vecs,
-            id_col,
-            vec_col,
-            meta["dim"],
-            meta["n_planes"],
-            meta["n_tables"],
-            meta["seed"],
-        ).select(
-            F.col("_id").alias("vec_id"),
-            F.col("_tbl").alias("tbl"),
-            F.col("_bkt").alias("bkt"),
-        ),
-        batch_tag,
-        lock_timeout_s,
-        meta_update_fn=lambda meta: {
-            "indexed_vecs": meta.get("indexed_vecs", 0)
-            + vecs.select(F.col(id_col)).distinct().count()
-        },
-    )
+    _append("embedding", vecs, index_dir, id_col, vec_col, batch_tag, lock_timeout_s)
 
 
-@pinning
 def embedding_index_probe(
     batch: DataFrame,
     index_dir: str,
@@ -1267,103 +1109,10 @@ def embedding_index_probe(
     exact-cosine verified (the n-gram cap contract, module doc).
     ``corpus`` supplies vectors for matched INDEXED ids
     (candidate-reduced ids-only semi join)."""
-    meta = _read_meta(index_dir)
-    _check_params(meta, "embedding")
-    spark = batch.sparkSession
-    idx = (
-        spark.read.schema("vec_id long, tbl int, bkt long")
-        .option("recursiveFileLookup", "true")
-        .parquet(_gen_dir(index_dir, meta["generation"]))
+    return _probe(
+        "embedding", batch, index_dir, corpus, id_col, vec_col, threshold,
+        max_bucket_rows, batch_broadcast,
     )
-    bb = _embedding_buckets(
-        batch,
-        id_col,
-        vec_col,
-        meta["dim"],
-        meta["n_planes"],
-        meta["n_tables"],
-        meta["seed"],
-    )
-    # pinned: feeds the key set, the degree count, the cross join and
-    # the within join
-    bb = pin(bb)
-    bkeys = bb.select(
-        F.col("_tbl").alias("tbl"), F.col("_bkt").alias("bkt")
-    ).distinct()
-    if batch_broadcast:
-        bkeys = F.broadcast(bkeys)
-    # batch's own ids anti-joined out: replay safety (see
-    # ngram_index_probe — degrees AND candidates match the first run)
-    b_ids = batch.select(F.col(id_col).alias("_oid")).distinct()
-    matched = (
-        idx.join(bkeys, ["tbl", "bkt"])
-        .select(F.col("vec_id").alias("_oid"), "tbl", "bkt")
-        .join(F.broadcast(b_ids), "_oid", "left_anti")
-        .dropDuplicates(["_oid", "tbl", "bkt"])  # see ngram probe
-    )
-    matched = pin(matched)
-
-    if max_bucket_rows is not None and max_bucket_rows > 0:
-        # global cell size = index rows + batch rows per (tbl, bkt) —
-        # what the full rebuild's stop-bucket cap censors on.  ONE
-        # aggregation over the union (r11, VERDICT r10 #3: the two
-        # groupBys + full-outer join cost an extra shuffle in every
-        # micro-batch probe's fixed floor for the identical hot set)
-        hot = (
-            matched.select("tbl", "bkt")
-            .unionAll(
-                bb.select(
-                    F.col("_tbl").alias("tbl"), F.col("_bkt").alias("bkt")
-                )
-            )
-            .groupBy("tbl", "bkt")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .filter(F.col("_deg") > max_bucket_rows)
-            .select("tbl", "bkt")
-        )
-        # `hot` feeds two broadcast anti-joins (matched + batch side):
-        # unpinned, the union+aggregation executes once per broadcast
-        # build (r12, same duplicated-subtree shape as the batch
-        # operator's cell pin).  Over-cap cells only — tiny.
-        hot = pin(hot)
-        matched = matched.join(F.broadcast(hot), ["tbl", "bkt"], "left_anti")
-        bb_c = bb.join(
-            F.broadcast(hot)
-            .withColumnRenamed("tbl", "_tbl")
-            .withColumnRenamed("bkt", "_bkt"),
-            ["_tbl", "_bkt"],
-            "left_anti",
-        )
-    else:
-        bb_c = bb
-
-    cross = (
-        matched.join(
-            bb_c.select(
-                F.col("_id").alias("_bid"),
-                F.col("_tbl").alias("tbl"),
-                F.col("_bkt").alias("bkt"),
-            ),
-            ["tbl", "bkt"],
-        )
-        .filter(F.col("_oid") != F.col("_bid"))
-        .select(*_ordered_pairs(F.col("_oid"), F.col("_bid")))
-    )
-    within = (
-        bb_c.alias("x")
-        .join(
-            bb_c.alias("y"),
-            (F.col("x._tbl") == F.col("y._tbl"))
-            & (F.col("x._bkt") == F.col("y._bkt"))
-            & (F.col("x._id") < F.col("y._id")),
-        )
-        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
-    )
-    # ids-only candidate list materialized ONCE (fans into cand_ids
-    # twice + the verify pair join — the probe-path fan-out lesson)
-    cand = cross.union(within).distinct().localCheckpoint(eager=True)
-    vecs = _candidate_vectors(cand, batch, corpus, id_col, vec_col)
-    return _verify_cosine(cand, vecs, threshold, meta["dim"])
 
 
 def embedding_index_reconcile(
@@ -1390,27 +1139,46 @@ def embedding_index_reconcile(
     ``streaming_near_dup(n_planes="auto")`` performs it automatically
     on rung crossings (r11).  Resets the ``indexed_vecs`` ladder
     counter to the corpus's exact distinct-id count."""
+    _reconcile(
+        "embedding", corpus, index_dir, id_col, vec_col, lock_timeout_s,
+        n_planes=n_planes, n_tables=n_tables,
+    )
 
-    def out_fn(meta):
-        return _embedding_buckets(
-            corpus,
-            id_col,
-            vec_col,
-            meta["dim"],
-            meta["n_planes"] if n_planes is None else n_planes,
-            meta["n_tables"] if n_tables is None else n_tables,
-            meta["seed"],
-        ).select(
-            F.col("_id").alias("vec_id"),
-            F.col("_tbl").alias("tbl"),
-            F.col("_bkt").alias("bkt"),
-        )
 
-    upd: dict = {
-        "indexed_vecs": corpus.select(F.col(id_col)).distinct().count()
-    }
-    if n_planes is not None:
-        upd["n_planes"] = n_planes
-    if n_tables is not None:
-        upd["n_tables"] = n_tables
-    _publish_reconcile(index_dir, "embedding", out_fn, upd, lock_timeout_s)
+#: The modality table: one entry per index kind, and the only place
+#: the protocol above learns anything kind-specific.
+_MODALITIES = {
+    m.kind: m
+    for m in (
+        _Modality(
+            "ngram",
+            "doc_id long, s long",
+            _ngram_postings,
+            ("n", "hash_algo"),
+            _DEFAULT_MAX_POSTINGS,
+            _verify_jaccard,
+            ngram_index_build,
+        ),
+        _Modality(
+            "minhash",
+            "doc_id long, band int, bucket long",
+            _minhash_bands,
+            ("n", "num_hashes", "bands", "hash_algo"),
+            None,  # banding bounds candidates structurally
+            _verify_jaccard,
+            minhash_index_build,
+            settle=_settle_bands,
+        ),
+        _Modality(
+            "embedding",
+            "vec_id long, tbl int, bkt long",
+            _embedding_buckets,
+            ("dim", "n_planes", "n_tables", "seed"),
+            _DEFAULT_MAX_BUCKET_ROWS,
+            _verify_cosine,
+            embedding_index_build,
+            ladder="indexed_vecs",
+            zero_cap_off=True,
+        ),
+    )
+}

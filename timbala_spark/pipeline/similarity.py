@@ -253,6 +253,45 @@ def lsh_bucket_sql(col_name: str, planes: list[list[float]]) -> Column:
     return F.expr(" + ".join(terms))
 
 
+def _lsh_banded(
+    src: DataFrame,
+    vec: str,
+    carry: list[str],
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    seed: int,
+) -> DataFrame:
+    """(``carry``..., _tbl, _bkt): one row per table with the
+    random-hyperplane bucket of the vector column ``vec`` — every
+    table's bucket in ONE projection (explode of a struct array, the
+    shape of MinHash banding), over the planes ``_planes(dim,
+    n_planes, seed + t)`` of table ``t``.  The one bucket construction
+    of :func:`lsh_cosine_topk`, ``embedding_near_dup_pairs(mode="lsh")``
+    and the persisted embedding index, so an index probe generates
+    exactly the batch operator's candidate cells.  String-built fold:
+    one ``F.expr`` parse per table instead of a py4j Column forest
+    (see :func:`lsh_bucket_sql`)."""
+    return src.select(
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("_tbl"),
+                        lsh_bucket_sql(
+                            vec, _planes(dim, n_planes, seed + t)
+                        ).alias("_bkt"),
+                    )
+                    for t in range(n_tables)
+                ]
+            )
+        ).alias("_tb"),
+    ).select(
+        *carry, F.col("_tb._tbl").alias("_tbl"), F.col("_tb._bkt").alias("_bkt")
+    )
+
+
 def lsh_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -279,32 +318,10 @@ def lsh_cosine_topk(
         as_double_array(F.col(vec_col)).alias("_qv"),
     ).withColumn("_qn", norm_expr(F.col("_qv")))
     # one pass per side: every table's bucket in a single projection
-    # (explode of a struct array) instead of one union branch per table
-    # re-scanning the source n_tables times — identical values, same
-    # bucket fold over the same planes (string-built: one F.expr parse
-    # per table instead of a py4j Column forest — see lsh_bucket_sql)
-    def _banded(src: DataFrame, vec: str, carry: list[str]) -> DataFrame:
-        return src.select(
-            *carry,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("_tbl"),
-                            lsh_bucket_sql(
-                                vec, _planes(dim, n_planes, seed + t)
-                            ).alias("_bkt"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("_tb"),
-        ).select(
-            *carry, F.col("_tb._tbl").alias("_tbl"), F.col("_tb._bkt").alias("_bkt")
-        )
-
-    cb = _banded(c, "_cv", ["neighbor_id", "_cv", "_cn"])
-    qb = _banded(q, "_qv", ["query_id", "_qv", "_qn"])
+    # instead of one union branch per table re-scanning the source
+    shape = (dim, n_planes, n_tables, seed)
+    cb = _lsh_banded(c, "_cv", ["neighbor_id", "_cv", "_cn"], *shape)
+    qb = _lsh_banded(q, "_qv", ["query_id", "_qv", "_qn"], *shape)
     cand = (
         cb.join(F.broadcast(qb), ["_tbl", "_bkt"])
         .select("query_id", "neighbor_id", "_qv", "_qn", "_cv", "_cn")

@@ -108,17 +108,14 @@ PER_KIND_CAP = "per-kind"
 
 
 def _resolve_cap(max_postings, kind: str) -> int | None:
-    if max_postings == PER_KIND_CAP:
-        from .dedup import _DEFAULT_MAX_BUCKET_ROWS, _DEFAULT_MAX_POSTINGS
+    from .incremental import _modality
 
-        return {
-            "ngram": _DEFAULT_MAX_POSTINGS,
-            "embedding": _DEFAULT_MAX_BUCKET_ROWS,
-            "minhash": None,
-        }[kind]
-    if max_postings is not None and kind == "minhash":
+    cap = _modality(kind).cap
+    if max_postings == PER_KIND_CAP:
+        return cap
+    if max_postings is not None and cap is None:
         raise ValueError(
-            "kind='minhash' has no candidate cap (banded signatures "
+            f"kind={kind!r} has no candidate cap (banded signatures "
             "bound candidates structurally); pass max_postings=None"
         )
     return max_postings
@@ -139,7 +136,8 @@ def near_dup_batch_stage(
     index (``pipeline.incremental``): returns the batch's SURVIVORS
     and appends their index rows.
 
-    ``kind`` selects the modality (r10): ``"ngram"`` probes the
+    ``kind`` selects the modality (r10; an entry of
+    ``pipeline.incremental``'s modality table): ``"ngram"`` probes the
     posting index over a TEXT column (``text_col``; exact-Jaccard
     pairs at ``threshold``, ``max_postings`` = the stop-shingle cap);
     ``"embedding"`` probes the hyperplane-bucket index over a VECTOR
@@ -182,70 +180,19 @@ def near_dup_batch_stage(
     survivors parquet the runner maintains) — probe's verify reads
     only candidate docs from it (ids-only semi-join)."""
     from .dedup import connected_components
-    from .incremental import (
-        embedding_index_append,
-        embedding_index_probe,
-        minhash_index_append,
-        minhash_index_probe,
-        ngram_index_append,
-        ngram_index_probe,
-    )
+    from .incremental import _append, _probe
 
     max_postings = _resolve_cap(max_postings, kind)
-    if kind == "embedding":
-        def _probe(b, corpus):
-            return embedding_index_probe(
-                b,
-                index_dir,
-                corpus=corpus,
-                id_col=id_col,
-                vec_col=text_col,
-                threshold=threshold,
-                max_bucket_rows=max_postings,
-            )
-
-        def _append(b, tag):
-            embedding_index_append(
-                b, index_dir, id_col=id_col, vec_col=text_col, batch_tag=tag
-            )
-    elif kind == "minhash":
-        def _probe(b, corpus):
-            return minhash_index_probe(
-                b,
-                index_dir,
-                corpus=corpus,
-                id_col=id_col,
-                text_col=text_col,
-                threshold=threshold,
-            )
-
-        def _append(b, tag):
-            minhash_index_append(
-                b, index_dir, id_col=id_col, text_col=text_col, batch_tag=tag
-            )
-    elif kind == "ngram":
-        def _probe(b, corpus):
-            return ngram_index_probe(
-                b,
-                index_dir,
-                corpus=corpus,
-                id_col=id_col,
-                text_col=text_col,
-                threshold=threshold,
-                max_postings=max_postings,
-            )
-
-        def _append(b, tag):
-            ngram_index_append(
-                b, index_dir, id_col=id_col, text_col=text_col, batch_tag=tag
-            )
-    else:
-        raise ValueError(f"unknown near-dup kind {kind!r}")
-
     batch = batch.localCheckpoint(eager=True)  # stabilize the batch
     pairs = _probe(
+        kind,
         batch,
+        index_dir,
         survivors_corpus.unionByName(batch.select(survivors_corpus.columns)),
+        id_col,
+        text_col,
+        threshold,
+        max_postings,
     ).localCheckpoint(eager=True)
     # no-pair fast path (r11, VERDICT r10 #3): a batch with no
     # near-dup pair anywhere — the common case on a well-mixed feed —
@@ -254,7 +201,7 @@ def near_dup_batch_stage(
     # per-batch floor; isEmpty on the checkpointed pairs is one
     # limit-1 job.
     if pairs.isEmpty():
-        _append(batch, batch_tag)
+        _append(kind, batch, index_dir, id_col, text_col, batch_tag)
         return batch
     b_ids = batch.select(F.col(id_col).alias("_bid")).distinct()
     # tag each pair end with batch membership (ids are globally unique)
@@ -317,7 +264,7 @@ def near_dup_batch_stage(
         .drop("component")
         .localCheckpoint(eager=True)
     )
-    _append(survivors, batch_tag)
+    _append(kind, survivors, index_dir, id_col, text_col, batch_tag)
     return survivors
 
 
@@ -601,27 +548,41 @@ def streaming_near_dup(
     idempotence is preserved."""
     import os
 
-    from .dedup import minhash_params_for
     from .incremental import (
         _check_params,
+        _modality,
         _read_meta,
-        embedding_index_build,
-        embedding_index_reconcile,
+        _reconcile,
         embedding_params_for,
-        minhash_index_build,
-        ngram_index_build,
     )
 
-    if kind not in ("ngram", "embedding", "minhash"):
-        raise ValueError(f"unknown near-dup kind {kind!r}")
+    m = _modality(kind)
     max_postings = _resolve_cap(max_postings, kind)
-    if kind == "minhash" and bands is None:
-        # resolve the threshold-derived band count up front so the
-        # per-batch parameter check pins a concrete shape
-        bands = minhash_params_for(threshold, num_hashes)
+    given = dict(
+        n=n, num_hashes=num_hashes, bands=bands,
+        dim=dim, n_planes=n_planes, n_tables=n_tables, seed=seed,
+    )
+    shape = {p: v for p, v in given.items() if p in m.params}
+    if m.settle is not None:
+        # resolve derived parameters (MinHash bands from the
+        # threshold) up front so the per-batch check pins a concrete
+        # shape
+        shape = m.settle(shape, threshold)
     auto_ladder = n_planes == "auto"
-    if auto_ladder and kind != "embedding":
+    if auto_ladder and m.ladder is None:
         raise ValueError('n_planes="auto" applies to kind="embedding"')
+    # an EXISTING index must have been built with the caller's
+    # parameters — silently probing with the index's own shape would
+    # dedup with different shingles/buckets than requested.  In
+    # auto-ladder mode the bucket shape (n_planes, n_tables) is the
+    # INDEX's to own — the runner adopts the meta's current rung,
+    # which is exactly what makes an automatic climb safe mid-stream —
+    # while dim and seed stay caller-pinned.
+    pinned = {
+        p: v
+        for p, v in shape.items()
+        if not (auto_ladder and p in ("n_planes", "n_tables"))
+    }
 
     def _process_batch(batch_df, batch_id):
         from ..streaming.backend import get_backend
@@ -630,76 +591,16 @@ def streaming_near_dup(
         if not get_backend().exists(
             os.path.join(index_dir, "_index_meta.json")
         ):
-            if kind == "embedding":
-                if auto_ladder:
-                    # size the initial depth to the first batch — the
-                    # ladder only ever deepens from here; tables stay
-                    # the caller's recall knob
-                    p0 = embedding_params_for(
-                        batch_df.count(), ladder_target_collisions
-                    )
-                else:
-                    p0 = n_planes
-                t0 = n_tables
-                embedding_index_build(
-                    batch_df.limit(0),
-                    index_dir,
-                    id_col=id_col,
-                    vec_col=text_col,
-                    dim=dim,
-                    n_planes=p0,
-                    n_tables=t0,
-                    seed=seed,
-                )
-            elif kind == "minhash":
-                minhash_index_build(
-                    batch_df.limit(0),
-                    index_dir,
-                    id_col=id_col,
-                    text_col=text_col,
-                    n=n,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                )
-            else:
-                ngram_index_build(
-                    batch_df.limit(0),
-                    index_dir,
-                    id_col=id_col,
-                    text_col=text_col,
-                    n=n,
-                )
-        # an EXISTING index must have been built with the caller's
-        # parameters — silently probing with the index's own shape
-        # would dedup with different shingles/buckets than requested.
-        # In auto-ladder mode the bucket shape (n_planes, n_tables) is
-        # the INDEX's to own — the runner adopts the meta's current
-        # rung, which is exactly what makes an automatic climb safe
-        # mid-stream — while dim and seed stay caller-pinned.
-        if kind == "embedding":
+            first = dict(shape)
             if auto_ladder:
-                _check_params(
-                    _read_meta(index_dir), "embedding", dim=dim, seed=seed
+                # size the initial depth to the first batch — the
+                # ladder only ever deepens from here; tables stay the
+                # caller's recall knob
+                first["n_planes"] = embedding_params_for(
+                    batch_df.count(), ladder_target_collisions
                 )
-            else:
-                _check_params(
-                    _read_meta(index_dir),
-                    "embedding",
-                    dim=dim,
-                    n_planes=n_planes,
-                    n_tables=n_tables,
-                    seed=seed,
-                )
-        elif kind == "minhash":
-            _check_params(
-                _read_meta(index_dir),
-                "minhash",
-                n=n,
-                num_hashes=num_hashes,
-                bands=bands,
-            )
-        else:
-            _check_params(_read_meta(index_dir), "ngram", n=n)
+            m.build(batch_df.limit(0), index_dir, id_col, text_col, **first)
+        _check_params(_read_meta(index_dir), kind, **pinned)
         survivors_corpus = read_survivors(
             spark, survivors_path, batch_df.schema
         )
@@ -731,18 +632,14 @@ def streaming_near_dup(
             # crossings, exactly the leveled-compactor cadence.
             meta = _read_meta(index_dir)
             want_p = embedding_params_for(
-                meta.get("indexed_vecs", 0), ladder_target_collisions
+                meta.get(m.ladder, 0), ladder_target_collisions
             )
             if want_p > meta["n_planes"]:
                 corpus = read_survivors(
                     spark, survivors_path, batch_df.schema
                 )
-                embedding_index_reconcile(
-                    corpus,
-                    index_dir,
-                    id_col=id_col,
-                    vec_col=text_col,
-                    n_planes=want_p,
+                _reconcile(
+                    kind, corpus, index_dir, id_col, text_col, n_planes=want_p
                 )
                 climbed = True
         if compact_every and (batch_id + 1) % compact_every == 0:

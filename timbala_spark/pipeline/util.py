@@ -57,26 +57,48 @@ def hash64_expr(c: Column, algo: str = "xxhash64") -> Column:
         return F.shiftleft(hi, 32).bitwiseOR(lo)
     raise ValueError(f"unknown hash64 algo {algo!r}")
 
-#: Each thread's pins (:func:`pin`) as a stack of lists: one per live
-#: :func:`pinning` call, innermost last, above the pins of the thread's
-#: last finished call, which the lazy frame it returned still reads.
+#: Each thread's pins (:func:`pin`), as (plan key, frame), in a stack
+#: of lists: one per live :func:`pinning` call, innermost last, above
+#: the pins of the thread's last finished call, which the lazy frame
+#: it returned still reads.
 #: The dict is guarded by ``_PINS_LOCK``; a stack is touched only by
 #: its own thread, until the thread exits and a sweep takes it.
-_PINS: dict[threading.Thread, list[list[DataFrame]]] = {}
+_PINS: dict[threading.Thread, list[list[tuple[object, DataFrame]]]] = {}
 _PINS_LOCK = threading.Lock()
 
+#: Live pins per plan, over every thread.  Frames whose plans give the
+#: same result share ONE cache entry, and unpersisting any of them
+#: drops it, so a pin is unpersisted only when it is the last live pin
+#: of its plan.  Keyed by the analyzed plan's semantic hash: equal for
+#: same-result plans, and a collision only keeps a frame cached
+#: longer.  ``_LIVE_LOCK`` moves a count and its cache entry together.
+_LIVE: dict[object, int] = {}
+_LIVE_LOCK = threading.Lock()
 
-def _pin_stack() -> list[list[DataFrame]]:
+
+def _plan_key(df) -> object:
+    # a frame-like without a plan counts by identity
+    h = getattr(df, "semanticHash", None)
+    return id(df) if h is None else h()
+
+
+def _pin_stack() -> list[list[tuple[object, DataFrame]]]:
     with _PINS_LOCK:
         return _PINS.setdefault(threading.current_thread(), [[]])
 
 
-def _unpersist(frames: list[DataFrame]) -> None:
+def _unpersist(frames: list[tuple[object, DataFrame]]) -> None:
     while frames:
-        try:
-            frames.pop().unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped
+        key, df = frames.pop()
+        with _LIVE_LOCK:
+            _LIVE[key] -= 1
+            if _LIVE[key]:
+                continue
+            del _LIVE[key]
+            try:
+                df.unpersist(blocking=False)
+            except Exception:
+                pass  # session already stopped
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -91,7 +113,8 @@ def pin(df: DataFrame) -> DataFrame:
     first pin made inside an outermost call releases the pins of the
     thread's previous call and those of threads that have exited.  A
     nested call never releases its caller's pins, and no call touches
-    another live thread's.  A result already returned stays correct
+    another live thread's, not even through a cache entry their plans
+    share (:data:`_LIVE`).  A result already returned stays correct
     after its pins go: re-consuming it recomputes its lineage."""
     stack = _pin_stack()
     if len(stack) > 1:
@@ -100,8 +123,11 @@ def pin(df: DataFrame) -> DataFrame:
         for dead in gone:
             _unpersist(dead[0])
         _unpersist(stack[0])
-    out = df.persist()
-    stack[-1].append(out)
+    key = _plan_key(df)
+    with _LIVE_LOCK:
+        out = df.persist()
+        _LIVE[key] = _LIVE.get(key, 0) + 1
+    stack[-1].append((key, out))
     return out
 
 
