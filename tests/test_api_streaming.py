@@ -45,6 +45,39 @@ class TestGoFloatStr:
         assert go_float_str(-0.25) == "-0.25"
         assert go_float_str(1e-7) == "0.0000001"
 
+    def test_repr_fast_path_equals_decimal_formatter(self):
+        """The ``repr`` fast path prints exactly what formatting every
+        value through ``Decimal`` printed: edge values around repr's
+        exponent switch (1e-4 / 1e16), signed zero, subnormals, and
+        10k random bit patterns."""
+        import decimal
+        import math
+        import random
+        import struct
+
+        def via_decimal(v):
+            if math.isnan(v):
+                return "NaN"
+            if math.isinf(v):
+                return "+Inf" if v > 0 else "-Inf"
+            txt = format(decimal.Decimal(repr(v)), "f")
+            if "." in txt:
+                txt = txt.rstrip("0").rstrip(".")
+            return txt if txt not in ("", "-") else "0"
+
+        edge = [0.0, -0.0, 5e-324, -5e-324, 1e-5, 1e-4, 9.999e-5, 1e15,
+                1e16, 9999999999999998.0, 1e21, -1e21, 1 / 3, -1 / 3,
+                1.5, 100.0, float("nan"), float("inf"), float("-inf"),
+                1.7976931348623157e308]
+        rng = random.Random(8)
+        bits = [
+            struct.unpack("<d", struct.pack("<Q", rng.getrandbits(64)))[0]
+            for _ in range(10_000)
+        ]
+        for v in edge + bits:
+            assert go_float_str(v) == via_decimal(v), repr(v)
+        assert go_float_str(-0.0) == "-0"
+
 
 class TestAPI:
     def test_scalar_query(self, api):

@@ -13,7 +13,7 @@ import pytest
 
 from timbala_spark import Engine, prepare_samples
 from timbala_spark.api import PromAPI
-from timbala_spark.frontend import RangeResultCache, quantize_range
+from timbala_spark.frontend import RangeResultCache, ResponseCache, quantize_range
 
 
 class TestQuantizeRange:
@@ -90,6 +90,17 @@ class TestQuantizeRange:
         assert calls  # re-filled after eviction
         big = c.get_or_fill(("huge",), lambda: list(range(100)))
         assert len(big) == 100  # over-budget results pass through uncached
+
+    def test_response_cache_byte_budget_eviction(self):
+        c = ResponseCache(max_bytes=10)
+        c.put(("a",), (200, b"123456", {}))
+        c.put(("b",), (200, b"123456", {}))  # evicts a
+        assert c.get(("a",)) is None and c.get(("b",))[1] == b"123456"
+        c.put(("b",), (200, b"1234", {}))  # a re-put replaces its bytes
+        c.put(("c",), (200, b"123456", {}))  # 4 + 6 fit: nothing evicted
+        assert c.get(("b",)) is not None and c.get(("c",)) is not None
+        c.put(("huge",), (200, bytes(11), {}))  # over budget: not stored
+        assert c.get(("huge",)) is None and c.get(("c",)) is not None
 
 
 @pytest.fixture(scope="module")

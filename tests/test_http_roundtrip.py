@@ -402,6 +402,246 @@ class TestHTTPRoundtrip:
         assert {"__name__": "future_metric", "job": "f"} in payload["data"]
 
 
+def _write_counters(srv, name, base_ms, n_series=4, n_samples=121):
+    """``n_series`` counters ``name{job, i}`` with slope ``i + 1`` per
+    second, one sample every 15 s from ``base_ms``."""
+    from timbala_spark.sources.wire import encode_write_request
+
+    series = [
+        {
+            "labels": {"__name__": name, "job": f"j{i % 2}", "i": str(i)},
+            "samples": [
+                [base_ms + k * 15_000, float((i + 1) * 15 * k)]
+                for k in range(n_samples)
+            ],
+        }
+        for i in range(n_series)
+    ]
+    status, _ = _post(srv, "/write", encode_write_request(series))
+    assert status == 200
+
+
+def _range_path(query, start_s, end_s, step="60"):
+    from urllib.parse import quote
+
+    return (
+        f"/api/v1/query_range?query={quote(query)}"
+        f"&start={start_s}&end={end_s}&step={step}"
+    )
+
+
+def _conn_get(conn, path, enc=None):
+    """GET on a kept-alive connection → (status, decoded JSON)."""
+    import gzip
+    import zlib
+
+    conn.request("GET", path, headers={"Accept-Encoding": enc or "identity"})
+    r = conn.getresponse()
+    body = r.read()
+    assert r.headers.get("Content-Encoding") == enc
+    if enc == "gzip":
+        body = gzip.decompress(body)
+    elif enc == "deflate":
+        body = zlib.decompress(body)
+    return r.status, json.loads(body)
+
+
+class TestResponseCache:
+    """The snapshot-scoped encoded-response cache: exact repeats are
+    served from the finished bytes, and only while they are valid."""
+
+    BASE_MS = 1_650_000_000_000
+
+    def _conn(self, srv):
+        import http.client
+
+        return http.client.HTTPConnection("127.0.0.1", srv.port, timeout=120)
+
+    def test_keepalive_cache_hit_is_fast(self, server):
+        """20 identical range reads on one keep-alive connection, after
+        one warm read: the median stays far under the ~40 ms a Nagle
+        stall (headers and body as two sends, the client's delayed
+        ACK) adds to every response."""
+        import statistics
+
+        _write_counters(server, "ka_total", self.BASE_MS)
+        path = _range_path(
+            "sum by (job) (rate(ka_total[5m]))",
+            self.BASE_MS / 1000 + 600, self.BASE_MS / 1000 + 1500,
+        )
+        conn = self._conn(server)
+        try:
+            status, warm = _conn_get(conn, path, "gzip")
+            assert status == 200 and len(warm["data"]["result"]) == 2
+            lat = []
+            for _ in range(20):
+                t0 = time.perf_counter()
+                status, payload = _conn_get(conn, path, "gzip")
+                lat.append(time.perf_counter() - t0)
+                assert status == 200 and payload == warm
+        finally:
+            conn.close()
+        assert statistics.median(lat) < 0.010, sorted(lat)
+
+    def test_write_drops_cached_answers(self, server):
+        base = self.BASE_MS + 10_000_000
+        _write_counters(server, "scope_total", base, n_series=1, n_samples=9)
+        path = _range_path("scope_total", base / 1000, base / 1000 + 180, "15")
+        status, before = _get(server, path)
+        assert status == 200
+        assert dict(before["data"]["result"][0]["values"])[base / 1000 + 135] == "120"
+        from timbala_spark.sources.wire import encode_write_request
+
+        status, _ = _post(server, "/write", encode_write_request([{
+            "labels": {"__name__": "scope_total", "job": "j0", "i": "0"},
+            "samples": [[base + 135_000, 7.0]],
+        }]))
+        assert status == 200
+        status, after = _get(server, path)
+        assert status == 200
+        assert dict(after["data"]["result"][0]["values"])[base / 1000 + 135] == "7"
+
+    def test_write_mid_request_never_exposes_a_stale_body(
+        self, server, monkeypatch
+    ):
+        """A write lands after the answer is computed and before it is
+        stored: the next identical GET must compute on the new
+        snapshot, not serve the body computed on the old one."""
+        from timbala_spark.api import PromAPI
+        from timbala_spark.sources.wire import encode_write_request
+
+        base = self.BASE_MS + 20_000_000
+        _write_counters(server, "mid_total", base, n_series=1, n_samples=9)
+        path = _range_path("mid_total", base / 1000, base / 1000 + 180, "15")
+        orig = PromAPI.query_range
+        written = []
+
+        def query_range_then_write(self, *a, **kw):
+            out = orig(self, *a, **kw)
+            if not written:
+                written.append(_post(server, "/write", encode_write_request([{
+                    "labels": {"__name__": "mid_total", "job": "j0", "i": "0"},
+                    "samples": [[base + 135_000, 7.0]],
+                }]))[0])
+            return out
+
+        monkeypatch.setattr(PromAPI, "query_range", query_range_then_write)
+        status, first = _get(server, path)
+        assert status == 200 and written == [200]
+        at = base / 1000 + 135
+        assert dict(first["data"]["result"][0]["values"])[at] == "120"
+        status, second = _get(server, path)
+        assert status == 200
+        assert dict(second["data"]["result"][0]["values"])[at] == "7"
+
+    def test_encodings_decode_to_identical_json(self, server):
+        base = self.BASE_MS + 30_000_000
+        _write_counters(server, "enc_total", base)
+        path = _range_path(
+            "rate(enc_total[5m])", base / 1000 + 600, base / 1000 + 1500
+        )
+        conn = self._conn(server)
+        try:
+            # each encoding twice: the fill, then the cached bytes
+            got = [
+                _conn_get(conn, path, enc)
+                for enc in ("gzip", "deflate", None) * 2
+            ]
+        finally:
+            conn.close()
+        assert all(status == 200 for status, _ in got)
+        assert len(got[0][1]["data"]["result"]) == 4
+        assert all(payload == got[0][1] for _, payload in got)
+
+    def test_now_queries_and_errors_are_not_cached(self, server, monkeypatch):
+        from timbala_spark.api import ERR_TIMEOUT, PromAPI
+
+        # /query without ``time`` means "now": every answer is fresh
+        _, a = _get(server, "/api/v1/query?query=time()")
+        time.sleep(0.05)
+        _, b = _get(server, "/api/v1/query?query=time()")
+        assert a["status"] == b["status"] == "success"
+        assert a["data"]["result"] != b["data"]["result"]
+        # an error envelope (here a transient timeout) is not stored:
+        # the retry of the same URL succeeds
+        base = self.BASE_MS + 40_000_000
+        _write_counters(server, "err_total", base, n_series=1, n_samples=9)
+        path = _range_path("err_total", base / 1000, base / 1000 + 120, "15")
+        orig = PromAPI.query_range
+        calls = []
+
+        def timeout_once(self, *a, **kw):
+            calls.append(1)
+            if len(calls) == 1:
+                return PromAPI._error(ERR_TIMEOUT, "query timed out")
+            return orig(self, *a, **kw)
+
+        monkeypatch.setattr(PromAPI, "query_range", timeout_once)
+        status, payload = _get(server, path)
+        assert status == 503 and payload["errorType"] == "timeout"
+        status, payload = _get(server, path)
+        assert status == 200 and len(payload["data"]["result"]) == 1
+
+    def test_concurrent_dashboard_reads_equal_serial(self, server):
+        """8 threads on 8 keep-alive connections send identical and
+        distinct dashboard reads at a 1 µs switch interval, on a fresh
+        snapshot: the range-results cache, the metadata cache, the
+        engine's plan cache and the response cache fill and hit
+        concurrently, and every answer equals the serial one."""
+        import sys
+        import threading
+        from urllib.parse import quote
+
+        base = self.BASE_MS + 50_000_000
+        _write_counters(server, "conc_total", base, n_series=4)
+        b = base / 1000
+        paths = [
+            _range_path("sum by (job) (rate(conc_total[5m]))", b + 600, b + 1500),
+            _range_path("sum by (job) (rate(conc_total[5m]))", b + 660, b + 1560),
+            _range_path("topk(2, rate(conc_total[5m]))", b + 600, b + 1500),
+            _range_path("count by (job) (conc_total)", b + 300, b + 1200),
+            f"/api/v1/query?query={quote('sum(conc_total)')}&time={b + 900:.0f}",
+            f"/api/v1/query?query={quote('sum(conc_total)')}&time={b + 901:.0f}",
+            "/api/v1/label/i/values",
+            f"/api/v1/series?match[]=conc_total&start={b}&end={b + 1800}",
+        ]
+        serial = {p: _get(server, p) for p in paths}
+        assert all(st == 200 for st, _ in serial.values())
+        server._invalidate_engine()  # concurrent phase: empty caches
+        errors: list = []
+
+        def client(k):
+            conn = self._conn(server)
+            try:
+                for r in range(2):
+                    for j in range(len(paths)):
+                        # threads share every URL, in different orders
+                        p = paths[(j * (k + 1) + r) % len(paths)]
+                        enc = ("gzip", None)[(k + j) % 2]
+                        got = _conn_get(conn, p, enc)
+                        if got != serial[p]:
+                            errors.append((p, got))
+            except Exception as e:  # noqa: BLE001 — reported below
+                errors.append(e)
+            finally:
+                conn.close()
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [
+                threading.Thread(target=client, args=(k,)) for k in range(8)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors[:2]
+
+
 class TestParseDuration:
     def test_single_group_durations(self):
         from timbala_spark.server import _parse_duration

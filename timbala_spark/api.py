@@ -55,10 +55,15 @@ def go_float_str(v: float) -> str:
         return "NaN"
     if math.isinf(v):
         return "+Inf" if v > 0 else "-Inf"
-    txt = format(decimal.Decimal(repr(v)), "f")
+    # repr is already the shortest round-trip digits; it needs the
+    # Decimal expansion only when it chose an exponent (|v| < 1e-4 or
+    # ≥ 1e16), which 'f' format never shows
+    txt = repr(v)
+    if "e" in txt:
+        txt = format(decimal.Decimal(txt), "f")
     if "." in txt:
         txt = txt.rstrip("0").rstrip(".")
-    return txt if txt not in ("", "-") else "0"
+    return txt
 
 
 class QueryTimeout(RuntimeError):
@@ -109,7 +114,7 @@ class PromAPI:
         import itertools
         import threading
 
-        from .frontend import RangeResultCache
+        from .frontend import RESPONSE_CACHE_BYTES, RangeResultCache, ResponseCache
 
         self._gate = threading.BoundedSemaphore(self.max_concurrent)
         self._gid = itertools.count()
@@ -124,6 +129,8 @@ class PromAPI:
         # for every variable dropdown on every refresh
         self._meta_cache: dict[tuple, dict] = {}
         self._meta_lock = threading.Lock()
+        # finished HTTP answers of this snapshot (the server fills it)
+        self.responses = ResponseCache(RESPONSE_CACHE_BYTES)
 
     def _gated_collect(self, df, timeout_s: float | None = None) -> list:
         import threading

@@ -52,6 +52,12 @@ is that design reduced to one node:
   (the upstream frontends stop at ``query_range`` entirely; this
   exact-reuse extension is safe for the same restriction reason as
   the range path).
+
+* **Exact repeats are served as finished bytes.** Range panels align
+  ``start``/``end`` to the step, so one exact request repeats for a
+  whole step of refreshes; :class:`ResponseCache` keeps its encoded
+  HTTP answer, so a repeat costs neither the restriction nor the
+  marshalling, JSON and compression above.
 """
 
 from __future__ import annotations
@@ -148,8 +154,55 @@ class RangeResultCache:
         return rows
 
 
+#: byte budget of one snapshot's :class:`ResponseCache`. A 30-min
+#: dashboard panel's gzipped answer is a few KB; a bound this size
+#: keeps thousands of them without letting never-repeated instant
+#: requests (a fresh ``time`` each refresh) grow RSS without limit.
+RESPONSE_CACHE_BYTES = 16 * 1024 * 1024
+
+
+class ResponseCache:
+    """LRU of finished HTTP answers ``(status, body, headers)``, keyed
+    on the exact request (path, raw query string, content encoding) and
+    bounded by total body bytes. A range panel aligned to its step
+    re-sends one exact request for a whole step of refreshes; a hit
+    here skips the row restriction, the matrix marshalling, JSON and
+    compression that :class:`RangeResultCache` still leaves per hit.
+    Scoped like it: one per ``PromAPI`` snapshot, so a write or a
+    maintenance commit drops every entry with the snapshot."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self._entries: OrderedDict[tuple, tuple] = OrderedDict()
+        self._bytes = 0
+        self._lock = threading.Lock()
+
+    def get(self, key: tuple) -> tuple | None:
+        with self._lock:
+            resp = self._entries.get(key)
+            if resp is not None:
+                self._entries.move_to_end(key)
+            return resp
+
+    def put(self, key: tuple, resp: tuple) -> None:
+        size = len(resp[1])
+        if size > self.max_bytes:
+            return
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._bytes -= len(old[1])
+            self._entries[key] = resp
+            self._bytes += size
+            while self._bytes > self.max_bytes:
+                _, old = self._entries.popitem(last=False)
+                self._bytes -= len(old[1])
+
+
 __all__ = [
     "RangeResultCache",
+    "ResponseCache",
+    "RESPONSE_CACHE_BYTES",
     "quantize_range",
     "MIN_QUANTUM_S",
     "MAX_QUANTUM_S",
