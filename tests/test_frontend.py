@@ -13,7 +13,12 @@ import pytest
 
 from timbala_spark import Engine, prepare_samples
 from timbala_spark.api import PromAPI
-from timbala_spark.frontend import RangeResultCache, ResponseCache, quantize_range
+from timbala_spark.frontend import (
+    RESPONSE_ENTRY_OVERHEAD,
+    RangeResultCache,
+    ResponseCache,
+    quantize_range,
+)
 
 
 class TestQuantizeRange:
@@ -92,15 +97,61 @@ class TestQuantizeRange:
         assert len(big) == 100  # over-budget results pass through uncached
 
     def test_response_cache_byte_budget_eviction(self):
-        c = ResponseCache(max_bytes=10)
-        c.put(("a",), (200, b"123456", {}))
-        c.put(("b",), (200, b"123456", {}))  # evicts a
-        assert c.get(("a",)) is None and c.get(("b",))[1] == b"123456"
-        c.put(("b",), (200, b"1234", {}))  # a re-put replaces its bytes
-        c.put(("c",), (200, b"123456", {}))  # 4 + 6 fit: nothing evicted
-        assert c.get(("b",)) is not None and c.get(("c",)) is not None
-        c.put(("huge",), (200, bytes(11), {}))  # over budget: not stored
-        assert c.get(("huge",)) is None and c.get(("c",)) is not None
+        """Each entry is charged its body, path and query plus a fixed
+        per-entry overhead; the least recently used goes first."""
+        o = RESPONSE_ENTRY_OVERHEAD
+        c = ResponseCache(max_bytes=2 * o + 20)
+        c.put(("/p", "a", None), (200, b"123456", {}))  # o + 9
+        c.put(("/p", "b", None), (200, b"123456", {}))  # o + 9: both fit
+        assert c.get(("/p", "a", None))[1] == b"123456"  # b is now LRU
+        c.put(("/p", "c", None), (200, b"123456", {}))  # evicts b
+        assert c.get(("/p", "b", None)) is None
+        assert c.get(("/p", "a", None)) is not None
+        assert c.get(("/p", "c", None)) is not None
+        # over the whole budget: not stored, nothing evicted
+        c.put(("/p", "huge", None), (200, bytes(2 * o), {}))
+        assert c.get(("/p", "huge", None)) is None
+        assert c.get(("/p", "a", None)) is not None
+        assert c.get(("/p", "c", None)) is not None
+        # a re-put replaces the entry's charge, not adds to it
+        c.put(("/p", "c", None), (200, b"", {}))
+        assert c.get(("/p", "a", None)) is not None
+        assert c.get(("/p", "c", None))[1] == b""
+        # the query string is charged: beside an o + 3 entry, a query
+        # of 15 chars (o + 17) fits in 2o + 20 and one of 16 does not
+        for n, fits in ((15, True), (16, False)):
+            q = ResponseCache(max_bytes=2 * o + 20)
+            q.put(("/p", "a", None), (200, b"", {}))
+            q.put(("/p", "b" * n, None), (200, b"", {}))
+            assert (q.get(("/p", "a", None)) is not None) is fits
+
+    def test_response_cache_budget_bounds_memory_of_tiny_answers(self):
+        """A flood of never-repeated requests with ~70 B answers (an
+        empty gzipped envelope) holds no more memory than the budget:
+        the per-entry charge covers what an entry really costs."""
+        import tracemalloc
+        from urllib.parse import urlparse
+
+        from timbala_spark.server import TimbalaServer
+
+        headers = TimbalaServer._API_HEADERS["gzip"]
+        budget = 1 << 20
+        c = ResponseCache(max_bytes=budget)
+        tracemalloc.start()
+        try:
+            before = tracemalloc.get_traced_memory()[0]
+            for i in range(20_000):
+                url = urlparse(
+                    "/api/v1/query_range?query=sum%28up%7Bjob%3D%22j"
+                    f"{i}%22%7D%29&start={1_650_000_000 + i}"
+                    f"&end={1_650_001_800 + i}&step=60"
+                )
+                c.put((url.path, url.query, "gzip"), (200, bytes(70), headers))
+            held = tracemalloc.get_traced_memory()[0] - before
+        finally:
+            tracemalloc.stop()
+        assert len(c._entries) < 20_000  # the budget evicted
+        assert held <= budget, held
 
 
 @pytest.fixture(scope="module")

@@ -553,7 +553,9 @@ class TestResponseCache:
         assert len(got[0][1]["data"]["result"]) == 4
         assert all(payload == got[0][1] for _, payload in got)
 
-    def test_now_queries_and_errors_are_not_cached(self, server, monkeypatch):
+    def test_instant_queries_and_errors_are_not_cached(
+        self, server, monkeypatch
+    ):
         from timbala_spark.api import ERR_TIMEOUT, PromAPI
 
         # /query without ``time`` means "now": every answer is fresh
@@ -562,6 +564,20 @@ class TestResponseCache:
         _, b = _get(server, "/api/v1/query?query=time()")
         assert a["status"] == b["status"] == "success"
         assert a["data"]["result"] != b["data"]["result"]
+        # with an explicit ``time`` too: no measured traffic repeats
+        # one, so each reaches PromAPI.query
+        orig_query = PromAPI.query
+        queries = []
+
+        def counted(self, *a, **kw):
+            queries.append(1)
+            return orig_query(self, *a, **kw)
+
+        monkeypatch.setattr(PromAPI, "query", counted)
+        for _ in range(2):
+            status, _ = _get(server, "/api/v1/query?query=1&time=1650000000")
+            assert status == 200
+        assert len(queries) == 2
         # an error envelope (here a transient timeout) is not stored:
         # the retry of the same URL succeeds
         base = self.BASE_MS + 40_000_000

@@ -129,7 +129,7 @@ class PromAPI:
         # for every variable dropdown on every refresh
         self._meta_cache: dict[tuple, dict] = {}
         self._meta_lock = threading.Lock()
-        # finished HTTP answers of this snapshot (the server fills it)
+        # encoded query_range answers of this snapshot (the server fills it)
         self.responses = ResponseCache(RESPONSE_CACHE_BYTES)
 
     def _gated_collect(self, df, timeout_s: float | None = None) -> list:

@@ -26,7 +26,9 @@ import os
 import re
 import threading
 import zlib
+from collections.abc import Mapping
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from types import MappingProxyType
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import SparkSession, functions as F
@@ -44,10 +46,6 @@ from .streaming.ingest import read_samples_table, write_samples_batch
 
 #: main.go:44 — requests above this answer 413 before any decode work.
 MAX_HTTP_REQUEST_BYTES = 10 * 1024 * 1024
-
-#: per-connection write buffer: a response up to this size (headers
-#: included) goes out in one write — every gzipped dashboard answer
-RESPONSE_BUFFER_BYTES = 64 * 1024
 
 _ERR_STATUS = {
     ERR_BAD_DATA: 400,
@@ -220,14 +218,9 @@ class TimbalaServer:
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"
-            # Headers and body as two sends on a keep-alive socket:
-            # Nagle holds the body until the client's delayed ACK of
-            # the headers (~40 ms), and the thread must win the GIL
-            # back between the sends. Buffered, an answer up to the
-            # buffer leaves in one write when the stdlib flushes it
-            # after the handler; TCP_NODELAY (the stdlib's pairing for
-            # a buffered wfile) keeps larger ones from the same stall.
-            wbufsize = RESPONSE_BUFFER_BYTES
+            # Headers and body go out as two sends on a keep-alive
+            # socket; with Nagle on, the body waits for the client's
+            # delayed ACK of the headers (~40 ms on every answer).
             disable_nagle_algorithm = True
 
             def log_message(self, *a):  # quiet; Spark UI covers observability
@@ -539,6 +532,13 @@ class TimbalaServer:
         "Access-Control-Allow-Origin": "*",
         "Access-Control-Expose-Headers": "Date",
     }
+    #: the headers of an /api/v1 answer per content encoding, shared
+    #: (read-only) by every answer and every cached entry
+    _API_HEADERS = {
+        None: MappingProxyType(_CORS),
+        "gzip": MappingProxyType({**_CORS, "Content-Encoding": "gzip"}),
+        "deflate": MappingProxyType({**_CORS, "Content-Encoding": "deflate"}),
+    }
 
     @staticmethod
     def _content_encoding(h: BaseHTTPRequestHandler) -> str | None:
@@ -555,12 +555,11 @@ class TimbalaServer:
 
     def _encode_api(
         self, payload: dict, enc: str | None
-    ) -> tuple[int, bytes, dict[str, str]]:
+    ) -> tuple[int, bytes, Mapping[str, str]]:
         status = 200
         if payload.get("status") == "error":
             status = _ERR_STATUS.get(payload.get("errorType"), 500)
         body = json.dumps(payload).encode()
-        extra = dict(self._CORS)
         if enc is not None:
             # level 6 for both: Go's gzip.NewWriter is DefaultCompression
             body = (
@@ -568,36 +567,29 @@ class TimbalaServer:
                 if enc == "gzip"
                 else zlib.compress(body, 6)
             )
-            extra["Content-Encoding"] = enc
-        return status, body, extra
+        return status, body, self._API_HEADERS[enc]
 
     def _respond_api(self, h: BaseHTTPRequestHandler, payload: dict) -> None:
         status, body, extra = self._encode_api(payload, self._content_encoding(h))
         self._respond(h, status, body, extra=extra)
 
-    def _answer_api(
-        self,
-        h: BaseHTTPRequestHandler,
-        answer,
-        request: tuple[str, str] | None,
-    ) -> None:
-        """Answer through the snapshot's encoded-response cache.
-        ``answer(api)`` computes the payload; ``request`` is ``(path,
-        raw query)`` when the answer is a pure function of the request
-        and the snapshot, else None. One snapshot serves the whole
-        request, and an answer is stored only in the cache of the
-        snapshot that computed it: a write landing mid-request swaps
-        in a new ``PromAPI`` with an empty cache, so a stale body is
-        never visible. Errors are never stored (timeouts are
-        transient)."""
+    def _answer_range(self, h: BaseHTTPRequestHandler, url, answer) -> None:
+        """Answer a ``query_range`` through the snapshot's
+        encoded-response cache, keyed on the exact request (path, raw
+        query, content encoding). ``answer(api)`` computes the payload.
+        One snapshot serves the whole request, and an answer is stored
+        only in the cache of the snapshot that computed it: a write
+        landing mid-request swaps in a new ``PromAPI`` with an empty
+        cache, so a stale body is never visible. Errors are never
+        stored (timeouts are transient)."""
         enc = self._content_encoding(h)
         api = self._engine_api()
-        key = None if request is None else (*request, enc)
-        resp = None if key is None else api.responses.get(key)
+        key = (url.path, url.query, enc)
+        resp = api.responses.get(key)
         if resp is None:
             payload = answer(api)
             resp = self._encode_api(payload, enc)
-            if key is not None and payload["status"] == "success":
+            if payload["status"] == "success":
                 api.responses.put(key, resp)
         status, body, extra = resp
         self._respond(h, status, body, extra=extra)
@@ -649,30 +641,27 @@ class TimbalaServer:
         def p(name: str, default: str | None = None) -> str | None:
             return q.get(name, [default])[0]
 
-        # parameters parse inside ``answer`` (a ValueError there is
-        # still bad_data), so a cache hit skips them
-        request = (url.path, url.query)
         try:
             if url.path == "/api/v1/query":
                 expr = p("query")
                 if expr is None:
                     raise ValueError("missing query parameter")
-                return self._answer_api(
+                ts = _parse_time(p("time"), default=_time.time())
+                return self._respond_api(
                     h,
-                    lambda api: api.query(
-                        expr,
-                        _parse_time(p("time"), default=_time.time()),
-                        timeout=p("timeout"),
+                    self._engine_api().query(
+                        expr, ts, timeout=p("timeout")
                     ),
-                    # without ``time`` the query means "now"
-                    request if p("time") else None,
                 )
             if url.path == "/api/v1/query_range":
                 expr = p("query")
                 if expr is None:
                     raise ValueError("missing query parameter")
-                return self._answer_api(
+                # parameters parse inside the answer (a ValueError
+                # there is still bad_data), so a cache hit skips them
+                return self._answer_range(
                     h,
+                    url,
                     lambda api: api.query_range(
                         expr,
                         _parse_time(p("start")),
@@ -680,7 +669,6 @@ class TimbalaServer:
                         _parse_duration(p("step") or ""),
                         timeout=p("timeout"),
                     ),
-                    request,
                 )
             parts = url.path.split("/")
             # /api/v1/label/<name>/values
@@ -689,21 +677,20 @@ class TimbalaServer:
                 and parts[1:4] == ["api", "v1", "label"]
                 and parts[5] == "values"
             ):
-                return self._answer_api(
-                    h, lambda api: api.label_values(unquote(parts[4])), request
+                return self._respond_api(
+                    h, self._engine_api().label_values(unquote(parts[4]))
                 )
             if url.path == "/api/v1/series":
                 # absent start/end default to minTime/maxTime — the
                 # range is UNBOUNDED, so samples at future timestamps
                 # still match (api.go:274-302)
-                return self._answer_api(
+                return self._respond_api(
                     h,
-                    lambda api: api.series(
+                    self._engine_api().series(
                         q.get("match[]", []),
                         _parse_time(p("start"), _MIN_TIME_S),
                         _parse_time(p("end"), _MAX_TIME_S),
                     ),
-                    request,
                 )
         except ValueError as e:
             return self._respond_api(
