@@ -412,17 +412,19 @@ class TestStoreMaintenance:
             assert not store_is_dirty(tmp)
             got = read_samples_table(spark, tmp)
             assert got.count() == 40  # 30 + 10, duplicates collapsed
-            # plan gate: the clean read carries ONLY the dict-side
-            # dedup aggregate; the samples-side replica collapse (one
-            # more Aggregate) must be gone post-compaction
+            # plan gate: the clean read carries no aggregate at all —
+            # the samples-side replica collapse and the dict-side
+            # collapse are both gone post-compaction; an explicit
+            # dedup=True brings back the samples collapse only (the
+            # dictionary collapse follows the marker alone)
             def n_aggs(df):
                 plan = df._jdf.queryExecution().optimizedPlan().toString()
                 return sum(
                     1 for ln in plan.splitlines() if "Aggregate [" in ln
                 )
 
-            assert n_aggs(got) == 1
-            assert n_aggs(read_samples_table(spark, tmp, dedup=True)) == 2
+            assert n_aggs(got) == 0
+            assert n_aggs(read_samples_table(spark, tmp, dedup=True)) == 1
             assert got.select("series_id").distinct().count() == 3
             # series dict collapsed to one row per series
             assert spark.read.parquet(st.series).count() == 3

@@ -355,3 +355,67 @@ def test_scrub_pii_streaming_composes(spark, tmp_path):
     rows = {r.doc_id: r for r in spark.sql("select * from pii_stream_test").collect()}
     assert rows[0].text_scrubbed == "mail <EMAIL> now" and rows[0].n_pii_total == 1
     assert rows[1].n_pii_total == 0
+
+
+# ------------------------------------------------- size gate under a pin
+def _parquet_docs(spark, tmp_path, n=120):
+    p = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [
+            (i, f"document {i} says word{i % 7} and word{i % 11} twice here", f"d{i % 3}")
+            for i in range(n)
+        ],
+        "doc_id long, text string, domain string",
+    ).write.parquet(p)
+    return spark.read.parquet(p)
+
+
+def test_small_corpus_sees_through_a_pin(spark, tmp_path):
+    """A pinned frame measures as its unpinned twin: the estimate reads
+    the scans of the analyzed plan, which the pin's in-memory relation
+    does not hide."""
+    from timbala_spark.pipeline.util import (
+        estimated_input_bytes,
+        pin,
+        release_pins,
+        small_corpus,
+    )
+
+    df = _parquet_docs(spark, tmp_path).filter(F.col("doc_id") % 2 == 0)
+    want, want_bytes = small_corpus(df), estimated_input_bytes(df)
+    assert want and want_bytes
+    # a fresh twin: a frame whose plan was already optimized keeps that
+    # plan, so only a frame first planned under the pin loses its files
+    pinned = pin(df.filter(F.col("doc_id") >= 0))
+    try:
+        assert small_corpus(pinned) == want
+        assert estimated_input_bytes(pinned) == want_bytes
+    finally:
+        release_pins()
+
+
+def test_curate_pack_on_a_small_corpus_skips_the_quantile_pass(
+    spark, tmp_path, monkeypatch
+):
+    """``curate_corpus`` packs its pinned frame: on a small parquet
+    corpus the packing takes the single-bucket arm, with no
+    approxQuantile pass."""
+    from timbala_spark.pipeline import curate_corpus
+
+    cls = type(spark.range(1))
+    calls = []
+    quantile = cls.approxQuantile
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return quantile(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "approxQuantile", spy)
+    out = curate_corpus(_parquet_docs(spark, tmp_path), shard_budget=64)
+    rows = out.select("doc_id", "n_tokens", "token_offset", "shard_id").collect()
+    assert rows and not calls
+    # the packing is the serial exclusive prefix sum in doc_id order
+    acc = 0
+    for r in sorted(rows, key=lambda r: r.doc_id):
+        assert (r.token_offset, r.shard_id) == (acc, acc // 64)
+        acc += r.n_tokens

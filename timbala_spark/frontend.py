@@ -69,8 +69,9 @@ from collections.abc import Callable
 #: auto quantum bounds (seconds): a quarter of the request extent,
 #: clamped so tiny requests still share windows and huge ones stay
 #: bounded — backward widening is < one quantum (≤ 1 h), forward
-#: widening is that same bare alignment plus the unconditional
-#: one-quantum prefetch margin, so up to two quanta (≤ 2 h)
+#: widening is more than one quantum and at most two (≤ 2 h): the
+#: next grid point past the request's end plus a one-quantum
+#: prefetch margin
 MIN_QUANTUM_S = 60.0
 MAX_QUANTUM_S = 3600.0
 
@@ -88,8 +89,11 @@ def quantize_range(
     ``[a, b]`` that preserves the step phase: ``a ≤ start``,
     ``b ≥ end``, ``a ≡ start (mod step)`` and ``(b - a)`` a multiple
     of the (step-rounded) quantum — so the widened step grid contains
-    every requested grid point and the window is stable while the
-    request slides within one quantum."""
+    every requested grid point. ``end`` picks its window by the
+    half-open quantum cell it falls in, ``[a + kq, a + (k+1)q)``:
+    every end in one cell, its left boundary included, gets the same
+    ``b``, and the forward margin ``b - end`` is in ``(q, 2q]``.
+    An advancing dashboard therefore fills once per quantum."""
     if quantum_ms is None:
         extent = end_ms - start_ms
         quantum_ms = int(
@@ -100,19 +104,19 @@ def quantize_range(
     q = -(-max(quantum_ms, step_ms) // step_ms) * step_ms
     phase = start_ms % step_ms
     a = (start_ms - phase) // q * q + phase
-    b = a + -(-(end_ms - a) // q) * q if end_ms > a else a
-    # Prefetch margin (r8): guarantee at least one quantum PAST end.
-    # The dashboard pattern advances end monotonically; with b bare-
-    # aligned the forward margin is uniform in [0, q) — zero when end
-    # lands on the grid — and every quantum boundary costs a miss.
-    # One extra quantum makes an advancing shape hit until a full
-    # quantum is consumed, for ~q/extent more rows per fill (the fill
-    # is dominated by fixed plan+exec cost, not rows; the 11k-cap
-    # fallback still catches grids the margin pushes over). Bare
-    # alignment gives b - end in [0, q) always, so the margin is
-    # unconditional (r9: the former `if b - end < q` guard was a
-    # tautology — asserted instead).
-    assert 0 <= b - end_ms < q
+    # one half-open rule for every request: the first grid point
+    # strictly past ``end``, so ``0 < b - end <= q``. An ``end`` on a
+    # quantum boundary thus shares the window of the requests after
+    # it; a bare ceiling gave it a window of its own (``b = end``),
+    # and an advancing dashboard filled twice per quantum.
+    b = a + ((end_ms - a) // q + 1) * q
+    # Prefetch margin (r8): one more quantum past that, so the forward
+    # margin is (q, 2q], for ~q/extent more rows per fill (the fill is
+    # dominated by fixed plan+exec cost, not rows; the 11k-cap
+    # fallback still catches grids the margin pushes over). The cache
+    # looks windows up by exact key, so a request in the next cell
+    # fills a window of its own: the margin serves no request yet.
+    assert 0 < b - end_ms <= q
     b += q
     return a, b
 

@@ -233,6 +233,14 @@ def pack_greedy(
     bucket = _bucket_tree(0, len(splits)) if splits else F.lit(0)
     with_b = df.withColumn("__bkt", bucket)
 
+    local = Window.partitionBy("__bkt").orderBy(F.col(order_col).asc())
+    cum_excl = F.coalesce(
+        F.sum(F.col(token_col).cast("long")).over(
+            local.rowsBetween(Window.unboundedPreceding, -1)
+        ),
+        F.lit(0),
+    )
+    out = with_b.withColumn("__local_off", cum_excl)
     if splits:
         subtotals = (
             with_b.groupBy("__bkt")
@@ -244,21 +252,10 @@ def pack_greedy(
         for r in subtotals:
             offsets.append((r["__bkt"], acc))
             acc += r["__sub"] or 0
-    else:
-        # single bucket: its exclusive offset is 0, no pass needed
-        offsets = [(0, 0)]
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "__bkt int, __off long")
-    local = Window.partitionBy("__bkt").orderBy(F.col(order_col).asc())
-    cum_excl = F.coalesce(
-        F.sum(F.col(token_col).cast("long")).over(
-            local.rowsBetween(Window.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    return (
-        with_b.withColumn("__local_off", cum_excl)
-        .join(F.broadcast(off_df), "__bkt", "left")
-        .withColumn(
+        off_df = spark.createDataFrame(
+            offsets or [(0, 0)], "__bkt int, __off long"
+        )
+        out = out.join(F.broadcast(off_df), "__bkt", "left").withColumn(
             "__off",
             F.when(
                 F.col("__off").isNull(),
@@ -273,6 +270,13 @@ def pack_greedy(
                 ).cast("long"),
             ).otherwise(F.col("__off")),
         )
+    else:
+        # single bucket: its exclusive offset is 0 by definition — a
+        # literal, not a join against a one-row frame (whose
+        # createDataFrame runs a Python worker in every task)
+        out = out.withColumn("__off", F.lit(0).cast("long"))
+    return (
+        out
         .withColumn(
             "token_offset", (F.col("__off") + F.col("__local_off")).cast("long")
         )

@@ -162,9 +162,26 @@ def release_pins() -> None:
 SMALL_CORPUS_INPUT_BYTES = 64 << 20
 
 
+def _leaf_files(df: DataFrame) -> set[str]:
+    """The file paths of the frame's leaf scans, read from the ANALYZED
+    plan.  ``DataFrame.inputFiles()`` reads the optimized plan, where a
+    persisted subtree (a :func:`pin`) has been replaced by an in-memory
+    relation that lists no files; the analyzed plan still holds the
+    scans.  Metadata only: the relations' file indexes are listed when
+    the frame is built, and no job runs."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files: set[str] = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            files.update(leaf.relation().inputFiles())
+    return files
+
+
 def estimated_input_bytes(df: DataFrame) -> int | None:
     """Metadata-only size estimate: the byte sum of the frame's leaf
-    scan files.  No Spark job runs — ``inputFiles()`` is catalog
+    scan files, read by :func:`_leaf_files` so a pinned frame measures
+    as its unpinned twin.  No Spark job runs — the listing is catalog
     metadata and local ``file:`` sizes come from ``os.stat``.  Returns
     ``None`` (= "unknown, assume big") for in-memory frames, remote
     filesystems (at 100 TB the scratch machinery should stay on, and a
@@ -176,7 +193,7 @@ def estimated_input_bytes(df: DataFrame) -> int | None:
     from urllib.parse import unquote, urlparse
 
     try:
-        files = df.inputFiles()
+        files = _leaf_files(df)
     except Exception:
         return None
     if not files:

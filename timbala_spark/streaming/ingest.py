@@ -352,9 +352,19 @@ def read_samples_table(
     the same collapse). ``dedup="auto"`` (default) therefore checks
     the store's ``_dirty`` marker: writes set it, ``compact_store``
     clears it, so compacted stores read exchange-free and live stores
-    stay correct. A write racing the marker check can slip one batch
-    past the collapse until the next read — same visibility window as
-    the reference's WAL→head handoff. Pass True/False to override.
+    stay correct. Both scans capture their file listings before the
+    marker check, and writers mark before their files land, so a
+    clean marker proves neither listing holds an un-collapsed batch.
+    Pass True/False to override the samples collapse.
+
+    The series dictionary collapse is gated on the same marker, and
+    ``dedup`` does not override it: each batch appends its own
+    dictionary rows, so a dirty generation reads the dictionary
+    through ``dropDuplicates(series_id, name)``, while a clean one is
+    a compacted dictionary (``compact_store`` writes one row per
+    series and marks dirty any generation it carries straggler
+    dictionary files into) and skips that aggregate and its shuffle —
+    one Spark job fewer per query.
 
     The read resolves and PINS the store's current generation
     (``store.resolve_store``): the returned DataFrame keeps scanning
@@ -422,13 +432,16 @@ def read_samples_table(
                     "name", "labels", "series_id", "t", "v", "day"
                 )
         s = spark.read.parquet(st.samples)
+        d = spark.read.parquet(st.series)
+        # checked AFTER both scans above captured their file listings:
+        # writers mark BEFORE their files land, so a clean marker here
+        # proves the listings contain no un-collapsed batch and no
+        # un-collapsed dictionary file (marker-before-files /
+        # check-after-listing — the pair closes the r5 "slip one
+        # batch" visibility window)
+        dirty = os.path.exists(st.dirty_marker)
         if dedup == "auto":
-            # checked AFTER the scan above captured its file listing:
-            # writers mark BEFORE their files land, so a clean marker
-            # here proves the listing contains no un-collapsed batch
-            # (marker-before-files / check-after-listing — the pair
-            # closes the r5 "slip one batch" visibility window)
-            dedup = os.path.exists(st.dirty_marker)
+            dedup = dirty
         if dedup:
             # day is a deterministic function of t, so adding it to the
             # dedup keys changes nothing semantically — but as a
@@ -436,14 +449,15 @@ def read_samples_table(
             # this aggregate into the scan's PartitionFilters (same
             # trick as keeping `name` a dedup key on the dict below)
             s = s.dropDuplicates(["series_id", "t", "day"])
-        # dedup on (series_id, name) — name is constant per series, and
-        # keeping it a grouping key lets Catalyst push `__name__`
-        # selector filters through this aggregate into the dict scan
-        # (dropDuplicates on series_id alone turns name into first(name),
-        # which blocks pushdown)
-        d = spark.read.parquet(st.series).dropDuplicates(
-            ["series_id", "name"]
-        )
+        if dirty:
+            # a clean generation's dictionary is compacted, one row per
+            # series (see the docstring). Dedup on (series_id, name) —
+            # name is constant per series, and keeping it a grouping
+            # key lets Catalyst push `__name__` selector filters
+            # through this aggregate into the dict scan (dropDuplicates
+            # on series_id alone turns name into first(name), which
+            # blocks pushdown)
+            d = d.dropDuplicates(["series_id", "name"])
         # `day` (the physical partition column) rides along so the
         # engine's time filters can emit partition-pruning predicates
         # (compiler._base_scan) — extra columns are dropped at the
