@@ -353,11 +353,11 @@ def _query_throughput_metric(spark, qs) -> dict:
         n_rng, n_inst = 32, 24
 
         #: per-pass time-region jump: the frontend's widened-window
-        #: quantum is ≤1 h with ≤2 h of forward prefetch, so 3 h
+        #: quantum is ≤1 h with ≤1 h of forward widening, so 3 h
         #: guarantees each pass starts on FRESH cache keys and repeats
         #: the r9 single-pass structure exactly (untimed initial load
         #: seeds the region, timed advancing refreshes then mix
-        #: boundary misses with prefetch hits) — without the jump,
+        #: boundary misses with window hits) — without the jump,
         #: passes 2..N ride the prior pass's widened windows and the
         #: min measures the pure cache-hit path, not the steady state.
         region_s = 3 * 3600

@@ -346,6 +346,25 @@ class TestHTTPRoundtrip:
         assert status == 400
         assert payload["errorType"] == "bad_data"
 
+    def test_sub_millisecond_step_answers_400(self, server):
+        """Step and range compare in nanoseconds, as the reference's
+        ``end.Sub(start)/step > 11000`` does: a 0.1 ms step over an hour
+        is past the points cap, and a step under 1 ns is zero."""
+        status, payload = _get(
+            server,
+            "/api/v1/query_range?query=up&start=0&end=3600&step=0.0001",
+        )
+        assert status == 400 and payload["errorType"] == "bad_data"
+        assert payload["error"] == (
+            "exceeded maximum resolution of 11,000 points per "
+            "timeseries. Try decreasing the query resolution (?step=XX)"
+        )
+        status, payload = _get(
+            server, "/api/v1/query_range?query=up&start=0&end=3600&step=1e-10"
+        )
+        assert status == 400
+        assert payload["error"].startswith("zero or negative query resolution")
+
     def test_query_range_and_label_values(self, server):
         """Range query over written samples + label metadata routes."""
         from timbala_spark.sources.wire import encode_write_request
@@ -656,6 +675,146 @@ class TestResponseCache:
             sys.setswitchinterval(old)
         assert not any(t.is_alive() for t in threads)
         assert not errors, errors[:2]
+
+
+class TestMetaAnswerCache:
+    """Label values and ``/series`` answers are cached like
+    ``query_range`` answers: as the finished bytes of the snapshot that
+    computed them, never errors, and never past the byte budget."""
+
+    BASE_MS = 1_660_000_000_000
+
+    def _write(self, srv, name, label, values):
+        from timbala_spark.sources.wire import encode_write_request
+
+        status, _ = _post(srv, "/write", encode_write_request([
+            {
+                "labels": {"__name__": name, label: v},
+                "samples": [[self.BASE_MS, 1.0]],
+            }
+            for v in values
+        ]))
+        assert status == 200
+
+    @staticmethod
+    def _count(monkeypatch, owner, name) -> list:
+        calls = []
+        orig = getattr(owner, name)
+
+        def counted(*a, **kw):
+            calls.append(1)
+            return orig(*a, **kw)
+
+        monkeypatch.setattr(owner, name, counted)
+        return calls
+
+    def test_repeats_do_not_reach_promapi(self, server, monkeypatch):
+        import http.client
+
+        from timbala_spark.api import PromAPI
+
+        self._write(server, "mc_repeat", "mc_repeat_l", ["a", "b"])
+        paths = [
+            "/api/v1/label/mc_repeat_l/values",
+            f"/api/v1/series?match[]=mc_repeat&start={self.BASE_MS / 1000}",
+        ]
+        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
+        try:
+            first = {(p, enc): _conn_get(conn, p, enc)
+                     for p in paths for enc in ("gzip", None)}
+            assert first[paths[0], None] == (
+                200, {"status": "success", "data": ["a", "b"]}
+            )
+            assert len(first[paths[1], None][1]["data"]) == 2
+            calls = self._count(monkeypatch, PromAPI, "label_values")
+            calls += self._count(monkeypatch, PromAPI, "series")
+            for _ in range(3):
+                for (p, enc), want in first.items():
+                    assert _conn_get(conn, p, enc) == want
+        finally:
+            conn.close()
+        assert calls == []
+
+    def test_write_drops_meta_answers(self, server):
+        self._write(server, "mc_write", "mc_write_l", ["a"])
+        lv = "/api/v1/label/mc_write_l/values"
+        series = "/api/v1/series?match[]=mc_write"
+        assert _get(server, lv)[1]["data"] == ["a"]
+        assert len(_get(server, series)[1]["data"]) == 1
+        self._write(server, "mc_write", "mc_write_l", ["b"])
+        assert _get(server, lv)[1]["data"] == ["a", "b"]
+        assert len(_get(server, series)[1]["data"]) == 2
+
+    def test_errors_are_recomputed(self, server, monkeypatch):
+        from timbala_spark.api import PromAPI
+
+        lv_calls = self._count(monkeypatch, PromAPI, "label_values")
+        series_calls = self._count(monkeypatch, PromAPI, "series")
+        for _ in range(2):
+            status, payload = _get(server, "/api/v1/label/0bad/values")
+            assert status == 400
+            assert payload["error"] == 'invalid label name: "0bad"'
+            status, payload = _get(server, "/api/v1/series")
+            assert status == 400
+            assert payload["error"] == "no match[] parameter provided"
+        assert len(lv_calls) == len(series_calls) == 2
+
+    def test_truncated_answer_keeps_its_warnings(self, server, monkeypatch):
+        from timbala_spark.api import PromAPI
+
+        self._write(server, "mc_trunc", "mc_trunc_l", ["a", "b"])
+        paths = [
+            "/api/v1/label/mc_trunc_l/values",
+            "/api/v1/series?match[]=mc_trunc",
+        ]
+        with monkeypatch.context() as mp:
+            mp.setitem(server._api_kw, "meta_limit", 1)
+            server._invalidate_engine()
+            try:
+                first = [_get(server, p) for p in paths]
+                calls = self._count(mp, PromAPI, "label_values")
+                calls += self._count(mp, PromAPI, "series")
+                again = [_get(server, p) for p in paths]
+            finally:
+                server._invalidate_engine()
+        assert again == first and calls == []
+        (s1, lv), (s2, ser) = first
+        assert s1 == s2 == 200
+        assert lv["data"] == ["a"] and len(ser["data"]) == 1
+        assert lv["warnings"] == [
+            "results truncated due to limit (1 distinct values)"
+        ]
+        assert ser["warnings"] == [
+            "results truncated due to limit (1 series); narrow match[]"
+        ]
+
+    def test_answer_over_budget_is_not_held(self, server, monkeypatch):
+        """An answer costing more than the whole byte budget is
+        computed again on every request rather than held."""
+        from timbala_spark import api as api_mod
+        from timbala_spark import frontend
+
+        self._write(server, "mc_budget", "mc_budget_l", ["a", "b"])
+        paths = [
+            "/api/v1/label/mc_budget_l/values",
+            "/api/v1/series?match[]=mc_budget",
+        ]
+        with monkeypatch.context() as mp:
+            mp.setattr(
+                frontend, "RESPONSE_CACHE_BYTES", frontend.RESPONSE_ENTRY_OVERHEAD
+            )
+            server._invalidate_engine()
+            try:
+                builds = self._count(mp, api_mod, "label_get")
+                parses = self._count(mp, api_mod, "parse_metric_selector")
+                got = [_get(server, p) for p in paths for _ in range(2)]
+                held = len(server._engine_api().responses._entries)
+            finally:
+                server._invalidate_engine()
+        assert got[0] == got[1] and got[2] == got[3]
+        assert got[0][1]["data"] == ["a", "b"] and len(got[2][1]["data"]) == 2
+        assert len(builds) == len(parses) == 2
+        assert held == 0
 
 
 class TestParseDuration:

@@ -11,13 +11,19 @@ HTTP server; returning plain dicts keeps it testable without one.
 from __future__ import annotations
 
 import decimal
+import itertools
+import json
 import math
+import re
+import threading
 from dataclasses import dataclass
+from time import monotonic
 
 from pyspark.sql import functions as F
 
-from .compiler import PromQLBadQueryError
-from .engine import Engine
+from . import frontend
+from .compiler import PromQLBadQueryError, matcher_expr
+from .engine import Engine, _unparen
 from .model import (
     METRIC_NAME_LABEL,
     SEP_KV,
@@ -25,14 +31,7 @@ from .model import (
     canonical_labels_sql,
     label_get,
 )
-
-
-def _canon_key(labels: dict) -> str:
-    """``model.canonical_labels_sql``'s serialization, driver-side — the wire
-    output order is applied here, after the (bounded) collect, instead
-    of as a Spark-side all-to-one sort stage in the engine plan."""
-    return SEP_PAIR.join(f"{k}{SEP_KV}{v}" for k, v in sorted(labels.items()))
-from .promql.ast import ValueType
+from .promql.ast import Call, StringLiteral, ValueType
 from .promql.lexer import PromQLSyntaxError
 from .promql.parser import parse, parse_metric_selector
 
@@ -68,6 +67,21 @@ def go_float_str(v: float) -> str:
 
 class QueryTimeout(RuntimeError):
     pass
+
+
+def _canon_key(labels: dict) -> str:
+    """``model.canonical_labels_sql``'s serialization, driver-side — the wire
+    output order is applied here, after the (bounded) collect, instead
+    of as a Spark-side all-to-one sort stage in the engine plan."""
+    return SEP_PAIR.join(f"{k}{SEP_KV}{v}" for k, v in sorted(labels.items()))
+
+
+def _value_ordered(expr) -> bool:
+    """``sort``/``sort_desc`` results carry their own order (the
+    engine preserves it); everything else gets the canonical wire
+    order, applied post-collect."""
+    inner = _unparen(expr)
+    return isinstance(inner, Call) and inner.func.name in ("sort", "sort_desc")
 
 
 @dataclass
@@ -111,31 +125,18 @@ class PromAPI:
     meta_limit: int | None = 1_000_000
 
     def __post_init__(self) -> None:
-        import itertools
-        import threading
-
-        from .frontend import RESPONSE_CACHE_BYTES, RangeResultCache, ResponseCache
-
         self._gate = threading.BoundedSemaphore(self.max_concurrent)
         self._gid = itertools.count()
         self._range_cache = (
-            RangeResultCache(self.range_cache_rows)
+            frontend.RangeResultCache(self.range_cache_rows)
             if self.range_cache_rows > 0
             else None
         )
-        # metadata endpoints are pure functions of the engine snapshot
-        # (PromAPI dies with its engine on any write/maintenance), so
-        # their envelopes cache safely — dashboards hit label_values
-        # for every variable dropdown on every refresh
-        self._meta_cache: dict[tuple, dict] = {}
-        self._meta_lock = threading.Lock()
-        # encoded query_range answers of this snapshot (the server fills it)
-        self.responses = ResponseCache(RESPONSE_CACHE_BYTES)
+        # encoded query_range, label values and /series answers of this
+        # snapshot (the server fills it)
+        self.responses = frontend.ResponseCache(frontend.RESPONSE_CACHE_BYTES)
 
     def _gated_collect(self, df, timeout_s: float | None = None) -> list:
-        import threading
-        import time as _time
-
         # per-request timeout (api.go:155-163,219-227): the request's
         # context and the engine's global budget BOTH apply -> min
         budget = (
@@ -143,11 +144,11 @@ class PromAPI:
             if timeout_s is None
             else min(self.timeout_s, timeout_s)
         )
-        t0 = _time.monotonic()
+        t0 = monotonic()
         if not self._gate.acquire(timeout=budget):
             raise QueryTimeout("query queue wait exceeded timeout")
         try:
-            remaining = max(budget - (_time.monotonic() - t0), 0.001)
+            remaining = max(budget - (monotonic() - t0), 0.001)
             sc = self.engine.spark.sparkContext
             gid = f"promapi-{next(self._gid)}"
             out: list = []
@@ -203,8 +204,6 @@ class PromAPI:
         except PromQLSyntaxError as e:
             return self._error(ERR_BAD_DATA, str(e))
         if expr.type == ValueType.STRING:
-            from .promql.ast import StringLiteral
-
             inner = expr
             while hasattr(inner, "expr"):
                 inner = inner.expr
@@ -212,10 +211,26 @@ class PromAPI:
             return self._success(
                 {"resultType": "string", "result": [time, inner.value]}
             )
-        try:
-            rows = self._instant_rows_cached(query, expr, time, timeout_s)
-        except QueryTimeout as e:
-            return self._error(ERR_TIMEOUT, str(e))
+        rows = None
+        # an instant query at a whole-second ``time`` is the grid point
+        # ``time`` of a 1 s-step range evaluation (range grids evaluate
+        # each step independently — the reference walks the same
+        # ``evalInstant`` per grid point, ``promql/engine.go:1016-
+        # 1044``), so advancing-``now()`` instant dashboards share the
+        # range path's quantum windows. Raw-sample matrices are not
+        # range-able, and ``sort``/``sort_desc`` answer in the plan's
+        # collect order, which a shared cache must not assume; both and
+        # any ``time`` off the 1 s grid take the direct path.
+        cacheable = expr.type in (ValueType.SCALAR, ValueType.VECTOR)
+        if cacheable and not _value_ordered(expr):
+            t_ms = int(round(time * 1000))
+            if t_ms % frontend.INSTANT_STEP_MS == 0:
+                try:
+                    rows = self._window_rows(
+                        query, t_ms, t_ms, frontend.INSTANT_STEP_MS, timeout_s
+                    )
+                except QueryTimeout as e:
+                    return self._error(ERR_TIMEOUT, str(e))
         if rows is None:  # direct, uncached path
             try:
                 df = self.engine.query(query, time)
@@ -243,19 +258,7 @@ class PromAPI:
             return self._success(
                 {"resultType": "matrix", "result": self._matrix(rows)}
             )
-        # sort()/sort_desc() results carry their own order (the engine
-        # preserves it); everything else gets the canonical wire order,
-        # applied post-collect
-        from .promql.ast import Call, ParenExpr
-
-        inner = expr
-        while isinstance(inner, ParenExpr):
-            inner = inner.expr
-        value_ordered = isinstance(inner, Call) and inner.func.name in (
-            "sort",
-            "sort_desc",
-        )
-        if not value_ordered:
+        if not _value_ordered(expr):
             rows = sorted(
                 rows, key=lambda r: (_canon_key(dict(r["labels"])), r["t"])
             )
@@ -285,15 +288,18 @@ class PromAPI:
             return self._error(
                 ERR_BAD_DATA, "end timestamp must not be before start time"
             )
-        if step <= 0:
+        # durations compare in nanoseconds, as the reference's
+        # time.Duration arithmetic does: a step finer than 1 ms still
+        # divides, and one under 1 ns is zero
+        step_ns = int(round(step * 1e9)) if step > 0 else 0
+        if step_ns <= 0:
             return self._error(
                 ERR_BAD_DATA,
                 "zero or negative query resolution step widths are not "
                 "accepted. Try a positive integer",
             )
-        if (int(round(end * 1000)) - int(round(start * 1000))) // int(
-            round(step * 1000)
-        ) > self.engine.max_points:
+        start_ms, end_ms = int(round(start * 1000)), int(round(end * 1000))
+        if (end_ms - start_ms) * 1_000_000 // step_ns > self.engine.max_points:
             return self._error(
                 ERR_BAD_DATA,
                 f"exceeded maximum resolution of {self.engine.max_points:,} "
@@ -305,77 +311,58 @@ class PromAPI:
         timeout_s, err = self._normalize_timeout(timeout)
         if err is not None:
             return err
-        if self._range_cache is not None:
-            res = self._query_range_cached(query, start, end, step, timeout_s)
-            if res is not None:
-                return res
         try:
-            df = self.engine.query_range(query, start, end, step)
-        except (PromQLBadQueryError, PromQLSyntaxError) as e:
-            return self._error(ERR_BAD_DATA, str(e))
-        except Exception as e:  # reference hits these in Exec -> errorExec
-            return self._error(ERR_EXEC, str(e))
-        try:
-            rows = self._gated_collect(df, timeout_s)
+            rows = self._window_rows(
+                query, start_ms, end_ms, int(round(step * 1000)), timeout_s
+            )
         except QueryTimeout as e:
             return self._error(ERR_TIMEOUT, str(e))
-        except Exception as e:
-            return self._error(ERR_EXEC, str(e))
+        if rows is None:  # direct, uncached path
+            try:
+                df = self.engine.query_range(query, start, end, step)
+            except (PromQLBadQueryError, PromQLSyntaxError) as e:
+                return self._error(ERR_BAD_DATA, str(e))
+            except Exception as e:  # reference hits these in Exec -> errorExec
+                return self._error(ERR_EXEC, str(e))
+            try:
+                rows = self._gated_collect(df, timeout_s)
+            except QueryTimeout as e:
+                return self._error(ERR_TIMEOUT, str(e))
+            except Exception as e:
+                return self._error(ERR_EXEC, str(e))
         return self._success({"resultType": "matrix", "result": self._matrix(rows)})
 
-    def _instant_rows_cached(
+    def _window_rows(
         self,
         query: str,
-        expr,
-        time: float,
-        timeout_s: float | None = None,
+        start_ms: int,
+        end_ms: int,
+        step_ms: int,
+        timeout_s: float | None,
     ) -> list | None:
-        """Serve an instant query through the widened-range results
-        cache. An instant evaluation at a whole-second ``time`` equals
-        the grid point ``time`` of a 1 s-step range evaluation (range
-        grids evaluate each step independently — the reference walks
-        the same ``evalInstant`` per grid point, ``promql/
-        engine.go:1016-1044``), so advancing-``now()`` instant
-        dashboards share the range path's quantum windows. Returns
-        None to take the direct path: cache off, matrix result (raw
-        samples, not range-able), wire-ordered ``sort``/``sort_desc``
-        (their order is the plan's collect order, which a shared cache
-        must not assume), ``time`` off the 1 s grid, a widened grid
-        past the points cap, or any evaluation error (errors must
-        surface with the direct path's semantics — and since the
-        widened grid is a superset, an error at the requested instant
-        always re-raises there)."""
-        from .frontend import INSTANT_STEP_MS, quantize_range
-        from .promql.ast import Call, ParenExpr
-
-        if self._range_cache is None:
+        """The rows of ``[start, end]`` at ``step``, evaluated over the
+        enclosing quantum window (:func:`frontend.quantize_range`) and
+        served from the snapshot's results cache; an instant query is
+        the case ``start = end``. The widened grid preserves the
+        request's step phase, so its rows in ``[start, end]`` are
+        exactly the requested grid points (range evaluation is
+        per-step independent). A timeout raises :class:`QueryTimeout`.
+        Returns None to take the exact direct path: cache off, a step
+        under 1 ms, a widened grid past the points cap, or any
+        evaluation error (errors must surface with the semantics of the
+        REQUESTED window — and since the widened grid is a superset, an
+        error at a requested point always re-raises there)."""
+        if self._range_cache is None or step_ms <= 0:
             return None
-        if expr.type not in (ValueType.SCALAR, ValueType.VECTOR):
+        a, b = frontend.quantize_range(start_ms, end_ms, step_ms)
+        if (b - a) // step_ms > self.engine.max_points:
             return None
-        inner = expr
-        while isinstance(inner, ParenExpr):
-            inner = inner.expr
-        if isinstance(inner, Call) and inner.func.name in ("sort", "sort_desc"):
-            return None
-        t_ms = int(round(time * 1000))
-        if t_ms % INSTANT_STEP_MS != 0:
-            return None
-        a, b = quantize_range(t_ms, t_ms, INSTANT_STEP_MS)
-        if (b - a) // INSTANT_STEP_MS > self.engine.max_points:
-            return None
-        # same keyspace as the range path on purpose: a 1 s-step range
-        # request over the same widened window shares the entry (both
-        # cache the identical evaluated rows)
-        key = (query, INSTANT_STEP_MS, a, b)
         try:
             rows = self._range_cache.get_or_fill(
-                key,
+                (query, step_ms, a, b),
                 lambda: self._gated_collect(
                     self.engine.query_range(
-                        query,
-                        a / 1000.0,
-                        b / 1000.0,
-                        INSTANT_STEP_MS / 1000.0,
+                        query, a / 1000.0, b / 1000.0, step_ms / 1000.0
                     ),
                     timeout_s,
                 ),
@@ -384,47 +371,7 @@ class PromAPI:
             raise
         except Exception:
             return None
-        return [r for r in rows if r["t"] == t_ms]
-
-    def _query_range_cached(
-        self, query, start, end, step, timeout_s: float | None = None
-    ) -> dict | None:
-        """Serve a range query through the widened-window results cache
-        (timbala_spark.frontend). Returns None to fall back to the
-        exact direct path — on a widened grid that would trip the
-        points cap, or any evaluation error (which must surface with
-        the semantics of the REQUESTED window, not the widened one)."""
-        from .frontend import quantize_range
-
-        start_ms, end_ms = int(round(start * 1000)), int(round(end * 1000))
-        step_ms = int(round(step * 1000))
-        if step_ms <= 0:
-            return None
-        a, b = quantize_range(start_ms, end_ms, step_ms)
-        if (b - a) // step_ms > self.engine.max_points:
-            return None
-        key = (query, step_ms, a, b)
-        try:
-            rows = self._range_cache.get_or_fill(
-                key,
-                lambda: self._gated_collect(
-                    self.engine.query_range(
-                        query, a / 1000.0, b / 1000.0, step
-                    ),
-                    timeout_s,
-                ),
-            )
-        except QueryTimeout as e:
-            return self._error(ERR_TIMEOUT, str(e))
-        except Exception:
-            return None
-        # exact restriction: the widened grid preserves the request's
-        # step phase, so rows in [start, end] are precisely the
-        # requested grid points (range eval is per-step independent)
-        rows = [r for r in rows if start_ms <= r["t"] <= end_ms]
-        return self._success(
-            {"resultType": "matrix", "result": self._matrix(rows)}
-        )
+        return [r for r in rows if start_ms <= r["t"] <= end_ms]
 
     def _matrix(self, rows) -> list[dict]:
         by_series: dict[tuple, dict] = {}
@@ -442,8 +389,6 @@ class PromAPI:
         """Remote-read analog: matchers + time range → raw samples
         DataFrame (labels, t, v). The reference serves this as snappy
         protobuf; transport is out of scope here."""
-        from .compiler import matcher_expr
-
         matchers = parse_metric_selector(match)
         df = self.engine.samples.filter(
             (F.col("t") >= int(start * 1000)) & (F.col("t") <= int(end * 1000))
@@ -452,27 +397,10 @@ class PromAPI:
             df = df.filter(matcher_expr(m))
         return df.select("labels", "t", "v")
 
-    def _meta_cached(self, key: tuple, build) -> dict:
-        with self._meta_lock:
-            if key in self._meta_cache:
-                return self._meta_cache[key]
-        out = build()  # outside the lock: collects run concurrently
-        if out.get("status") == "success" and len(self._meta_cache) < 256:
-            with self._meta_lock:
-                self._meta_cache[key] = out
-        return out
-
     # -- GET /api/v1/label/:name/values (api.go:252-272) --------------
     def label_values(self, name: str) -> dict:
-        return self._meta_cached(("lv", name), lambda: self._label_values(name))
-
-    def _label_values(self, name: str) -> dict:
-        import re
-
         if not re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", name):
             # Go %q quoting (api.go:257) — double quotes, Go escapes
-            import json
-
             return self._error(
                 ERR_BAD_DATA, f"invalid label name: {json.dumps(name)}"
             )
@@ -500,18 +428,10 @@ class PromAPI:
 
     # -- GET /api/v1/series (api.go:279-341) --------------------------
     def series(self, match: list[str], start: float, end: float) -> dict:
-        return self._meta_cached(
-            ("series", tuple(match), float(start), float(end)),
-            lambda: self._series(match, start, end),
-        )
-
-    def _series(self, match: list[str], start: float, end: float) -> dict:
         if not match:
             return self._error(
                 ERR_BAD_DATA, "no match[] parameter provided"
             )
-        from .compiler import matcher_expr
-
         out: list[dict] = []
         seen: set = set()
         for sel in match:

@@ -14,9 +14,6 @@ milliseconds internally like the reference engine.
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .compiler import (
@@ -29,6 +26,7 @@ from .compiler import (
     _base_scan,
     compile_query,
 )
+from .frontend import LRUCache
 from .model import DEFAULT_LOOKBACK_MS, canonical_labels_sql, prepare_samples
 from .promql.ast import MatrixSelector, ParenExpr, ValueType
 from .promql.parser import parse
@@ -76,24 +74,16 @@ class Engine:
         # (PERF.md §6). Safe because `samples` is fixed for an Engine's
         # lifetime (the HTTP layer rebuilds the Engine on writes) and a
         # DataFrame is immutable. `plan_cache_size=0` disables.
-        self.plan_cache_size = 128
-        self._plan_cache: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-        self._plan_lock = threading.Lock()
+        self._plans = LRUCache(128)
 
-    def _cached_plan(self, key: tuple, build) -> DataFrame:
-        if self.plan_cache_size <= 0:
-            return build()
-        with self._plan_lock:
-            if key in self._plan_cache:
-                self._plan_cache.move_to_end(key)
-                return self._plan_cache[key]
-        df = build()
-        with self._plan_lock:
-            self._plan_cache[key] = df
-            self._plan_cache.move_to_end(key)
-            while len(self._plan_cache) > self.plan_cache_size:
-                self._plan_cache.popitem(last=False)
-        return df
+    @property
+    def plan_cache_size(self) -> int:
+        """Most compiled plans kept (0 disables the plan cache)."""
+        return self._plans.budget
+
+    @plan_cache_size.setter
+    def plan_cache_size(self, n: int) -> None:
+        self._plans.budget = n
 
     # -- public API ----------------------------------------------------
     def query(self, promql: str, ts: float, sorted: bool = False) -> DataFrame:
@@ -106,7 +96,7 @@ class Engine:
         shuffle-minimal plan at scale). The HTTP layer orders its
         (collected, bounded) wire output driver-side instead."""
         t_ms = _to_ms(ts)
-        return self._cached_plan(
+        return self._plans.get_or_fill(
             ("i", promql, t_ms, sorted), lambda: self._query(promql, t_ms, sorted)
         )
 
@@ -130,7 +120,7 @@ class Engine:
         """Range query; ``step`` in seconds (api.go:187-250).
         ``sorted``: see :meth:`query`."""
         start_ms, end_ms, step_ms = _to_ms(start), _to_ms(end), _to_ms(step)
-        return self._cached_plan(
+        return self._plans.get_or_fill(
             ("r", promql, start_ms, end_ms, step_ms, sorted),
             lambda: self._query_range(promql, start_ms, end_ms, step_ms, sorted),
         )

@@ -1,6 +1,6 @@
 """Range-query results caching: the query-frontend analog.
 
-The engine's compiled-plan cache (``engine.Engine._cached_plan``) keys
+The engine's compiled-plan cache (``engine.Engine._plans``) keys
 on the absolute evaluation timestamps, so a real dashboard — the same
 query SHAPE re-issued at an advancing ``now()`` — misses every time
 and pays the full driver-side planning cost per refresh (measured at
@@ -57,7 +57,19 @@ is that design reduced to one node:
   ``start``/``end`` to the step, so one exact request repeats for a
   whole step of refreshes; :class:`ResponseCache` keeps its encoded
   HTTP answer, so a repeat costs neither the restriction nor the
-  marshalling, JSON and compression above.
+  marshalling, JSON and compression above. Label values and
+  ``/series`` answers are cached the same way, and only there: they
+  are pure functions of the snapshot, and a dashboard variable
+  dropdown re-sends one on every refresh.
+
+* **No prefetch.** A window ends at the first quantum boundary past
+  the request's end. Windows are looked up by exact key, so a margin
+  past that boundary would be evaluated on every fill and served to
+  no request.
+
+The rows cache (:class:`RangeResultCache`), :class:`ResponseCache`
+and the engine's compiled-plan cache are one type, :class:`LRUCache`,
+each with its own budget and cost per entry.
 """
 
 from __future__ import annotations
@@ -69,9 +81,8 @@ from collections.abc import Callable
 #: auto quantum bounds (seconds): a quarter of the request extent,
 #: clamped so tiny requests still share windows and huge ones stay
 #: bounded — backward widening is < one quantum (≤ 1 h), forward
-#: widening is more than one quantum and at most two (≤ 2 h): the
-#: next grid point past the request's end plus a one-quantum
-#: prefetch margin
+#: widening is more than zero and at most one quantum (≤ 1 h): up to
+#: the next quantum boundary past the request's end, no prefetch
 MIN_QUANTUM_S = 60.0
 MAX_QUANTUM_S = 3600.0
 
@@ -87,12 +98,12 @@ def quantize_range(
 ) -> tuple[int, int]:
     """Widen ``[start, end]`` to the enclosing quantum-aligned window
     ``[a, b]`` that preserves the step phase: ``a ≤ start``,
-    ``b ≥ end``, ``a ≡ start (mod step)`` and ``(b - a)`` a multiple
+    ``b > end``, ``a ≡ start (mod step)`` and ``(b - a)`` a multiple
     of the (step-rounded) quantum — so the widened step grid contains
     every requested grid point. ``end`` picks its window by the
     half-open quantum cell it falls in, ``[a + kq, a + (k+1)q)``:
     every end in one cell, its left boundary included, gets the same
-    ``b``, and the forward margin ``b - end`` is in ``(q, 2q]``.
+    ``b``, the cell's right boundary, so ``0 < b - end ≤ q``.
     An advancing dashboard therefore fills once per quantum."""
     if quantum_ms is None:
         extent = end_ms - start_ms
@@ -104,58 +115,83 @@ def quantize_range(
     q = -(-max(quantum_ms, step_ms) // step_ms) * step_ms
     phase = start_ms % step_ms
     a = (start_ms - phase) // q * q + phase
-    # one half-open rule for every request: the first grid point
-    # strictly past ``end``, so ``0 < b - end <= q``. An ``end`` on a
-    # quantum boundary thus shares the window of the requests after
-    # it; a bare ceiling gave it a window of its own (``b = end``),
-    # and an advancing dashboard filled twice per quantum.
-    b = a + ((end_ms - a) // q + 1) * q
-    # Prefetch margin (r8): one more quantum past that, so the forward
-    # margin is (q, 2q], for ~q/extent more rows per fill (the fill is
-    # dominated by fixed plan+exec cost, not rows; the 11k-cap
-    # fallback still catches grids the margin pushes over). The cache
-    # looks windows up by exact key, so a request in the next cell
-    # fills a window of its own: the margin serves no request yet.
-    assert 0 < b - end_ms <= q
-    b += q
-    return a, b
+    # one half-open rule for every request: an ``end`` on a quantum
+    # boundary shares the window of the requests after it
+    return a, a + ((end_ms - a) // q + 1) * q
 
 
-class RangeResultCache:
-    """LRU of collected range-query results keyed on the widened
-    window, bounded by total cached ROWS (a matrix result is one row
-    per series per step; bounding entries alone would let a few
-    high-cardinality results hold arbitrary memory)."""
+class LRUCache:
+    """Thread-safe LRU map bounded by a budget on the summed
+    ``cost(key, value)`` of its entries (default: 1 per entry). A value
+    costing more than the whole budget is never stored; each store
+    evicts least-recently-used entries until the sum fits the budget,
+    so a lowered budget takes effect at the next store, and 0 stores
+    nothing."""
 
-    def __init__(self, max_rows: int = 2_000_000):
-        self.max_rows = max_rows
-        self._entries: OrderedDict[tuple, list] = OrderedDict()
-        self._rows = 0
+    def __init__(
+        self, budget: int, cost: Callable[[tuple, object], int] = lambda k, v: 1
+    ):
+        self.budget = budget
+        self._cost = cost
+        self._entries: OrderedDict[tuple, object] = OrderedDict()
+        self._used = 0
         self._lock = threading.Lock()
         self.hits = 0
         self.misses = 0
 
-    def get_or_fill(self, key: tuple, fill: Callable[[], list]) -> list:
+    def _lookup(self, key: tuple):
+        value = self._entries.get(key)
+        if value is not None:
+            self._entries.move_to_end(key)
+        return value
+
+    def _store(self, key: tuple, value) -> None:
+        old = self._entries.pop(key, None)
+        if old is not None:
+            self._used -= self._cost(key, old)
+        size = self._cost(key, value)
+        if size <= self.budget:
+            self._entries[key] = value
+            self._used += size
+        while self._used > self.budget:
+            old_key, old = self._entries.popitem(last=False)
+            self._used -= self._cost(old_key, old)
+
+    def get(self, key: tuple):
+        """The value stored under ``key`` (now the most recently used),
+        or None."""
         with self._lock:
-            if key in self._entries:
-                self._entries.move_to_end(key)
+            return self._lookup(key)
+
+    def put(self, key: tuple, value) -> None:
+        with self._lock:
+            self._store(key, value)
+
+    def get_or_fill(self, key: tuple, fill: Callable[[], object]):
+        with self._lock:
+            value = self._lookup(key)
+            if value is not None:
                 self.hits += 1
-                return self._entries[key]
+                return value
         # fill outside the lock: a Spark collect must never serialize
         # other requests behind it (concurrent same-key fills are
         # benign — last one wins, both are correct)
-        rows = fill()
+        value = fill()
         with self._lock:
             self.misses += 1
-            if len(rows) <= self.max_rows:
-                if key not in self._entries:
-                    self._rows += len(rows)
-                self._entries[key] = rows
-                self._entries.move_to_end(key)
-                while self._rows > self.max_rows and len(self._entries) > 1:
-                    _, old = self._entries.popitem(last=False)
-                    self._rows -= len(old)
-        return rows
+            self._store(key, value)
+        return value
+
+
+class RangeResultCache(LRUCache):
+    """Collected range-query rows keyed on the widened window
+    ``(query, step, a, b)``, bounded by total cached ROWS (a matrix
+    result is one row per series per step; bounding entries alone
+    would let a few high-cardinality results hold arbitrary
+    memory)."""
+
+    def __init__(self, max_rows: int = 2_000_000):
+        super().__init__(max_rows, lambda _key, rows: len(rows))
 
 
 #: byte budget of one snapshot's :class:`ResponseCache`, charged as
@@ -172,53 +208,31 @@ RESPONSE_CACHE_BYTES = 16 * 1024 * 1024
 RESPONSE_ENTRY_OVERHEAD = 512
 
 
-class ResponseCache:
-    """LRU of finished HTTP answers ``(status, body, headers)``, keyed
-    on the exact request ``(path, raw query string, content encoding)``
-    and bounded by the bytes its entries hold (see
-    :data:`RESPONSE_CACHE_BYTES`). A range panel aligned to its step
-    re-sends one exact request for a whole step of refreshes; a hit
-    here skips the row restriction, the matrix marshalling, JSON and
-    compression that :class:`RangeResultCache` still leaves per hit.
-    Scoped like it: one per ``PromAPI`` snapshot, so a write or a
-    maintenance commit drops every entry with the snapshot. The
+def _response_cost(key: tuple, resp: tuple) -> int:
+    path, query, _enc = key
+    return len(resp[1]) + len(path) + len(query) + RESPONSE_ENTRY_OVERHEAD
+
+
+class ResponseCache(LRUCache):
+    """Finished HTTP answers ``(status, body, headers)``, keyed on the
+    exact request ``(path, raw query string, content encoding)`` and
+    bounded by the bytes its entries hold (see
+    :data:`RESPONSE_CACHE_BYTES`); an answer over the whole budget is
+    never held. A range panel aligned to its step re-sends one exact
+    request for a whole step of refreshes, and a dashboard variable
+    re-sends one label-values request on every refresh; a hit skips
+    the evaluation, marshalling, JSON and compression. Scoped like
+    :class:`RangeResultCache`: one per ``PromAPI`` snapshot, so a write
+    or a maintenance commit drops every entry with the snapshot. The
     ``headers`` mapping is stored as given, so callers share one
     immutable mapping per encoding."""
 
     def __init__(self, max_bytes: int):
-        self.max_bytes = max_bytes
-        self._entries: OrderedDict[tuple, tuple] = OrderedDict()
-        self._bytes = 0
-        self._lock = threading.Lock()
-
-    @staticmethod
-    def _cost(key: tuple, resp: tuple) -> int:
-        path, query, _enc = key
-        return len(resp[1]) + len(path) + len(query) + RESPONSE_ENTRY_OVERHEAD
-
-    def get(self, key: tuple) -> tuple | None:
-        with self._lock:
-            resp = self._entries.get(key)
-            if resp is not None:
-                self._entries.move_to_end(key)
-            return resp
-
-    def put(self, key: tuple, resp: tuple) -> None:
-        size = self._cost(key, resp)
-        if size > self.max_bytes:
-            return
-        with self._lock:
-            old = self._entries.pop(key, None)
-            if old is not None:
-                self._bytes -= self._cost(key, old)
-            self._entries[key] = resp
-            self._bytes += size
-            while self._bytes > self.max_bytes:
-                old_key, old = self._entries.popitem(last=False)
-                self._bytes -= self._cost(old_key, old)
+        super().__init__(max_bytes, _response_cost)
 
 
 __all__ = [
+    "LRUCache",
     "RangeResultCache",
     "ResponseCache",
     "RESPONSE_CACHE_BYTES",

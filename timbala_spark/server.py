@@ -355,8 +355,6 @@ class TimbalaServer:
     def _engine_api(self) -> PromAPI:
         with self._lock:
             if self._api is None:
-                import os
-
                 from .streaming.store import resolve_store
 
                 st = resolve_store(self.store_path)
@@ -573,15 +571,16 @@ class TimbalaServer:
         status, body, extra = self._encode_api(payload, self._content_encoding(h))
         self._respond(h, status, body, extra=extra)
 
-    def _answer_range(self, h: BaseHTTPRequestHandler, url, answer) -> None:
-        """Answer a ``query_range`` through the snapshot's
-        encoded-response cache, keyed on the exact request (path, raw
-        query, content encoding). ``answer(api)`` computes the payload.
-        One snapshot serves the whole request, and an answer is stored
-        only in the cache of the snapshot that computed it: a write
-        landing mid-request swaps in a new ``PromAPI`` with an empty
-        cache, so a stale body is never visible. Errors are never
-        stored (timeouts are transient)."""
+    def _answer_cached(self, h: BaseHTTPRequestHandler, url, answer) -> None:
+        """Answer a ``query_range``, label-values or ``/series`` request
+        through the snapshot's encoded-response cache, keyed on the
+        exact request (path, raw query, content encoding).
+        ``answer(api)`` parses the parameters and computes the payload,
+        so a hit skips both. One snapshot serves the whole request, and
+        an answer is stored only in the cache of the snapshot that
+        computed it: a write landing mid-request swaps in a new
+        ``PromAPI`` with an empty cache, so a stale body is never
+        visible. Errors are never stored (timeouts are transient)."""
         enc = self._content_encoding(h)
         api = self._engine_api()
         key = (url.path, url.query, enc)
@@ -604,8 +603,6 @@ class TimbalaServer:
         validated, then the reference panics("disabled") — deletion is
         upstream-disabled. Surface that as a well-formed internal
         error instead of a dropped connection."""
-        from urllib.parse import parse_qs, urlparse
-
         url = urlparse(h.path)
         if url.path != "/api/v1/series":
             self._respond(h, 404, b"")
@@ -659,7 +656,7 @@ class TimbalaServer:
                     raise ValueError("missing query parameter")
                 # parameters parse inside the answer (a ValueError
                 # there is still bad_data), so a cache hit skips them
-                return self._answer_range(
+                return self._answer_cached(
                     h,
                     url,
                     lambda api: api.query_range(
@@ -677,16 +674,17 @@ class TimbalaServer:
                 and parts[1:4] == ["api", "v1", "label"]
                 and parts[5] == "values"
             ):
-                return self._respond_api(
-                    h, self._engine_api().label_values(unquote(parts[4]))
+                return self._answer_cached(
+                    h, url, lambda api: api.label_values(unquote(parts[4]))
                 )
             if url.path == "/api/v1/series":
                 # absent start/end default to minTime/maxTime — the
                 # range is UNBOUNDED, so samples at future timestamps
                 # still match (api.go:274-302)
-                return self._respond_api(
+                return self._answer_cached(
                     h,
-                    self._engine_api().series(
+                    url,
+                    lambda api: api.series(
                         q.get("match[]", []),
                         _parse_time(p("start"), _MIN_TIME_S),
                         _parse_time(p("end"), _MAX_TIME_S),
