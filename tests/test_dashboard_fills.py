@@ -1,9 +1,10 @@
 """What one dashboard panel fill costs, and how often it happens.
 
-* An advancing instant panel fills once per quantum: the frontend's
-  window is chosen by the half-open quantum cell the request's time
-  falls in, so a request on the boundary shares the window of the
-  requests after it (``frontend.quantize_range``).
+* An advancing instant panel fills once per lookback: an instant
+  request's cell is the engine's lookback, and the frontend's window
+  is chosen by the half-open cell the request's time falls in, so a
+  request on the boundary shares the window of the requests after it
+  (``frontend.quantize_range``, ``frontend.instant_quantum_ms``).
 * A fill over a compacted store reads the series dictionary without a
   collapse aggregate (``read_samples_table``: the dictionary collapse
   is gated on the ``_dirty`` marker, like the samples collapse), so
@@ -20,7 +21,12 @@ import pytest
 
 from timbala_spark import Engine, prepare_samples
 from timbala_spark.api import PromAPI
-from timbala_spark.frontend import INSTANT_STEP_MS, quantize_range
+from timbala_spark.frontend import (
+    INSTANT_STEP_MS,
+    instant_quantum_ms,
+    quantize_range,
+)
+from timbala_spark.model import DEFAULT_LOOKBACK_MS
 from timbala_spark.streaming import read_samples_table
 from timbala_spark.streaming.compact import compact_store
 from timbala_spark.streaming.ingest import write_samples_batch
@@ -80,11 +86,11 @@ def _has_dict_collapse(df) -> bool:
 
 
 class TestOneFillPerQuantum:
-    def test_instant_requests_over_a_minute_build_once(self, spark, compacted):
-        """Whole-second instants at ``m-1, m, m+1 … m+59`` (``m`` on a
-        minute): from ``m`` on, ``query_range`` is built exactly once.
-        A request on the boundary used to get a window of its own, so
-        ``m`` and ``m+1`` each built one."""
+    def test_instant_requests_over_a_lookback_build_once(self, spark, compacted):
+        """Whole-second instants at ``m-1, m, m+1 … m+299`` (``m`` on a
+        5 min lookback cell): from ``m`` on, ``query_range`` is built
+        exactly once. A request on the boundary used to get a window of
+        its own, so ``m`` and ``m+1`` each built one."""
         api = PromAPI(
             Engine(spark, read_samples_table(spark, compacted)), timeout_s=600
         )
@@ -96,17 +102,18 @@ class TestOneFillPerQuantum:
             return query_range(*args, **kwargs)
 
         api.engine.query_range = counting
-        m = (T0 + 3_600_000) // 60_000 * 60_000
+        cell = instant_quantum_ms(DEFAULT_LOOKBACK_MS)
+        m = (T0 + 3_600_000) // cell * cell
         direct = PromAPI(api.engine, timeout_s=600, range_cache_rows=0)
         want = {}
-        for t_ms in (m - 1000, m, m + 59_000):
+        for t_ms in (m - 1000, m, m + cell - 1000):
             want[t_ms] = direct.query(QUERY, t_ms / 1000)
         built.clear()
 
         got = {m - 1000: api.query(QUERY, (m - 1000) / 1000)}
         assert len(built) == 1
         built.clear()
-        for k in range(60):
+        for k in range(cell // 1000):
             t_ms = m + k * 1000
             got[t_ms] = api.query(QUERY, t_ms / 1000)
             assert got[t_ms]["status"] == "success", got[t_ms]
@@ -115,14 +122,42 @@ class TestOneFillPerQuantum:
             assert got[t_ms] == env, t_ms
 
     def test_boundary_request_shares_the_next_window(self):
-        m = (T0 + 3_600_000) // 60_000 * 60_000
+        cell = instant_quantum_ms(DEFAULT_LOOKBACK_MS)
+        assert cell == 300_000
+        m = (T0 + 3_600_000) // cell * cell
         windows = {
-            quantize_range(t, t, INSTANT_STEP_MS)
-            for t in range(m, m + 60_000, INSTANT_STEP_MS)
+            quantize_range(t, t, INSTANT_STEP_MS, cell)
+            for t in range(m, m + cell, INSTANT_STEP_MS)
         }
         assert len(windows) == 1
         (a, b), = windows
-        assert a == m and b == m + 60_000
+        assert a == m and b == m + cell
+
+    def test_over_budget_window_fills_once(self, spark, compacted):
+        """An instant window whose rows exceed the rows budget is served
+        but not stored; the snapshot remembers its ``(query, step)``, so
+        the later instants of the cell take the direct path instead of
+        building and filling the whole window again."""
+        api = PromAPI(
+            Engine(spark, read_samples_table(spark, compacted)),
+            timeout_s=600,
+            range_cache_rows=5,
+        )
+        built = []
+        query_range = api.engine.query_range
+
+        def counting(*args, **kwargs):
+            built.append(args)
+            return query_range(*args, **kwargs)
+
+        api.engine.query_range = counting
+        direct = PromAPI(api.engine, timeout_s=600, range_cache_rows=0)
+        t0 = (T0 + 3_600_000) // 1000
+        for k in range(4):
+            assert api.query(QUERY, t0 + k) == direct.query(QUERY, t0 + k)
+        assert len(built) == 1, built
+        rc = api._range_cache
+        assert rc._used <= rc.budget
 
 
 class TestCompactedDictionaryRead:

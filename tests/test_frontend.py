@@ -15,8 +15,10 @@ from timbala_spark import Engine, prepare_samples
 from timbala_spark.api import PromAPI
 from timbala_spark.frontend import (
     RESPONSE_ENTRY_OVERHEAD,
+    LRUCache,
     RangeResultCache,
     ResponseCache,
+    WindowRows,
     quantize_range,
 )
 
@@ -151,6 +153,60 @@ class TestQuantizeRange:
             tracemalloc.stop()
         assert len(c._entries) < 20_000  # the budget evicted
         assert held <= budget, held
+
+
+class TestCacheBounds:
+    """Every entry is charged a fixed overhead, so no cache holds free
+    entries: a flood of distinct empty answers stays under each
+    cache's budget."""
+
+    N = 100_000
+
+    def _flood(self, cache, value) -> None:
+        for i in range(self.N):
+            cache.get_or_fill((f"q{i}", 1, i, i + 1), lambda: value)
+        assert cache._used <= cache.budget
+        assert len(cache._entries) <= cache.budget
+
+    def test_rows_cache_flood_of_empty_windows(self):
+        self._flood(RangeResultCache(max_rows=10), WindowRows([]))
+
+    def test_response_cache_flood_of_empty_bodies(self):
+        c = ResponseCache(max_bytes=4 * RESPONSE_ENTRY_OVERHEAD)
+        for i in range(self.N):
+            c.put(("/p", f"q{i}", None), (200, b"", {}))
+        assert c._used <= c.budget
+        assert len(c._entries) <= 4
+
+    def test_plan_cache_flood(self):
+        """The engine's plan cache is an ``LRUCache`` of one charge per
+        plan (``Engine._plans``)."""
+        self._flood(LRUCache(10), object())
+
+
+class TestWindowRows:
+    def test_a_hit_reads_only_the_requested_points(self):
+        """A window's rows are grouped by grid time once, when it is
+        filled; reading one instant or a short range then touches only
+        the rows it returns, not the window's 301 x 100 rows."""
+        reads = []
+
+        class Row(dict):
+            def __getitem__(self, k):
+                reads.append(k)
+                return dict.__getitem__(self, k)
+
+        step = 1000
+        rows = [Row(t=t * step, s=s) for s in range(100) for t in range(301)]
+        window = WindowRows(rows)
+        assert len(window) == len(rows)
+        reads.clear()
+        got = window.between(150 * step, 150 * step, step)
+        assert reads == [] and got == [r for r in rows if r["t"] == 150 * step]
+        reads.clear()
+        got = window.between(10 * step, 13 * step, 3 * step)
+        assert reads == [] and len(got) == 200
+        assert {r["t"] for r in got} == {10 * step, 13 * step}
 
 
 @pytest.fixture(scope="module")

@@ -553,6 +553,39 @@ class TestResponseCache:
         assert status == 200
         assert dict(second["data"]["result"][0]["values"])[at] == "7"
 
+    def test_write_mid_fill_never_serves_old_rows(self, server, monkeypatch):
+        """A write lands while an instant request fills its widened
+        window: the window belongs to the old snapshot, so a later
+        instant of the same cell computes on the new snapshot and sees
+        the write."""
+        from timbala_spark.api import PromAPI
+        from timbala_spark.sources.wire import encode_write_request
+
+        base = self.BASE_MS + 25_000_000
+        _write_counters(server, "fill_total", base, n_series=1, n_samples=21)
+        at = base / 1000 + 240
+        orig = PromAPI._gated_collect
+        written = []
+
+        def collect_then_write(self, *a, **kw):
+            rows = orig(self, *a, **kw)
+            if not written:
+                written.append(_post(server, "/write", encode_write_request([{
+                    "labels": {"__name__": "fill_total", "job": "j0", "i": "0"},
+                    "samples": [[int(at * 1000) + 1000, 7.0]],
+                }]))[0])
+            return rows
+
+        monkeypatch.setattr(PromAPI, "_gated_collect", collect_then_write)
+        status, first = _get(server, f"/api/v1/query?query=fill_total&time={at:.0f}")
+        assert status == 200 and written == [200]
+        assert first["data"]["result"][0]["value"][1] == "240"
+        status, second = _get(
+            server, f"/api/v1/query?query=fill_total&time={at + 2:.0f}"
+        )
+        assert status == 200
+        assert second["data"]["result"][0]["value"] == [at + 2, "7"]
+
     def test_encodings_decode_to_identical_json(self, server):
         base = self.BASE_MS + 30_000_000
         _write_counters(server, "enc_total", base)
@@ -815,6 +848,48 @@ class TestMetaAnswerCache:
         assert got[0][1]["data"] == ["a", "b"] and len(got[2][1]["data"]) == 2
         assert len(builds) == len(parses) == 2
         assert held == 0
+
+
+class TestEveryRequestAnswered:
+    """Values a parser turns into infinities, and exceptions no route
+    expects, still get a well-formed answer on a usable connection."""
+
+    def test_infinite_step_answers_400(self, server):
+        status, payload = _get(server, _range_path("up", 0, 3600, "inf"))
+        assert status == 400 and payload["errorType"] == "bad_data"
+        assert payload["error"] == (
+            'cannot parse "inf" to a valid duration. It overflows int64'
+        )
+
+    @pytest.mark.parametrize("value", ["inf", "-Inf", "NaN", "1e400", "1e16"])
+    def test_non_finite_or_overflowing_time_answers_400(self, server, value):
+        status, payload = _get(server, f"/api/v1/query?query=up&time={value}")
+        assert status == 400 and payload["errorType"] == "bad_data"
+        assert payload["error"] == f'cannot parse "{value}" to a valid timestamp'
+        status, payload = _get(server, _range_path("up", 0, value))
+        assert status == 400 and payload["errorType"] == "bad_data"
+
+    def test_unexpected_exceptions_answer_internal(self, server, monkeypatch):
+        import timbala_spark.server as server_mod
+        from timbala_spark.api import PromAPI
+        from timbala_spark.sources.wire import encode_write_request
+
+        def boom(*a, **kw):
+            raise RuntimeError("boom")
+
+        monkeypatch.setattr(PromAPI, "query", boom)
+        status, payload = _get(server, "/api/v1/query?query=up&time=1")
+        assert (status, payload["errorType"], payload["error"]) == (
+            500, "internal", "boom"
+        )
+        monkeypatch.setattr(server_mod, "write_samples_batch", boom)
+        status, body = _post(server, "/write", encode_write_request([{
+            "labels": {"__name__": "never_total"}, "samples": [[1, 1.0]],
+        }]))
+        assert status == 500 and json.loads(body)["errorType"] == "internal"
+        monkeypatch.undo()
+        status, payload = _get(server, "/api/v1/query?query=1%2B1&time=1")
+        assert status == 200 and payload["data"]["result"][1] == "2"
 
 
 class TestParseDuration:

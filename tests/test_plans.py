@@ -341,6 +341,7 @@ class TestBuildRoundTrips:
         "a / on(job, le, instance) group_left(x) b": 349,
         'count_values("v", m)': 783,
         'label_replace(m, "dst", "$1", "job", "(.*)")': 566,
+        'sum(up{job="j0"})': 386,
     }
 
     @pytest.fixture(scope="class")

@@ -216,8 +216,8 @@ class PromAPI:
         # ``time`` of a 1 s-step range evaluation (range grids evaluate
         # each step independently — the reference walks the same
         # ``evalInstant`` per grid point, ``promql/engine.go:1016-
-        # 1044``), so advancing-``now()`` instant dashboards share the
-        # range path's quantum windows. Raw-sample matrices are not
+        # 1044``), so advancing-``now()`` instant dashboards share one
+        # window per lookback-long cell. Raw-sample matrices are not
         # range-able, and ``sort``/``sort_desc`` answer in the plan's
         # collect order, which a shared cache must not assume; both and
         # any ``time`` off the 1 s grid take the direct path.
@@ -343,35 +343,56 @@ class PromAPI:
         """The rows of ``[start, end]`` at ``step``, evaluated over the
         enclosing quantum window (:func:`frontend.quantize_range`) and
         served from the snapshot's results cache; an instant query is
-        the case ``start = end``. The widened grid preserves the
-        request's step phase, so its rows in ``[start, end]`` are
-        exactly the requested grid points (range evaluation is
-        per-step independent). A timeout raises :class:`QueryTimeout`.
-        Returns None to take the exact direct path: cache off, a step
-        under 1 ms, a widened grid past the points cap, or any
-        evaluation error (errors must surface with the semantics of the
-        REQUESTED window — and since the widened grid is a superset, an
-        error at a requested point always re-raises there)."""
-        if self._range_cache is None or step_ms <= 0:
+        the case ``start = end``, and its cell is the engine's lookback
+        (:func:`frontend.instant_quantum_ms`). The widened grid
+        preserves the request's step phase, so its rows in ``[start,
+        end]`` are exactly the requested grid points (range evaluation
+        is per-step independent). A timeout raises
+        :class:`QueryTimeout`. Returns None to take the exact direct
+        path: cache off, a step under 1 ms, a widened grid past the
+        points cap, a ``(query, step)`` whose window was once too big
+        for the rows budget, or any evaluation error (errors must
+        surface with the semantics of the REQUESTED window — and since
+        the widened grid is a superset, an error at a requested point
+        always re-raises there)."""
+        cache = self._range_cache
+        if cache is None or step_ms <= 0:
             return None
-        a, b = frontend.quantize_range(start_ms, end_ms, step_ms)
+        # a window over the budget is never stored: its (query, step)
+        # keeps a marker (one overhead charge) instead, so the next
+        # request does not fill the whole window again
+        too_big = (query, step_ms)
+        if cache.get(too_big) is not None:
+            return None
+        quantum = (
+            frontend.instant_quantum_ms(self.engine.lookback_ms)
+            if start_ms == end_ms
+            else None
+        )
+        a, b = frontend.quantize_range(start_ms, end_ms, step_ms, quantum)
         if (b - a) // step_ms > self.engine.max_points:
             return None
-        try:
-            rows = self._range_cache.get_or_fill(
-                (query, step_ms, a, b),
-                lambda: self._gated_collect(
+
+        def fill() -> frontend.WindowRows:
+            window = frontend.WindowRows(
+                self._gated_collect(
                     self.engine.query_range(
                         query, a / 1000.0, b / 1000.0, step_ms / 1000.0
                     ),
                     timeout_s,
-                ),
+                )
             )
+            if not cache.fits(too_big, window):
+                cache.put(too_big, ())
+            return window
+
+        try:
+            window = cache.get_or_fill((query, step_ms, a, b), fill)
         except QueryTimeout:
             raise
         except Exception:
             return None
-        return [r for r in rows if start_ms <= r["t"] <= end_ms]
+        return window.between(start_ms, end_ms, step_ms)
 
     def _matrix(self, rows) -> list[dict]:
         by_series: dict[tuple, dict] = {}

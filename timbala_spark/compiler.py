@@ -22,6 +22,8 @@ both of which are ``step_idx ∈ [ceil((t'-start)/step), floor((t'+W-start)/step
 for window ``W``.  ``explode(sequence(lo, hi))`` expands map-side, then a
 single hash aggregation per ``(series_id, step_t)`` computes the
 operator kernel.  Expansion factor is bounded by ``min(W/step, n)``.
+The instant selector needs no aggregation: each sample's run stops
+before its series' next sample (``lead``), so its rows are the answer's.
 
 Value model (reference ``promql/value.go:36-46``)
 -------------------------------------------------
@@ -574,40 +576,54 @@ def _base_scan(ctx: EvalContext, name, matchers, lo_t, hi_t) -> DataFrame:
     return df
 
 
-def _explode_grid(
+def _grid_span(
     ctx: EvalContext, df: DataFrame, offset_ms: int, window_ms: int
 ) -> DataFrame:
-    """Map each sample to the step indexes whose window ``[step_t - W,
-    step_t]`` (both ends inclusive, matching the vendored engine) contains
-    the (offset-shifted) sample time. Adds ``ts`` (shifted sample time)
-    and ``step_t``.
+    """Add each sample's shifted time ``ts`` and the run of step
+    indexes ``[_ilo, _ihi]`` whose window ``[step_t - W, step_t]``
+    (both ends inclusive, matching the vendored engine) contains it,
+    dropping samples that serve no step.
 
     Built as batched ``selectExpr`` SQL (parsed JVM-side in a few py4j
     round trips) instead of a Column-op forest: this helper sits under
     EVERY range/selector path and driver-side plan construction is
-    round-trip-bound (PERF §13). The SQL mirrors the former Column
-    tree exactly — ``_floordiv(a, s) = CAST((a - pmod(a, s)) / s AS
-    BIGINT)``, ``_ceildiv(a, s) = -_floordiv(-a, s)``."""
+    round-trip-bound (PERF §13). ``CAST((a - pmod(a, s)) / s AS
+    BIGINT)`` is exact floor division, and ``-floor(-a / s)`` the
+    ceiling."""
     start, step, n_hi = ctx.start, ctx.step, ctx.n_steps - 1
     off, win = int(offset_ms), int(window_ms)
-
-    def fdiv(a: str) -> str:
-        return f"CAST((({a}) - pmod({a}, {step})) / {step} AS BIGINT)"
-
     df = df.selectExpr("*", f"CAST(t + {off} AS BIGINT) AS ts")
-    df = (
-        df.selectExpr(
-            "*",
-            f"GREATEST(-{fdiv(f'-(ts - {start})')}, CAST(0 AS BIGINT)) AS _ilo",
-            f"LEAST({fdiv(f'ts + {win} - {start}')}, "
-            f"CAST({n_hi} AS BIGINT)) AS _ihi",
-        )
-        .filter("_ilo <= _ihi")
-        .selectExpr("*", "explode(sequence(_ilo, _ihi)) AS step_idx")
-    )
     return df.selectExpr(
+        "*",
+        f"GREATEST(-{_fdiv_sql(f'-(ts - {start})', step)}, CAST(0 AS BIGINT))"
+        " AS _ilo",
+        f"LEAST({_fdiv_sql(f'ts + {win} - {start}', step)}, "
+        f"CAST({n_hi} AS BIGINT)) AS _ihi",
+    ).filter("_ilo <= _ihi")
+
+
+def _fdiv_sql(a: str, step: int) -> str:
+    """Exact floor division of a long SQL expression by ``step``."""
+    return f"CAST((({a}) - pmod({a}, {step})) / {step} AS BIGINT)"
+
+
+def _explode_span(ctx: EvalContext, df: DataFrame) -> DataFrame:
+    """One row per step index in ``[_ilo, _ihi]``, with its ``step_t``."""
+    start, step = ctx.start, ctx.step
+    return df.selectExpr(
+        "*", "explode(sequence(_ilo, _ihi)) AS step_idx"
+    ).selectExpr(
         "*", f"CAST({start} + step_idx * CAST({step} AS BIGINT) AS BIGINT) AS step_t"
     )
+
+
+def _explode_grid(
+    ctx: EvalContext, df: DataFrame, offset_ms: int, window_ms: int
+) -> DataFrame:
+    """Map each sample to every step whose window ``[step_t - W,
+    step_t]`` contains its (offset-shifted) time: adds ``ts`` and
+    ``step_t`` (:func:`_grid_span`, then one row per step)."""
+    return _explode_span(ctx, _grid_span(ctx, df, offset_ms, window_ms))
 
 
 def compile_vector_selector(vs: VectorSelector, ctx: EvalContext) -> VectorValue:
@@ -616,6 +632,17 @@ def compile_vector_selector(vs: VectorSelector, ctx: EvalContext) -> VectorValue
     (``engine.go:766-806``; ``:792`` rejects ``t < refTime -
     LookbackDelta``, so the left bound is inclusive in the vendored
     1.x engine — modern Prometheus later made it exclusive).
+
+    Each sample owns the steps from its own time up to, not including,
+    its series' next sample, and at most ``lookback`` past it:
+    ``lead(ts)`` over ``(series_id ORDER BY ts)`` caps the step run of
+    :func:`_grid_span`. Every ``(series, step)`` then has exactly one
+    candidate, the answer, so no aggregate runs and the rows are the
+    answer's rows (a 15 s scrape on a 1 s grid used to copy each
+    sample to 300 steps and keep one in 20). Dropping the samples that
+    serve no step before the ``lead`` is exact: such a sample's steps
+    ``[t, t + lookback]`` hold no grid point, so the steps it would
+    have taken from its predecessor hold none either.
 
     When a registered rollup's windows tile the lookback
     (``rollup.pick_rollup`` with the ``SELECTOR`` sentinel) the answer
@@ -639,20 +666,20 @@ def compile_vector_selector(vs: VectorSelector, ctx: EvalContext) -> VectorValue
     lo = ctx.start - ctx.lookback - vs.offset_ms
     hi = ctx.end - vs.offset_ms
     base = _base_scan(ctx, vs.name, vs.matchers, lo, hi)
-    g = _explode_grid(ctx, base, vs.offset_ms, ctx.lookback)
+    g = _grid_span(ctx, base, vs.offset_ms, ctx.lookback)
     # Staleness markers are NULL values (the engine's analog of the
-    # reference's stale-NaN bit pattern, engine.go:796): a series whose
-    # most recent in-window sample is a marker is absent at that step.
+    # reference's stale-NaN bit pattern, engine.go:796): a marker owns
+    # its steps like a sample, so the series is absent there; its rows
+    # go once the next sample has capped the previous one. LEAST skips
+    # the NULL ``lead`` of a series' last sample.
     # (Batched SQL strings, not a Column forest — PERF §13.)
-    out = (
-        g.groupBy("series_id", "step_t")
-        .agg(F.expr("max_by(struct(t, v, labels), t) AS s"))
-        .filter("s.v IS NOT NULL")
-        .selectExpr(
-            "step_t", "s.labels AS labels", "s.v AS v", "s.t AS sample_t"
-        )
-    )
-    return VectorValue(out)
+    nxt = "lead(ts) OVER (PARTITION BY series_id ORDER BY ts)"
+    cap = _fdiv_sql(f"{nxt} - 1 - {ctx.start}", ctx.step)
+    g = g.selectExpr(
+        "labels", "t", "v", "_ilo", f"LEAST(_ihi, {cap}) AS _ihi"
+    ).filter("v IS NOT NULL AND _ilo <= _ihi")
+    out = _explode_span(ctx, g)
+    return VectorValue(out.selectExpr("step_t", "labels", "v", "t AS sample_t"))
 
 
 def _rollup_selector(vs: VectorSelector, ctx: EvalContext, w: int) -> DataFrame:
@@ -1432,9 +1459,10 @@ class Compiler:
                 # step-varying parameter: evalInt runs at every step
                 # BEFORE the vector is examined (engine.go:1254-1258),
                 # so a bad k errors even for steps whose input vector is
-                # empty — hence the check lives on the broadcast side,
-                # whose hashed-relation build materializes every step's
-                # projection regardless of join matches.
+                # empty — hence the check is materialized eagerly: once
+                # adaptive execution sees an empty input vector it drops
+                # the join, and a lazy check on its broadcast side with
+                # it.
                 kraw = F.col("v")
                 bad = (
                     F.isnan(kraw)
@@ -1451,7 +1479,7 @@ class Compiler:
                 kdf = self.ctx.scalar_df(pv).select(
                     "step_t",
                     _raise_if(bad, kraw, msg).cast("long").alias("_k"),
-                )
+                ).localCheckpoint()
                 df = df.join(F.broadcast(kdf), "step_t", "inner")
                 k_col = F.col("_k")
             out = (

@@ -44,14 +44,28 @@ is that design reduced to one node:
   instant query at time ``T`` is exactly the grid point ``T`` of a
   range evaluation whose grid contains ``T`` (per-step independence
   again), so when ``T`` is a multiple of :data:`INSTANT_STEP_MS` the
-  API widens it to the enclosing quantum window at that step and
-  restricts to the one grid row — advancing-``now()`` instant
-  dashboards then hit one fill per quantum instead of paying the
-  ~0.4 s direct plan+eval per refresh (PERF.md §13). A ``time`` off
-  the 1 s grid lies on no shareable grid and takes the direct path
-  (the upstream frontends stop at ``query_range`` entirely; this
-  exact-reuse extension is safe for the same restriction reason as
-  the range path).
+  API widens it to the enclosing window at that step and reads the
+  one grid row — advancing-``now()`` instant dashboards then pay one
+  fill per cell instead of the ~0.4 s direct plan+eval per refresh
+  (PERF.md §13). A ``time`` off the 1 s grid lies on no shareable
+  grid and takes the direct path (the upstream frontends stop at
+  ``query_range`` entirely; this exact-reuse extension is safe for
+  the same restriction reason as the range path).
+
+* **An instant cell is one lookback.** A fill costs Spark's fixed
+  per-query floor (jobs, Catalyst, code generation), not its rows:
+  the raw selector emits one row per ``(series, step)``, so a
+  301-point fill costs about what a 61-point one did (PERF §26). An
+  instant request's quantum is therefore the engine's lookback (5 min
+  by default), clamped to ``[MIN_QUANTUM_S, MAX_QUANTUM_S]``
+  (:func:`instant_quantum_ms`); range requests keep the quarter-extent
+  rule. A window's rows are kept grouped by grid time
+  (:class:`WindowRows`), so a hit reads only the requested points.
+
+* **A window too big for the rows budget fills once.** Its rows are
+  served but not stored, and the snapshot remembers its ``(query,
+  step)``: later requests take the direct path instead of filling the
+  whole window again on every request.
 
 * **Exact repeats are served as finished bytes.** Range panels align
   ``start``/``end`` to the step, so one exact request repeats for a
@@ -85,6 +99,13 @@ from collections.abc import Callable
 #: the next quantum boundary past the request's end, no prefetch
 MIN_QUANTUM_S = 60.0
 MAX_QUANTUM_S = 3600.0
+
+
+def instant_quantum_ms(lookback_ms: int) -> int:
+    """An instant request's cell: the lookback, clamped to
+    ``[MIN_QUANTUM_S, MAX_QUANTUM_S]``."""
+    return int(min(max(lookback_ms, MIN_QUANTUM_S * 1000), MAX_QUANTUM_S * 1000))
+
 
 #: grid step for caching INSTANT queries: a request whose ``time`` is
 #: a whole multiple of this lands on a shareable widened-window grid;
@@ -121,18 +142,22 @@ def quantize_range(
 
 
 class LRUCache:
-    """Thread-safe LRU map bounded by a budget on the summed
-    ``cost(key, value)`` of its entries (default: 1 per entry). A value
-    costing more than the whole budget is never stored; each store
-    evicts least-recently-used entries until the sum fits the budget,
-    so a lowered budget takes effect at the next store, and 0 stores
-    nothing."""
+    """Thread-safe LRU map bounded by a budget on the summed charges of
+    its entries: each entry is charged ``overhead + cost(key, value)``
+    (default: 1 per entry), so no entry is free and a flood of empty
+    values still fills the budget. A value charged more than the whole
+    budget is never stored; each store evicts least-recently-used
+    entries until the sum fits the budget, so a lowered budget takes
+    effect at the next store, and 0 stores nothing."""
 
     def __init__(
-        self, budget: int, cost: Callable[[tuple, object], int] = lambda k, v: 1
+        self,
+        budget: int,
+        cost: Callable[[tuple, object], int] = lambda k, v: 0,
+        overhead: int = 1,
     ):
         self.budget = budget
-        self._cost = cost
+        self._cost = lambda k, v: overhead + cost(k, v)
         self._entries: OrderedDict[tuple, object] = OrderedDict()
         self._used = 0
         self._lock = threading.Lock()
@@ -156,6 +181,10 @@ class LRUCache:
         while self._used > self.budget:
             old_key, old = self._entries.popitem(last=False)
             self._used -= self._cost(old_key, old)
+
+    def fits(self, key: tuple, value) -> bool:
+        """Whether ``value`` alone is within the budget."""
+        return self._cost(key, value) <= self.budget
 
     def get(self, key: tuple):
         """The value stored under ``key`` (now the most recently used),
@@ -183,12 +212,35 @@ class LRUCache:
         return value
 
 
+class WindowRows:
+    """One filled window's rows grouped by grid time ``t``, so reading
+    the points of a request costs the answer, not the window."""
+
+    __slots__ = ("by_t", "n")
+
+    def __init__(self, rows: list):
+        self.by_t: dict[int, list] = {}
+        for r in rows:
+            self.by_t.setdefault(r["t"], []).append(r)
+        self.n = len(rows)
+
+    def __len__(self) -> int:
+        return self.n
+
+    def between(self, start_ms: int, end_ms: int, step_ms: int) -> list:
+        """The rows at the grid points ``start, start + step … ≤ end``."""
+        by_t = self.by_t
+        return [
+            r for t in range(start_ms, end_ms + 1, step_ms) for r in by_t.get(t, ())
+        ]
+
+
 class RangeResultCache(LRUCache):
     """Collected range-query rows keyed on the widened window
-    ``(query, step, a, b)``, bounded by total cached ROWS (a matrix
-    result is one row per series per step; bounding entries alone
-    would let a few high-cardinality results hold arbitrary
-    memory)."""
+    ``(query, step, a, b)``, bounded by total cached ROWS plus one per
+    entry (a matrix result is one row per series per step; bounding
+    entries alone would let a few high-cardinality results hold
+    arbitrary memory)."""
 
     def __init__(self, max_rows: int = 2_000_000):
         super().__init__(max_rows, lambda _key, rows: len(rows))
@@ -210,7 +262,7 @@ RESPONSE_ENTRY_OVERHEAD = 512
 
 def _response_cost(key: tuple, resp: tuple) -> int:
     path, query, _enc = key
-    return len(resp[1]) + len(path) + len(query) + RESPONSE_ENTRY_OVERHEAD
+    return len(resp[1]) + len(path) + len(query)
 
 
 class ResponseCache(LRUCache):
@@ -228,16 +280,18 @@ class ResponseCache(LRUCache):
     immutable mapping per encoding."""
 
     def __init__(self, max_bytes: int):
-        super().__init__(max_bytes, _response_cost)
+        super().__init__(max_bytes, _response_cost, RESPONSE_ENTRY_OVERHEAD)
 
 
 __all__ = [
     "LRUCache",
     "RangeResultCache",
+    "WindowRows",
     "ResponseCache",
     "RESPONSE_CACHE_BYTES",
     "RESPONSE_ENTRY_OVERHEAD",
     "quantize_range",
+    "instant_quantum_ms",
     "MIN_QUANTUM_S",
     "MAX_QUANTUM_S",
     "INSTANT_STEP_MS",

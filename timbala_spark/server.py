@@ -20,8 +20,11 @@ of this request path — same decode, same store layout.
 
 from __future__ import annotations
 
+import datetime
 import gzip
 import json
+import logging
+import math
 import os
 import re
 import threading
@@ -65,26 +68,33 @@ _MIN_TIME_S = -9.223372036854775e12
 _MAX_TIME_S = 9.223372036854775e12
 
 
+#: 2^63: a time in ms, or a duration in ns, must stay under it in
+#: magnitude to fit an int64
+_INT64_LIMIT = 2.0**63
+
+
 def _parse_time(s: str | None, default: float | None = None) -> float:
-    """Prometheus API time parameter: unix float or RFC 3339."""
+    """Prometheus API time parameter: unix float or RFC 3339. A value
+    that is not finite or whose milliseconds overflow int64 (the
+    engine's time unit) is rejected like an unparsable one."""
     if s is None or s == "":
         if default is None:
             raise ValueError("missing time parameter")
         return default
     try:
-        return float(s)
+        t = float(s)
     except ValueError:
-        pass
-    import datetime
-
-    try:
-        return datetime.datetime.fromisoformat(
-            s.replace("Z", "+00:00")
-        ).timestamp()
-    except ValueError:
+        try:
+            t = datetime.datetime.fromisoformat(
+                s.replace("Z", "+00:00")
+            ).timestamp()
+        except ValueError:
+            t = math.nan
+    if not abs(t) * 1000 < _INT64_LIMIT:  # NaN fails too
         # parseTime (internal/api/v1/api.go): don't leak the Python
         # datetime error wording
-        raise ValueError(f'cannot parse "{s}" to a valid timestamp') from None
+        raise ValueError(f'cannot parse "{s}" to a valid timestamp')
+    return t
 
 
 _DUR_RE = re.compile(r"^(\d+)(ms|s|m|h|d|w|y)$")
@@ -96,16 +106,27 @@ def _parse_duration(s: str) -> float:
     else the vendored ``model.ParseDuration`` regex
     ``^([0-9]+)(y|w|d|h|m|s|ms)$`` — a SINGLE integer ``<number><unit>``
     group; compound (``1m30s``) and fractional-unit (``1.5s``) forms are
-    rejected with 400 exactly as the reference does."""
+    rejected with 400 exactly as the reference does. Durations are
+    int64 nanoseconds there: a float past that range "overflows int64"
+    (so does infinity), and NaN or a unit form past it does not
+    parse."""
     try:
-        return float(s)
+        d = float(s)
     except ValueError:
         pass
+    else:
+        if abs(d) * 1e9 > _INT64_LIMIT:
+            raise ValueError(
+                f'cannot parse "{s}" to a valid duration. It overflows int64'
+            )
+        if not math.isnan(d):
+            return d
     m = _DUR_RE.match(s)
-    if not m:
+    d = float(m.group(1)) * _DUR_UNITS[m.group(2)] if m else math.nan
+    if not d * 1e9 < _INT64_LIMIT:
         # parseDuration (internal/api/v1/api.go) wording
         raise ValueError(f'cannot parse "{s}" to a valid duration')
-    return float(m.group(1)) * _DUR_UNITS[m.group(2)]
+    return d
 
 
 class TimbalaServer:
@@ -283,14 +304,11 @@ class TimbalaServer:
                 if self.retention_ms is not None:
                     self.retain()
             except Exception:  # noqa: BLE001 — keep the loop alive
-                import logging
-
                 logging.getLogger(__name__).exception(
                     "background maintenance pass failed"
                 )
 
     def _rules_loop(self) -> None:
-        import logging
         import time as _time
 
         from .streaming.rules import (
@@ -694,7 +712,21 @@ class TimbalaServer:
             return self._respond_api(
                 h, {"status": "error", "errorType": ERR_BAD_DATA, "error": str(e)}
             )
+        except Exception as e:  # noqa: BLE001 — every request gets an answer
+            return self._internal_error(h, e)
         self._respond(h, 404, b"not found\n", "text/plain; charset=utf-8")
+
+    def _internal_error(self, h: BaseHTTPRequestHandler, e: Exception) -> None:
+        """An exception no route expected: logged, and answered 500
+        ``internal`` instead of a dropped connection. The connection is
+        closed after it, since a partly sent answer may precede it."""
+        logging.getLogger(__name__).exception("%s %s failed", h.command, h.path)
+        status, body, headers = self._encode_api(
+            {"status": "error", "errorType": ERR_INTERNAL, "error": str(e)},
+            self._content_encoding(h),
+        )
+        h.close_connection = True
+        self._respond(h, status, body, extra={**headers, "Connection": "close"})
 
     # -- POST routes --------------------------------------------------
 
@@ -703,10 +735,13 @@ class TimbalaServer:
         body = self._read_body(h)
         if body is None:
             return
-        if url.path == "/write":
-            return self._handle_write(h, body)
-        if url.path == "/read":
-            return self._handle_read(h, body)
+        try:
+            if url.path == "/write":
+                return self._handle_write(h, body)
+            if url.path == "/read":
+                return self._handle_read(h, body)
+        except Exception as e:  # noqa: BLE001 — every request gets an answer
+            return self._internal_error(h, e)
         self._respond(h, 404, b"not found\n", "text/plain; charset=utf-8")
 
     def _handle_write(self, h: BaseHTTPRequestHandler, body: bytes) -> None:
