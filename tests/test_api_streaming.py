@@ -1374,6 +1374,23 @@ class TestQueryGate:
         out = api.query("sum(test_metric1)", 601, timeout="30s")
         assert out["status"] == "success"
 
+    def test_step_varying_topk_evaluates_under_the_timeout(self, api):
+        """A step-varying ``topk`` k is checked inside the collected
+        plan: building the plan runs no Spark job, so the whole
+        evaluation is bounded by the request's timeout (and its cancel
+        and concurrency gate)."""
+        query = "topk(scalar(count(test_metric1)), test_metric1)"
+        sc = api.engine.spark.sparkContext
+        group = "topk-plan-build"
+        sc.setJobGroup(group, "plan build only")
+        try:
+            api.engine.query_range(query, 7, 607, 60)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        out = api.query_range(query, 8, 608, 60, timeout=1e-9)
+        assert out["errorType"] == "timeout"
+
     def test_query_range_guard_order_matches_reference(self, api):
         # api.go:186-216 checks end<start, then step<=0, then the
         # points cap, all BEFORE parsing the query text

@@ -135,9 +135,9 @@ class TestOneFillPerQuantum:
 
     def test_over_budget_window_fills_once(self, spark, compacted):
         """An instant window whose rows exceed the rows budget is served
-        but not stored; the snapshot remembers its ``(query, step)``, so
-        the later instants of the cell take the direct path instead of
-        building and filling the whole window again."""
+        but not stored; the snapshot remembers its ``(query, step,
+        extent)``, so the later instants of the cell take the direct
+        path instead of building and filling the whole window again."""
         api = PromAPI(
             Engine(spark, read_samples_table(spark, compacted)),
             timeout_s=600,
@@ -158,6 +158,37 @@ class TestOneFillPerQuantum:
         assert len(built) == 1, built
         rc = api._range_cache
         assert rc._used <= rc.budget
+
+    def test_over_budget_marker_keeps_smaller_windows_cached(
+        self, spark, compacted
+    ):
+        """The marker of an over-budget window covers windows of its
+        extent only: after the 301-point instant window of a query is
+        found too big, a 61-point range window of the same query and
+        step still fits the budget, is filled once and served from the
+        cache."""
+        api = PromAPI(
+            Engine(spark, read_samples_table(spark, compacted)),
+            timeout_s=600,
+            range_cache_rows=100,
+        )
+        direct = PromAPI(api.engine, timeout_s=600, range_cache_rows=0)
+        t0 = (T0 + 3_600_000) // 1000
+        ranges = [(t0 + k, t0 + k + 10) for k in range(3)]  # one 60 s cell
+        want = [direct.query_range(QUERY, a, b, 1) for a, b in ranges]
+        built = []
+        query_range = api.engine.query_range
+
+        def counting(*args, **kwargs):
+            built.append(args)
+            return query_range(*args, **kwargs)
+
+        api.engine.query_range = counting
+        for k in range(2):
+            assert api.query(QUERY, t0 + k) == direct.query(QUERY, t0 + k)
+        assert len(built) == 1, built
+        assert [api.query_range(QUERY, a, b, 1) for a, b in ranges] == want
+        assert len(built) == 2, built
 
 
 class TestCompactedDictionaryRead:

@@ -891,6 +891,41 @@ class TestEveryRequestAnswered:
         status, payload = _get(server, "/api/v1/query?query=1%2B1&time=1")
         assert status == 200 and payload["data"]["result"][1] == "2"
 
+    @pytest.mark.parametrize("error", [RuntimeError, BrokenPipeError])
+    def test_error_after_the_answer_only_closes(
+        self, server, monkeypatch, caplog, error
+    ):
+        """An exception raised once an answer has started going out
+        adds no second status line: the connection is just closed, and
+        a client that went away (``ConnectionError``) logs nothing."""
+        import socket
+
+        import timbala_spark.server as server_mod
+
+        respond_api = server_mod.TimbalaServer._respond_api
+
+        def answer_then_raise(self, h, payload):
+            respond_api(self, h, payload)
+            raise error("after the answer")
+
+        monkeypatch.setattr(
+            server_mod.TimbalaServer, "_respond_api", answer_then_raise
+        )
+        with socket.create_connection(
+            ("127.0.0.1", server.port), timeout=60
+        ) as s:
+            s.sendall(
+                b"GET /api/v1/query?query=1%2B1&time=1 HTTP/1.1\r\n"
+                b"Host: x\r\n\r\n"
+            )
+            got = b""
+            while chunk := s.recv(65536):  # the server closes the socket
+                got += chunk
+        assert got.startswith(b"HTTP/1.1 200 ")
+        assert got.count(b"HTTP/1.1 ") == 1
+        logged = [r for r in caplog.records if r.name == server_mod.__name__]
+        assert bool(logged) == (error is RuntimeError)
+
 
 class TestParseDuration:
     def test_single_group_durations(self):

@@ -350,19 +350,13 @@ class PromAPI:
         is per-step independent). A timeout raises
         :class:`QueryTimeout`. Returns None to take the exact direct
         path: cache off, a step under 1 ms, a widened grid past the
-        points cap, a ``(query, step)`` whose window was once too big
-        for the rows budget, or any evaluation error (errors must
-        surface with the semantics of the REQUESTED window — and since
-        the widened grid is a superset, an error at a requested point
-        always re-raises there)."""
+        points cap, a ``(query, step)`` whose window of this extent was
+        once too big for the rows budget, or any evaluation error
+        (errors must surface with the semantics of the REQUESTED window
+        — and since the widened grid is a superset, an error at a
+        requested point always re-raises there)."""
         cache = self._range_cache
         if cache is None or step_ms <= 0:
-            return None
-        # a window over the budget is never stored: its (query, step)
-        # keeps a marker (one overhead charge) instead, so the next
-        # request does not fill the whole window again
-        too_big = (query, step_ms)
-        if cache.get(too_big) is not None:
             return None
         quantum = (
             frontend.instant_quantum_ms(self.engine.lookback_ms)
@@ -371,6 +365,12 @@ class PromAPI:
         )
         a, b = frontend.quantize_range(start_ms, end_ms, step_ms, quantum)
         if (b - a) // step_ms > self.engine.max_points:
+            return None
+        # a window over the budget is never stored: its (query, step,
+        # extent) keeps a marker (one overhead charge) instead, so the
+        # next request for a window that size does not fill it again
+        too_big = (query, step_ms, b - a)
+        if cache.get(too_big) is not None:
             return None
 
         def fill() -> frontend.WindowRows:

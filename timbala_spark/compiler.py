@@ -1459,10 +1459,13 @@ class Compiler:
                 # step-varying parameter: evalInt runs at every step
                 # BEFORE the vector is examined (engine.go:1254-1258),
                 # so a bad k errors even for steps whose input vector is
-                # empty — hence the check is materialized eagerly: once
-                # adaptive execution sees an empty input vector it drops
-                # the join, and a lazy check on its broadcast side with
-                # it.
+                # empty — hence the checked k frame is the PRESERVED
+                # side of an outer join: adaptive execution drops an
+                # inner join whose input vector turns out empty, and a
+                # check on its other side with it. The check stays lazy,
+                # so it runs in the collected plan (under the request's
+                # timeout and cancel). A step with no input rows keeps
+                # one row of NULL labels, whose NULL k keeps nothing.
                 kraw = F.col("v")
                 bad = (
                     F.isnan(kraw)
@@ -1479,9 +1482,9 @@ class Compiler:
                 kdf = self.ctx.scalar_df(pv).select(
                     "step_t",
                     _raise_if(bad, kraw, msg).cast("long").alias("_k"),
-                ).localCheckpoint()
-                df = df.join(F.broadcast(kdf), "step_t", "inner")
-                k_col = F.col("_k")
+                )
+                df = df.join(kdf, "step_t", "right")
+                k_col = F.when(F.col("labels").isNotNull(), F.col("_k"))
             out = (
                 df.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= k_col)

@@ -29,7 +29,7 @@ import os
 import re
 import threading
 import zlib
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from types import MappingProxyType
 from urllib.parse import parse_qs, unquote, urlparse
@@ -248,16 +248,16 @@ class TimbalaServer:
                 pass
 
             def do_GET(self) -> None:
-                outer._route_get(self)
+                outer._serve(self, outer._route_get)
 
             def do_POST(self) -> None:
-                outer._route_post(self)
+                outer._serve(self, outer._route_post)
 
             def do_OPTIONS(self) -> None:
-                outer._route_options(self)
+                outer._serve(self, outer._route_options)
 
             def do_DELETE(self) -> None:
-                outer._route_delete(self)
+                outer._serve(self, outer._route_delete)
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self._httpd.daemon_threads = True
@@ -533,6 +533,7 @@ class TimbalaServer:
         ctype: str = "application/json",
         extra: dict[str, str] | None = None,
     ) -> None:
+        h.answer_started = True  # no 500 may follow (``_serve``)
         h.send_response(status)
         h.send_header("Content-Type", ctype)
         h.send_header("Content-Length", str(len(body)))
@@ -645,6 +646,40 @@ class TimbalaServer:
             },
         )
 
+    def _serve(
+        self,
+        h: BaseHTTPRequestHandler,
+        route: Callable[[BaseHTTPRequestHandler], None],
+    ) -> None:
+        """Run one request's route. An exception the route did not
+        expect is logged and answered 500 ``internal`` instead of a
+        dropped connection, but only while no byte of an answer has
+        been sent: after that a second answer would follow a partial
+        one, so the connection is just closed (without a log line when
+        the client went away)."""
+        h.answer_started = False
+        try:
+            route(h)
+        except Exception as e:  # noqa: BLE001 — every request gets an answer
+            h.close_connection = True
+            if h.answer_started and isinstance(e, ConnectionError):
+                return
+            logging.getLogger(__name__).exception(
+                "%s %s failed", h.command, h.path
+            )
+            if h.answer_started:
+                return
+            status, body, headers = self._encode_api(
+                {"status": "error", "errorType": ERR_INTERNAL, "error": str(e)},
+                self._content_encoding(h),
+            )
+            try:
+                self._respond(
+                    h, status, body, extra={**headers, "Connection": "close"}
+                )
+            except OSError:  # the client is gone too
+                pass
+
     # -- GET routes ---------------------------------------------------
 
     def _route_get(self, h: BaseHTTPRequestHandler) -> None:
@@ -712,21 +747,7 @@ class TimbalaServer:
             return self._respond_api(
                 h, {"status": "error", "errorType": ERR_BAD_DATA, "error": str(e)}
             )
-        except Exception as e:  # noqa: BLE001 — every request gets an answer
-            return self._internal_error(h, e)
         self._respond(h, 404, b"not found\n", "text/plain; charset=utf-8")
-
-    def _internal_error(self, h: BaseHTTPRequestHandler, e: Exception) -> None:
-        """An exception no route expected: logged, and answered 500
-        ``internal`` instead of a dropped connection. The connection is
-        closed after it, since a partly sent answer may precede it."""
-        logging.getLogger(__name__).exception("%s %s failed", h.command, h.path)
-        status, body, headers = self._encode_api(
-            {"status": "error", "errorType": ERR_INTERNAL, "error": str(e)},
-            self._content_encoding(h),
-        )
-        h.close_connection = True
-        self._respond(h, status, body, extra={**headers, "Connection": "close"})
 
     # -- POST routes --------------------------------------------------
 
@@ -735,13 +756,10 @@ class TimbalaServer:
         body = self._read_body(h)
         if body is None:
             return
-        try:
-            if url.path == "/write":
-                return self._handle_write(h, body)
-            if url.path == "/read":
-                return self._handle_read(h, body)
-        except Exception as e:  # noqa: BLE001 — every request gets an answer
-            return self._internal_error(h, e)
+        if url.path == "/write":
+            return self._handle_write(h, body)
+        if url.path == "/read":
+            return self._handle_read(h, body)
         self._respond(h, 404, b"not found\n", "text/plain; charset=utf-8")
 
     def _handle_write(self, h: BaseHTTPRequestHandler, body: bytes) -> None:
